@@ -34,11 +34,6 @@ def is_value(c: Column) -> Column:
     return c.isNotNull() & ~F.isnan(c) & (F.abs(c) != F.lit(_INF))
 
 
-def nonvalue_sql(col_sql: str) -> str:
-    """DuckDB-side mirror for oracles: the SAME class as a SQL predicate."""
-    return f"({col_sql} IS NULL OR NOT isfinite(CAST({col_sql} AS DOUBLE)))"
-
-
 def clamp_weight_expr(w: Column) -> Column:
     """The eval/weight clamp rule in ONE place: NULL/NaN/±Inf AND
     negative weights -> 1.0 (ConfusionMatrix.java:361-370's

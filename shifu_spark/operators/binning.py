@@ -2,9 +2,8 @@
 
 Reference algorithms (SURVEY §2.5):
   * EqualPopulation — SPDT streaming histogram (EqualPopulationBinning.java,
-    693 LoC, ≤10k centroids)           -> Spark: exact `percentile` at test
-    scale / `percentile_approx` (KLL) at 100 TB — same approximation
-    guarantee class, bounded memory.
+    693 LoC, ≤10k centroids)           -> Spark: exact `percentile`, every
+    column in one aggregate.
   * MunroPat — multi-pass quantiles (MunroPatBinning.java)  -> same.
   * EqualInterval — (max-min)/k edges (EqualIntervalBinning.java:30).
   * Native — exact sort + equal-count cut (NativeBinning.java:27)
@@ -12,8 +11,9 @@ Reference algorithms (SURVEY §2.5):
   * Categorical — frequency-ordered categories (CategoricalBinning.java:33).
   * BinningMethod variants (ModelStatsConf.java:34-36): EqualPositive
     (default!) / EqualNegative / EqualTotal / WeightEqual* — which
-    population the equal-frequency quantiles run over -> filter-then-
-    quantile; weighted variants via a weighted-quantile Aggregator.
+    population the equal-frequency quantiles run over -> a population
+    predicate inside the aggregate; any other method (WeightEqual*
+    included) takes every row.
 
 Boundary semantics: ``bin_boundary[0]`` is conceptually -inf; bin i covers
 [b_i, b_{i+1}); lookup is binary-search with ``low==0 ? 0 : low-1``
@@ -21,8 +21,6 @@ Boundary semantics: ``bin_boundary[0]`` is conceptually -inf; bin i covers
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -44,138 +42,72 @@ def equal_interval_boundaries(df: DataFrame, col: str, num_bins: int) -> list[fl
 
 def equal_population_boundaries(
     df: DataFrame,
-    col: str,
+    cols: list[str],
     num_bins: int,
     method: str = "EqualTotal",
     tag_col: str | None = None,
     pos_tags: list[str] | None = None,
     neg_tags: list[str] | None = None,
-    exact: bool = True,
-) -> list[float]:
-    """Equal-frequency left edges over the method-selected population.
+) -> dict[str, list[float]]:
+    """Equal-frequency left edges per column, over the method-selected
+    population, in ONE aggregate whatever the number of columns.
 
     EqualPositive (reference default) quantiles over positive rows only;
     EqualNegative over negatives; EqualTotal over all valid rows
     (ModelStatsConf.java:34-36, udf/stats/NumericalVarStats.java:55-130).
-    ``exact=False`` uses percentile_approx (KLL, 10k accuracy — the scale
-    path matching the reference's 10k-centroid SPDT bound).
+    Rows outside the population feed ``percentile`` a NULL, which it
+    skips, so each column sees the same multiset as filter-then-aggregate.
+    Values go through ``try_cast`` to double: the raw column may be
+    string-typed (shifu-style raw text input), and an unparseable token
+    is missing, not a value.
     """
-    v = F.col(col).try_cast("double")
-    pop = df.filter(v.isNotNull())
     if method == "EqualPositive":
-        pop = pop.filter(F.col(tag_col).isin(pos_tags or []))
+        in_pop = F.col(tag_col).isin(pos_tags or [])
     elif method == "EqualNegative":
-        pop = pop.filter(F.col(tag_col).isin(neg_tags or []))
-    qs = [i / num_bins for i in range(num_bins)]
-    if exact:
-        # aggregate over the SAME cast the filter used: the raw column
-        # may be string-typed (shifu-style raw text input) — exact
-        # percentile over the uncast column would throw or, with mixed
-        # junk tokens, disagree with the try_cast-filtered population
-        arr = pop.agg(
-            F.expr(
-                f"percentile(try_cast({col} AS DOUBLE), "
-                f"array({','.join(str(q) for q in qs)}))"
-            )
-        ).collect()[0][0]
+        in_pop = F.col(tag_col).isin(neg_tags or [])
     else:
-        arr = pop.agg(F.percentile_approx(v, qs, 10000)).collect()[0][0]
-    if arr is None:
-        return []
-    # de-duplicate equal boundaries (MunroPatBinning.java:60-99 merges dups)
-    out: list[float] = []
-    for b in arr:
-        if b is not None and (not out or b > out[-1]):
-            out.append(b)
+        in_pop = F.lit(True)
+    qs = F.expr(f"array({','.join(str(i / num_bins) for i in range(num_bins))})")
+    row = df.agg(*[
+        F.percentile(F.when(in_pop, F.col(c).try_cast("double")), qs).alias(c) for c in cols
+    ]).collect()[0]
+    out: dict[str, list[float]] = {}
+    for c in cols:
+        # de-duplicate equal boundaries (MunroPatBinning.java:60-99 merges dups)
+        edges: list[float] = []
+        for b in row[c] or []:
+            if b is not None and (not edges or b > edges[-1]):
+                edges.append(b)
+        out[c] = edges
     return out
 
 
-def weighted_equal_population_boundaries(
-    df: DataFrame, col: str, weight_col: str, num_bins: int
-) -> list[float]:
-    """Weighted equal-frequency edges (WeightEqual* methods).
+def categorical_bins(df: DataFrame, cols: list[str], max_cate_size: int = 0) -> dict[str, list]:
+    """Frequency-ordered category list per column (CategoricalBinning.java:33).
 
-    percentile_approx has no weight argument; the reference feeds
-    frequency-expanded values into its histogram. Spark's exact
-    ``percentile(col, q, frequency)`` takes an integer frequency — we
-    scale weights to integer millis (precision contract: weights are
-    honored to 3 decimal places and anything below 0.001 clamps to 1
-    milli-unit; callers needing finer resolution should pre-scale their
-    weight column). At 100 TB scale this becomes a two-pass approximate
-    weighted quantile (bucket by value, sum weights, cumulative scan) —
-    implemented in :func:`weighted_quantile_scalable`; route through it
-    when the input is more than a driver-friendly sample.
+    One melt (``explode`` of (column, value) structs) + one
+    ``groupBy(column, value).count()`` per distinct dtype among ``cols``,
+    so values keep their native type and order (an int categorical sorts
+    numerically). Keeps the ``max_cate_size`` most frequent categories per
+    column (the reference auto-collapses when > maxCateSize; 0 keeps all).
+    Deterministic order: count desc, then category asc.
     """
-    v = F.col(col).try_cast("double")
-    qs = [i / num_bins for i in range(num_bins)]
-    arr = (
-        df.filter(v.isNotNull())
-        .agg(F.expr(f"percentile({col}, array({','.join(str(q) for q in qs)}), greatest(cast({weight_col}*1000 as bigint), 1L))"))
-        .collect()[0][0]
-    )
-    out: list[float] = []
-    for b in arr or []:
-        if b is not None and (not out or b > out[-1]):
-            out.append(b)
+    from pyspark.sql import Window
+
+    dtypes = dict(df.dtypes)
+    out: dict[str, list] = {c: [] for c in cols}
+    for dtype in sorted({dtypes[c] for c in cols}):
+        group = [c for c in cols if dtypes[c] == dtype]
+        melt = df.select(F.explode(F.array(*[
+            F.struct(F.lit(c).alias("column"), F.col(c).alias("value")) for c in group
+        ])).alias("kv")).select("kv.*")
+        counts = melt.filter(F.col("value").isNotNull()).groupBy("column", "value").count()
+        if max_cate_size and max_cate_size > 0:
+            w = Window.partitionBy("column").orderBy(F.desc("count"), F.asc("value"))
+            counts = counts.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= max_cate_size)
+        for r in counts.orderBy("column", F.desc("count"), F.asc("value")).collect():
+            out[r["column"]].append(r["value"])
     return out
-
-
-def weighted_quantile_scalable(df: DataFrame, col: str, weight_col: str, qs: list[float], resolution: int = 10000) -> list[float]:
-    """Scale-path weighted quantiles: value-bucket histogram + cumulative scan.
-
-    One groupBy over ``resolution`` buckets (map-side combined), then a
-    driver-side cumulative walk — O(resolution) memory, any data size.
-    """
-    v = F.col(col).try_cast("double")
-    row = df.agg(F.min(v), F.max(v)).collect()[0]
-    mn, mx = row[0], row[1]
-    if mn is None or mx == mn:
-        return [mn for _ in qs]
-    bucket = F.least(F.floor((v - mn) / (mx - mn) * resolution), F.lit(resolution - 1))
-    hist = (
-        df.filter(v.isNotNull())
-        .groupBy(bucket.alias("b"))
-        .agg(F.sum(F.col(weight_col).cast("double")).alias("w"))
-        .orderBy("b")
-        .collect()
-    )
-    total = sum(r["w"] for r in hist)
-    out = []
-    for q in qs:
-        target = q * total
-        cum = 0.0
-        val = mx
-        for r in hist:
-            cum += r["w"]
-            if cum >= target:
-                val = mn + (r["b"] + 0.5) / resolution * (mx - mn)
-                break
-        out.append(val)
-    return out
-
-
-def categorical_bins(
-    df: DataFrame,
-    col: str,
-    max_cate_size: int = 0,
-    tag_col: str | None = None,
-    pos_tags: list[str] | None = None,
-) -> list[str]:
-    """Frequency-ordered category list (CategoricalBinning.java:33).
-
-    Collapses beyond ``max_cate_size`` most-frequent categories (the
-    reference auto-collapses when > maxCateSize). Deterministic order:
-    count desc, then category asc.
-    """
-    counts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(col)
-        .count()
-        .orderBy(F.desc("count"), F.asc(col))
-    )
-    if max_cate_size and max_cate_size > 0:
-        counts = counts.limit(max_cate_size)
-    return [r[0] for r in counts.collect()]
 
 
 # ntile_boundaries cap: a single-task sort of ~10M doubles is the most a
@@ -193,8 +125,8 @@ def ntile_boundaries(
     through ONE task (unpartitioned window); test-scale / exactness path
     only.  The guard raises above ``max_rows`` (default the module's
     ``NTILE_MAX_ROWS``) instead of funnelling a data-scale sort through a
-    single task — use :func:`equal_population_boundaries`
-    (percentile_approx / KLL) for data-scale corpora.
+    single task — use :func:`equal_population_boundaries` (a distributed
+    aggregate) for data-scale corpora.
     """
     from pyspark.sql import Window
 
@@ -205,8 +137,8 @@ def ntile_boundaries(
         raise ValueError(
             f"exact ntile binning refused: > {max_rows} rows. "
             "This is the single-task global-sort exactness path; use "
-            "equal_population_boundaries (percentile_approx/KLL, "
-            "distributed) for data-scale inputs, or raise max_rows "
+            "equal_population_boundaries (a distributed aggregate) "
+            "for data-scale inputs, or raise max_rows "
             "explicitly."
         )
     v = F.col(col).try_cast("double")
@@ -262,7 +194,7 @@ def bin_index_sql(col: str, boundaries: list[float], missing_index: int | None =
 
     NaN/±Infinity route to the missing slot exactly like the Spark path
     (Normalizer.java:569-573) — DuckDB's NaN-is-greatest comparison would
-    otherwise put NaN in the last real bin (ADVICE r9)."""
+    otherwise put NaN in the last real bin."""
     if missing_index is None:
         missing_index = len(boundaries)
     whens = [
@@ -320,8 +252,7 @@ def small_bin_counts(
     # largest), turning EVERY row's bin index into least(NaN,k-1)=k-1 —
     # the whole binning silently collapses into one bin. ±Inf likewise
     # (one Inf makes the bin width infinite and every finite row lands
-    # in bin 0) — the unified missing class covers all of it (r10
-    # review: this site excluded NaN but kept Inf in value space).
+    # in bin 0) — the unified missing class covers all of it.
     from shifu_spark.functions.nonvalue import is_value
 
     df = df.filter(is_value(v))

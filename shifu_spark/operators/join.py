@@ -8,22 +8,14 @@ raw MapReduce.
 
 Spark: chained ``df.join(..., on=uid, how='inner')``. Catalyst picks
 broadcast vs sort-merge per side size (use ``F.broadcast`` to force when
-a score table is known-small). Dedup-first-per-key is a row_number
-window — kept optional since score files are normally unique per uid.
+a score table is known-small). Score files are unique per uid, so the
+reference's first-tuple-per-bag dedup has no counterpart here.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def dedup_first_per_key(df: DataFrame, key: str, order_cols: list[str] | None = None) -> DataFrame:
-    """Take one row per key (deterministic order — the reference takes the
-    bag's first tuple, which is nondeterministic; we sort for testability)."""
-    order = [F.col(c) for c in (order_cols or df.columns)]
-    w = Window.partitionBy(key).orderBy(*order)
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 def asof_join(

@@ -59,16 +59,6 @@ def zscore_expr(col: Column | str, mean: float, std: float, cutoff: float = 6.0)
     return (clipped - mean) / std
 
 
-def zscore_inline_expr(col: Column | str, mean: Column, std: Column, cutoff: float = 6.0) -> Column:
-    """zscore with mean/std as COLUMNS (from a broadcast 1-row agg) —
-    keeps the whole plan declarative for oracle-deterministic queries."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = c.try_cast("double")
-    lo, hi = mean - cutoff * std, mean + cutoff * std
-    clipped = F.least(F.greatest(_value_or_missing(c, mean), lo), hi)
-    return F.when(F.abs(std) <= MIN_STD, F.lit(0.0)).otherwise((clipped - mean) / std)
-
-
 def woe_expr(col: Column | str, boundaries: list[float], bin_woes: list[float], missing_woe: float | None = None) -> Column:
     """value -> bin -> woe, missing -> LAST bin's woe (Normalizer.java:619-657).
 

@@ -164,15 +164,6 @@ def hash_fold_expr(key_cols: list[str], k: int, salt: str = "fold") -> Column:
     return fold
 
 
-def bagging_subsample(df: DataFrame, bag_index: int, fraction: float, with_replacement: bool, seed: int = 42) -> DataFrame:
-    """Per-bag resample (BaggingSubsampleUDF): seed offset by bag index.
-
-    Physical-layout dependent (Spark's per-partition RNG) — use
-    :func:`poisson_copies_expr` for the reproducible, oracle-checkable
-    form of with-replacement bagging."""
-    return df.sample(withReplacement=with_replacement, fraction=fraction, seed=seed + bag_index)
-
-
 def poisson_pmf_cumsums(lam: float, max_k: int) -> list[float]:
     """CDF cut points of Poisson(lam) at k = 0..max_k-1 (pure driver-side
     math; becomes literal hex thresholds in both engines' plans)."""
@@ -209,8 +200,3 @@ def poisson_copies_expr(
     for c in cums:
         copies = copies + F.when(h >= F.lit(_hex_threshold(c)), 1).otherwise(0)
     return copies
-
-
-def drop_invalid_tags(df: DataFrame, tag_col: str, pos_tags: list[str], neg_tags: list[str]) -> DataFrame:
-    """NormalizeUDF.java:262-278 — rows with tag outside pos∪neg dropped."""
-    return df.filter(F.col(tag_col).isin(list(pos_tags) + list(neg_tags)))

@@ -102,14 +102,13 @@ class NumericColumnStats:
 #: bit-identical across engines — double sums vary in the last ulp with
 #: partition order, which flips rounded 6th decimals at knife edges. The
 #: per-row term is computed in double (identical in Spark/DuckDB), cast to
-#: decimal once, then summed exactly. At extreme scale (where x^4 sums
-#: could exceed DECIMAL(38,10)) flip ``decimal_sums=False`` for the
-#: double-sum fast path — the engine doesn't need cross-engine bit
-#: determinism in production, only the oracle gate does.
+#: decimal once, then summed exactly. The price is range: the x^4 sum
+#: must fit DECIMAL(38,10)'s 28 integer digits, so rescale a column with
+#: large values before taking its stats.
 _DEC = "decimal(38,10)"
 
 
-def _moment_aggs(c: str, exact_percentiles: bool, distinct_exact: bool, decimal_sums: bool = True) -> list:
+def _moment_aggs(c: str) -> list:
     """Wide-agg expressions for one numeric column.
 
     Missing values are excluded from moments, mirroring
@@ -128,9 +127,9 @@ def _moment_aggs(c: str, exact_percentiles: bool, distinct_exact: bool, decimal_
     v = F.when(is_value(raw), raw)
 
     def s(e):
-        return F.sum(e.cast(_DEC)).cast("double") if decimal_sums else F.sum(e)
+        return F.sum(e.cast(_DEC)).cast("double")
 
-    aggs = [
+    return [
         F.count(F.lit(1)).alias(f"{c}__n"),
         F.count(v).alias(f"{c}__valid"),
         s(v).alias(f"{c}__s1"),
@@ -139,39 +138,19 @@ def _moment_aggs(c: str, exact_percentiles: bool, distinct_exact: bool, decimal_
         s(v * v * v * v).alias(f"{c}__s4"),
         F.min(v).alias(f"{c}__min"),
         F.max(v).alias(f"{c}__max"),
-    ]
-    if exact_percentiles:
         # over v, not the raw column: the non-finite→missing mapping must
         # cover percentiles too or the populations diverge
-        aggs.append(
-            F.percentile(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))).alias(f"{c}__pct")
-        )
-    else:
-        # scale path: KLL sketch, bounded memory (reference bounds its SPDT
-        # histogram at 10k centroids — EqualPopulationBinning.java:98-101)
-        aggs.append(F.percentile_approx(v, [0.25, 0.5, 0.75], 10000).alias(f"{c}__pct"))
-    if distinct_exact:
-        aggs.append(F.countDistinct(v).alias(f"{c}__dc"))
-    else:
-        # reference uses HyperLogLogPlus (AutoTypeDistinctCountMapper.java:39)
-        aggs.append(F.approx_count_distinct(v).alias(f"{c}__dc"))
-    return aggs
+        F.percentile(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))).alias(f"{c}__pct"),
+        F.countDistinct(v).alias(f"{c}__dc"),
+    ]
 
 
-def numeric_column_stats(
-    df: DataFrame,
-    columns: list[str],
-    exact_percentiles: bool = True,
-    distinct_exact: bool = True,
-) -> list[NumericColumnStats]:
-    """Compute full numeric stats for ``columns`` in ONE wide aggregate.
-
-    ``exact_percentiles=False`` / ``distinct_exact=False`` switch to the
-    sketch-based scale path (percentile_approx / approx_count_distinct).
-    """
+def numeric_column_stats(df: DataFrame, columns: list[str]) -> list[NumericColumnStats]:
+    """Compute full numeric stats for ``columns`` in ONE wide aggregate:
+    exact percentiles, exact distinct counts, DECIMAL power sums."""
     aggs: list = []
     for c in columns:
-        aggs.extend(_moment_aggs(c, exact_percentiles, distinct_exact))
+        aggs.extend(_moment_aggs(c))
     row = df.agg(*aggs).collect()[0].asDict()
 
     out: list[NumericColumnStats] = []
@@ -216,7 +195,7 @@ def numeric_stats_df(df: DataFrame, columns: list[str], round_to: int | None = 6
     """
     aggs: list = []
     for c in columns:
-        aggs.extend(_moment_aggs(c, exact_percentiles=True, distinct_exact=True))
+        aggs.extend(_moment_aggs(c))
     wide = df.agg(*aggs)
 
     def rnd(e):
@@ -235,9 +214,9 @@ def numeric_stats_df(df: DataFrame, columns: list[str], round_to: int | None = 6
             valid * F.pow(a_var, 2)
         )
         # valid <= 1 -> sample std 0.0 (the reference closed form's n<=1
-        # guard, sample_std_dev above); the bare (valid-1) divisor was an
-        # ANSI DIVIDE_BY_ZERO crash on a single-row population (r10
-        # degenerate-population audit). Oracle mirrors the CASE.
+        # guard, sample_std_dev above); a bare (valid-1) divisor is an
+        # ANSI DIVIDE_BY_ZERO crash on a single-row population. Oracle
+        # mirrors the CASE.
         std = F.when(valid <= 1, F.lit(0.0)).otherwise(
             F.sqrt(F.abs((s2 - s1 * s1 / valid + F.lit(EPS)) / (valid - 1)))
         )
@@ -363,7 +342,7 @@ def _x4(col: str):
     Non-finite values are MISSING (the engine-wide nonvalue class):
     nulled here so percentile/count skip them — a NaN otherwise sorts
     largest into the quantile walk and shifts every interpolated cut,
-    engine-dependently (r10 dirty-corpus audit)."""
+    engine-dependently."""
     from shifu_spark.functions.nonvalue import is_value
 
     c = F.col(col)

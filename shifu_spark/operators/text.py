@@ -1,7 +1,7 @@
 """Text-analysis operators for training-data pipelines.
 
 Language-ID (stopword-hit heuristic), quality scoring (length / punct /
-stopword ratios), token counting (whitespace + BPE-ish regex pieces),
+vocabulary ratios), token counting (whitespace + BPE-ish regex pieces),
 document fingerprinting (content digest + shingle-set digest). All pure
 ``pyspark.sql.functions`` column expressions — JVM-side, codegen'd,
 streaming-compatible; every op has a portable ANSI-SQL mirror for the
@@ -20,8 +20,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "fr": ["le", "la", "et", "les", "des", "un", "une", "est"],
     "de": ["der", "die", "das", "und", "ist", "ein", "nicht", "mit"],
 }
-
-STOPWORDS_EN = ["the", "a", "an", "of", "and", "or", "to", "in", "is", "it"]
 
 
 def token_count_expr(text: Column | str) -> Column:
@@ -48,15 +46,6 @@ def bpe_piece_count_expr(text: Column | str) -> Column:
     return F.size(
         F.regexp_extract_all(F.lower(t), F.lit("[a-z0-9]+|[^a-z0-9 ]"), F.lit(0))
     )
-
-
-def stopword_fraction_expr(text: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Fraction of tokens in the stopword list (exact int ratio)."""
-    sw = stopwords or STOPWORDS_EN
-    t = F.col(text) if isinstance(text, str) else text
-    toks = F.split(t, " ")
-    hits = F.size(F.filter(toks, lambda x: x.isin(sw)))
-    return hits / F.size(toks)
 
 
 def quality_score_expr(text: Column | str, n_chars: Column | str | None = None) -> Column:

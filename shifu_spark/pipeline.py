@@ -4,8 +4,10 @@ Reference lifecycle (SURVEY §3): each CLI step reads/writes
 ModelConfig.json + ColumnConfig.json. Here each step is a function over
 (DataFrame, ModelConfig, list[ColumnConfig]) — same artifacts, Spark
 plans instead of Pig jobs. The reference's two stats jobs (Pig binning +
-UpdateBinningInfo MR re-read, SURVEY §3.1) collapse into a cached
-single-pass DataFrame flow.
+UpdateBinningInfo MR re-read, SURVEY §3.1) collapse into four aggregates
+over one cached frame — moments, boundaries, categories, bin counts —
+each covering every column at once, so the number of Spark jobs the
+stats step runs does not depend on how many columns the input has.
 """
 
 from __future__ import annotations
@@ -76,8 +78,16 @@ def init_columns(df: DataFrame, mc: ModelConfig) -> list[ColumnConfig]:
 def run_stats(df: DataFrame, mc: ModelConfig, ccs: list[ColumnConfig]) -> list[ColumnConfig]:
     """`shifu stats`: fill moments, bins, bin counts, KS/IV/WOE, pos rates.
 
-    One cached pass: wide moment agg + per-population quantile agg + one
-    melt/groupBy for bin counts (see operators/stats.py scale notes).
+    Four aggregates over the cached tagged rows, each spanning every
+    candidate column, so the job count does not grow with width:
+
+      1. moments — one wide agg over the numeric columns;
+      2. boundaries — one exact-percentile agg over the numeric columns,
+         restricted to the BinningMethod's population;
+      3. categories — one melt + groupBy over the categorical columns
+         (once per distinct column dtype);
+      4. bin counts — one melt + groupBy over the numeric columns, then
+         KS/IV/WOE on the driver (see operators/stats.py scale notes).
     """
     from shifu_spark.operators.binning import (
         categorical_bins,
@@ -110,23 +120,17 @@ def run_stats(df: DataFrame, mc: ModelConfig, ccs: list[ColumnConfig]) -> list[C
         cs.missing_percentage = s.missing_percentage
 
     # numeric boundaries per the configured BinningMethod
-    boundaries: dict[str, list[float]] = {}
-    for c in num_cols:
-        b = equal_population_boundaries(
-            work, c, st.max_num_bin, method=st.binning_method,
-            tag_col=tag, pos_tags=pos, neg_tags=neg, exact=True,
-        )
-        boundaries[c] = b
-        cc = by_name[c]
-        cc.column_binning.bin_boundary = b
-        cc.column_binning.length = len(b) + 1  # + missing slot
+    boundaries = equal_population_boundaries(
+        work, num_cols, st.max_num_bin, method=st.binning_method,
+        tag_col=tag, pos_tags=pos, neg_tags=neg,
+    )
+    for c, b in boundaries.items():
+        by_name[c].column_binning.bin_boundary = b
+        by_name[c].column_binning.length = len(b) + 1  # + missing slot
 
-    # categorical bins
-    for c in cat_cols:
-        cats = categorical_bins(work, c, st.cate_max_num_bin)
-        cc = by_name[c]
-        cc.column_binning.bin_category = cats
-        cc.column_binning.length = len(cats) + 1
+    for c, cats in categorical_bins(work, cat_cols, st.cate_max_num_bin).items():
+        by_name[c].column_binning.bin_category = cats
+        by_name[c].column_binning.length = len(cats) + 1
 
     # bin counts + KS/IV/WOE in one melt pass (numeric cols)
     if num_cols and tag:

@@ -15,6 +15,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def default_driver_memory() -> str:
+    """Half of physical memory, capped at 32g: the heap must fit the
+    machine (a 32g heap on a 15 GB box gets the JVM OOM-killed), and
+    48g heaps showed 5-15 s stop-the-world G1 full GCs."""
+    mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(32 * 1024, mb // 2)}m"
+
+
 def get_spark(app_name: str = "shifu_spark", shuffle_partitions: str | int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
@@ -32,10 +40,7 @@ def get_spark(app_name: str = "shifu_spark", shuffle_partitions: str | int | Non
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # 32g: roomy for sf0.1 caches yet small enough that G1 full GCs
-        # stay short — 48g heaps showed 5-15s stop-the-world stalls in
-        # bench runs with heavy broadcast churn
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()))
         # shuffle/cache codec knob for scale A/Bs (guide §2.3): lz4 is
         # Spark's default; zstd trades CPU for shuffle bytes.  Kept
         # env-parameterised with the default UNCHANGED so the driver's

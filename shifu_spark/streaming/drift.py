@@ -83,26 +83,6 @@ def psi_of_batch(bin_counts: DataFrame, expected_frac: dict[int, float]) -> Data
     )
 
 
-def start_drift_monitor(
-    stream: DataFrame,
-    value_col: str,
-    boundaries: list[float],
-    expected_frac: dict[int, float],
-    queryName: str = "psi_drift",
-    ts_col: str = "ts",
-    window: str = "1 hour",
-):
-    """Wire the streaming PSI query to an in-memory sink (tests/demo) —
-    production would swap the sink for kafka/delta via writeStream options."""
-    counts = streaming_bin_counts(stream, value_col, boundaries, ts_col, window)
-    return (
-        counts.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-    )
-
-
 def start_drift_monitor_foreach_batch(
     stream: DataFrame,
     value_col: str,

@@ -110,3 +110,77 @@ def test_score_ensemble_stats(spark, sf_dir, lineitem_mc):
     assert r["span_min"] >= 0
     assert r["mean_err"] < 1e-9
     assert r["med_err"] < 1e-9  # median of 2 == mean of 2
+
+
+@pytest.mark.parametrize("method", ["EqualPositive", "EqualNegative", "EqualTotal"])
+def test_stats_bins_match_duckdb(spark, sf_dir, method):
+    """Boundaries are the de-duplicated quantile_cont over the
+    BinningMethod's population; categories are the top-3 by (count desc,
+    value asc) over the tagged rows, in each column's native type."""
+    import duckdb
+
+    from shifu_spark.pipeline import init_columns, run_stats
+
+    mc = ModelConfig()
+    mc.dataset = DataSetConf(
+        target_column="l_returnflag",
+        pos_tags=["R"],
+        neg_tags=["A", "N"],
+        meta_columns=["l_orderkey", "l_partkey", "l_suppkey", "l_shipdate", "l_linestatus"],
+        categorical_columns=["l_linenumber"],
+    )
+    mc.stats.max_num_bin = 8
+    mc.stats.binning_method = method
+    mc.stats.cate_max_num_bin = 3
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    ccs = [c for c in run_stats(li, mc, init_columns(li, mc)) if c.is_candidate]
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW li AS SELECT * FROM read_parquet('{sf_dir}/lineitem.parquet')")
+    tagged = "l_returnflag IN ('R', 'A', 'N')"
+    pop = {"EqualPositive": "l_returnflag IN ('R')", "EqualNegative": "l_returnflag IN ('A', 'N')"}.get(method, tagged)
+    qs = [i / 8 for i in range(8)]
+    num = [c for c in ccs if c.is_numerical]
+    cat = [c for c in ccs if c.is_categorical]
+    assert num and "l_linenumber" in {c.column_name for c in cat}
+    for cc in num:
+        c = cc.column_name
+        (arr,) = con.sql(f"SELECT quantile_cont(TRY_CAST({c} AS DOUBLE), {qs}) FROM li WHERE {pop}").fetchone()
+        edges: list[float] = []
+        for b in arr:
+            if not edges or b > edges[-1]:
+                edges.append(b)
+        assert cc.column_binning.bin_boundary == edges, c
+    for cc in cat:
+        c = cc.column_name
+        top = con.sql(
+            f"SELECT {c} FROM li WHERE {tagged} AND {c} IS NOT NULL "
+            f"GROUP BY {c} ORDER BY count(*) DESC, {c} ASC LIMIT 3"
+        ).fetchall()
+        assert cc.column_binning.bin_category == [r[0] for r in top], c
+    linenumber = next(c for c in cat if c.column_name == "l_linenumber").column_binning.bin_category
+    assert linenumber and all(type(v) is int for v in linenumber)
+
+
+def test_stats_job_count_flat_in_width(spark, sf_dir, lineitem_mc):
+    """run_stats launches as many Spark jobs on a frame as on the same
+    frame with every candidate column duplicated under a new name."""
+    from shifu_spark.pipeline import init_columns, run_stats
+
+    sc = spark.sparkContext
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    cand = [c.column_name for c in init_columns(li, lineitem_mc) if c.is_candidate]
+    wide = li.select("*", *[F.col(c).alias(f"{c}_dup") for c in cand])
+
+    def jobs(df, group):
+        ccs = init_columns(df, lineitem_mc)
+        sc.setJobGroup(group, group)
+        try:
+            run_stats(df, lineitem_mc, ccs)
+        finally:
+            sc.setJobGroup("test_pipeline:idle", "idle")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    narrow_jobs = jobs(li, "test_pipeline:run_stats:narrow")
+    assert narrow_jobs > 0
+    assert jobs(wide, "test_pipeline:run_stats:wide") == narrow_jobs

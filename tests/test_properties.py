@@ -1227,7 +1227,7 @@ FROM {frame} GROUP BY 2
         dfs, con = degen
         for frame in ("empty", "allnull"):
             assert equal_interval_boundaries(dfs[frame], "x", 4) == []
-            assert equal_population_boundaries(dfs[frame], "x", 4) == []
+            assert equal_population_boundaries(dfs[frame], ["x"], 4) == {"x": []}
             assert ntile_boundaries(dfs[frame], "x", 4) == []
         actual = spark.createDataFrame([], "column_name string, unit string, bin int, cnt long")
         expected = spark.createDataFrame([], "column_name string, bin int, expected_frac double")
