@@ -361,7 +361,7 @@ def main() -> None:
     else:
         headline = HEADLINE
     from shifu_spark.queries import QUERIES
-    from shifu_spark.session import get_spark
+    from shifu_spark.session import get_spark, local_cpus
 
     spark = get_spark("shifu_spark_bench")
     # Warm JVM classloading / codegen / Arrow paths by running the suite
@@ -585,7 +585,7 @@ def main() -> None:
     )
     record = dict(
         full_payload,
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        cpus=int(local_cpus()),
         n_queries=len(timings),
     )
     try:

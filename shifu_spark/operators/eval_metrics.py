@@ -115,9 +115,19 @@ def _finalize_one_row(df: DataFrame) -> DataFrame:
     Lets the caller release upstream ``persist()`` caches in a
     try/finally without handing the consumer a plan that would lazily
     re-execute against the already-unpersisted (and thus recomputed)
-    lineage. Only ever called on single-row / #buckets-row results."""
-    rows = df.collect()
-    return df.sparkSession.createDataFrame(rows, df.schema)
+    lineage. Only ever called on single-row / #buckets-row results.
+
+    The rows go back through an Arrow table, not ``createDataFrame(rows)``:
+    that path ships them through a Python RDD and starts Python workers
+    for every metric. Arrow keeps the schema (nullability included) and
+    the values exact; a pandas frame would turn a nullable long into
+    float64."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = [r.asDict(recursive=True) for r in df.collect()]
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(df.schema))
+    return df.sparkSession.createDataFrame(table)
 
 
 def prefix_sums(

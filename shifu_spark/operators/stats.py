@@ -23,10 +23,17 @@ Spark-first design — ONE data pass, ZERO row shuffle for the moment pass:
   * KS/IV/WOE finalization is O(cols × bins) array math on the driver —
     exactly ColumnStatsCalculator semantics (EPS=1e-10).
 
-At 100 TB: the moment pass is a full scan with partial agg (optimal); the
-bin-count pass scans once more with only (cols × bins × tasks) rows
-shuffled. Both are column-pruned parquet scans when ``columns`` is a
-subset.
+At 100 TB: the moment pass is a full scan with partial agg and no
+``Expand`` (exact distincts come from ``collect_set``, not
+``countDistinct``, so no row is copied per column); the bin-count pass
+scans once more with only (cols × bins × tasks) rows shuffled. Both are
+column-pruned parquet scans when ``columns`` is a subset. Memory: the
+exact ``percentile`` keeps a value→count map and ``collect_set`` a hash
+set, each of a column's distinct values per task, and both merge in the
+single-partition final aggregate — O(distinct values per column) on one
+task, the same class as the reference's in-memory distinct sets
+(AbstractVarStats.java). A column with billions of distinct values
+needs ``percentile_approx``/``approx_count_distinct`` instead.
 """
 
 from __future__ import annotations
@@ -34,7 +41,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 EPS = 1e-10  # reference ColumnStatsCalculator.java EPS
@@ -108,8 +115,8 @@ class NumericColumnStats:
 _DEC = "decimal(38,10)"
 
 
-def _moment_aggs(c: str) -> list:
-    """Wide-agg expressions for one numeric column.
+def _clean(c: str) -> Column:
+    """``c`` as a finite double, else NULL — every moment reads this.
 
     Missing values are excluded from moments, mirroring
     UpdateBinningInfoReducer.java:351 ("To make it be consistent with
@@ -117,45 +124,54 @@ def _moment_aggs(c: str) -> list:
     (Normalizer.java:566-571): a non-finite double nulls out of the
     DECIMAL power-sum cast, so counting it in ``valid`` while every sum
     drops it would skew mean/std/skew/kurt silently (and NaN would
-    poison max under Spark's NaN-is-largest ordering). Nulling v up
+    poison max under Spark's NaN-is-largest ordering). Nulling it up
     front keeps count/sums/min/max/percentiles/distinct consistent on
     one population.
     """
     from shifu_spark.functions.nonvalue import is_value
 
     raw = F.col(c).try_cast("double")
-    v = F.when(is_value(raw), raw)
+    return F.when(is_value(raw), raw)
+
+
+def _moments(df: DataFrame, columns: list[str]) -> DataFrame:
+    """The one-row wide aggregate behind both stats entry points.
+
+    Each column is cleaned ONCE in a projection, then aggregated. The
+    exact distinct count is the size of a ``collect_set`` (NULLs
+    skipped, -0.0 folded into 0.0, as ``count(DISTINCT)`` does), which
+    keeps the plan one global aggregate: ``countDistinct`` would make
+    Catalyst ``Expand`` every row once per column."""
+    vals = df.select(*[_clean(c).alias(f"{c}__v") for c in columns])
 
     def s(e):
         return F.sum(e.cast(_DEC)).cast("double")
 
-    return [
-        F.count(F.lit(1)).alias(f"{c}__n"),
-        F.count(v).alias(f"{c}__valid"),
-        s(v).alias(f"{c}__s1"),
-        s(v * v).alias(f"{c}__s2"),
-        s(v * v * v).alias(f"{c}__s3"),
-        s(v * v * v * v).alias(f"{c}__s4"),
-        F.min(v).alias(f"{c}__min"),
-        F.max(v).alias(f"{c}__max"),
-        # over v, not the raw column: the non-finite→missing mapping must
-        # cover percentiles too or the populations diverge
-        F.percentile(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))).alias(f"{c}__pct"),
-        F.countDistinct(v).alias(f"{c}__dc"),
-    ]
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for c in columns:
+        v = F.col(f"{c}__v")
+        aggs += [
+            F.count(v).alias(f"{c}__valid"),
+            s(v).alias(f"{c}__s1"),
+            s(v * v).alias(f"{c}__s2"),
+            s(v * v * v).alias(f"{c}__s3"),
+            s(v * v * v * v).alias(f"{c}__s4"),
+            F.min(v).alias(f"{c}__min"),
+            F.max(v).alias(f"{c}__max"),
+            F.percentile(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))).alias(f"{c}__pct"),
+            F.size(F.collect_set(v)).alias(f"{c}__dc"),
+        ]
+    return vals.agg(*aggs)
 
 
 def numeric_column_stats(df: DataFrame, columns: list[str]) -> list[NumericColumnStats]:
     """Compute full numeric stats for ``columns`` in ONE wide aggregate:
     exact percentiles, exact distinct counts, DECIMAL power sums."""
-    aggs: list = []
-    for c in columns:
-        aggs.extend(_moment_aggs(c))
-    row = df.agg(*aggs).collect()[0].asDict()
+    row = _moments(df, columns).collect()[0].asDict()
 
     out: list[NumericColumnStats] = []
     for c in columns:
-        n = row[f"{c}__n"]
+        n = row["__n"]
         valid = row[f"{c}__valid"]
         s1 = row[f"{c}__s1"] or 0.0
         s2 = row[f"{c}__s2"] or 0.0
@@ -193,17 +209,14 @@ def numeric_stats_df(df: DataFrame, columns: list[str], round_to: int | None = 6
     result row into per-column rows via a union of literal-free selects —
     still one Spark job, one data pass.
     """
-    aggs: list = []
-    for c in columns:
-        aggs.extend(_moment_aggs(c))
-    wide = df.agg(*aggs)
+    wide = _moments(df, columns)
 
     def rnd(e):
         return F.round(e, round_to) if round_to is not None else e
 
     selects = []
     for c in columns:
-        n, valid = F.col(f"{c}__n"), F.col(f"{c}__valid")
+        n, valid = F.col("__n"), F.col(f"{c}__valid")
         s1, s2 = F.col(f"{c}__s1"), F.col(f"{c}__s2")
         s3, s4 = F.col(f"{c}__s3"), F.col(f"{c}__s4")
         mean = s1 / valid

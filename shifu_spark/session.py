@@ -12,7 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def local_cpus() -> str:
+    """``SPARK_GRAFT_CPUS`` when set, else the cores this process may
+    run on — the local master width and default shuffle partitions."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def default_driver_memory() -> str:
@@ -27,10 +31,10 @@ def get_spark(app_name: str = "shifu_spark", shuffle_partitions: str | int | Non
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
     On a real cluster ``master`` comes from spark-submit; locally we run
-    ``local[$SPARK_GRAFT_CPUS]``.
+    ``local[N]`` with N from :func:`local_cpus`.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sp = str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS)
+    cpus = local_cpus()
+    sp = str(shuffle_partitions or cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", sp)

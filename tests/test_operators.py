@@ -841,6 +841,62 @@ class TestScalableConfusion:
         assert rows_a == rows_b
 
 
+class TestFinalizeOneRow:
+    def test_arrow_rewrap_is_exact_and_jobless(self, spark):
+        """The rewrapped frame keeps the schema (nullability included)
+        and every value bit-exact, and collecting it runs no Spark job."""
+        from shifu_spark.operators.eval_metrics import _finalize_one_row
+
+        src = spark.sql(
+            "SELECT CAST(9007199254740993 AS BIGINT) AS big, CAST(NULL AS BIGINT) AS nul, "
+            "CAST(NULL AS DOUBLE) AS nd, CAST('12345.0123456789' AS DECIMAL(38,10)) AS dec, "
+            "0.1D AS f, array(1, NULL, 3) AS arr, named_struct('x', 1, 'y', 'ü') AS st"
+        )
+        expected = src.collect()
+        out = _finalize_one_row(src)
+        assert out.schema == src.schema
+        sc = spark.sparkContext
+        group = "test_operators:finalize_one_row"
+        sc.setJobGroup(group, group)
+        try:
+            got = out.collect()
+        finally:
+            sc.setJobGroup("test_operators:idle", "idle")
+        assert got == expected
+        assert got[0]["big"] == 2**53 + 1
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        empty = _finalize_one_row(src.limit(0))
+        assert empty.schema == src.schema and empty.collect() == []
+
+
+def test_local_cpus_env_then_affinity(monkeypatch):
+    from shifu_spark.session import local_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == "3"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert local_cpus() == str(len(os.sched_getaffinity(0)))
+
+
+def test_profile_top_ranks_newest_core_count(tmp_path, monkeypatch):
+    """--top ranks by per-query min over the sidecar records taken at
+    the newest record's core count; records without queries are skipped."""
+    import json
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+    from profile_queries import top_queries
+
+    recs = [
+        {"cpus": 4, "queries": {"a": 1.0, "b": 9.0, "c": 2.0}},
+        {"cpus": 32, "queries": {"a": 50.0, "b": 0.1, "c": 0.1}},
+        {"cpus": 4, "queries": {"a": 3.0, "b": 0.5, "c": 2.5}},
+        {"cpus": 4},
+    ]
+    side = tmp_path / "BENCH_local_last.json"
+    side.write_text("\n".join(json.dumps(r) for r in recs) + "\n")
+    assert top_queries(2, str(side)) == ["c", "a"]
+
+
 class TestNormalizeVariants:
     """normalize_df dispatch for the index/asis NormTypes
     (ModelNormalizeConf.java:33-57, Normalizer.java:287-377)."""

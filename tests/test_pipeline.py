@@ -184,3 +184,29 @@ def test_stats_job_count_flat_in_width(spark, sf_dir, lineitem_mc):
     narrow_jobs = jobs(li, "test_pipeline:run_stats:narrow")
     assert narrow_jobs > 0
     assert jobs(wide, "test_pipeline:run_stats:wide") == narrow_jobs
+
+
+def test_numeric_stats_match_duckdb_on_dirty_text(spark):
+    """numeric_column_stats over a string column holding missing tokens,
+    non-finite and unparseable values, signed zeros and duplicate
+    spellings: counts, distincts, extremes and quartiles equal DuckDB
+    over TRY_CAST(x AS DOUBLE) restricted to finite values."""
+    import duckdb
+
+    from shifu_spark.operators.stats import numeric_column_stats
+
+    vals = ["?", "", "NaN", "Infinity", "-Infinity", "abc", "-0", "0", "0.0", "1e3", "1000",
+            "1000", "7.5", "7.5", "-2", None, "0", "3"]
+    df = spark.createDataFrame([(v,) for v in vals], "x string")
+    (got,) = numeric_column_stats(df, ["x"])
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (x VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in vals])
+    want = con.sql(
+        "SELECT count(*), count(DISTINCT v), min(v), max(v), "
+        "quantile_cont(v, 0.25), quantile_cont(v, 0.5), quantile_cont(v, 0.75) "
+        "FROM (SELECT TRY_CAST(x AS DOUBLE) AS v FROM t) WHERE isfinite(v)"
+    ).fetchone()
+    assert got.total_count == len(vals)
+    assert (got.valid_count, got.distinct_count, got.min, got.max, got.p25, got.median, got.p75) == want

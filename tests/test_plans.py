@@ -47,6 +47,22 @@ class TestAggShapes:
         # no join, no per-column pass
         assert count_shuffles(df) <= len(df.columns)  # union of k 1-row selects
         assert_columns_pruned(df, table_width=11)
+        # exact distincts come from collect_set: no Expand (one row copy
+        # per distinct group) and no shuffle keyed by the distinct values
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Expand" not in plan
+        assert "hashpartitioning" not in plan
+
+    def test_moments_wide_agg_has_no_expand(self, spark):
+        # the pipeline's form: every column in ONE aggregate, where a
+        # per-column countDistinct would Expand each row once per column
+        from shifu_spark.operators.stats import _moments
+
+        li = spark.read.parquet(f"{SF}/lineitem.parquet")
+        plan = _moments(li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
+        text = plan._jdf.queryExecution().executedPlan().toString()
+        assert "Expand" not in text
+        assert "hashpartitioning" not in text
 
     def test_normalize_is_broadcast_only(self, spark):
         from shifu_spark.queries import QUERIES

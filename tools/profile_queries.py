@@ -10,8 +10,10 @@ that dominates small-scale wall time — guide §1).  Optionally dump
 Usage:
   python tools/profile_queries.py [--plans-dir plans/r12 --suffix _before]
       [--sf-dir /root/testdata/sf0.1] name [name ...]
-  python tools/profile_queries.py --top N       # N most expensive from
-                                                # BENCH_r12_local.json mins
+  python tools/profile_queries.py --top N       # N most expensive by their
+                                                # min over the newest
+                                                # BENCH_local_last.json
+                                                # records at one core count
 """
 
 from __future__ import annotations
@@ -22,7 +24,22 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+
+def top_queries(n: int, sidecar: str = os.path.join(ROOT, "BENCH_local_last.json")) -> list[str]:
+    """The ``n`` slowest queries by their min wall time over bench.py's
+    rolling sidecar (its last 8 records, newest last), counting only the
+    records taken at the newest record's core count."""
+    with open(sidecar) as fh:
+        records = [d for d in map(json.loads, fh) if d.get("queries")]
+    mins: dict[str, float] = {}
+    for d in records:
+        if d.get("cpus") == records[-1].get("cpus"):
+            for k, v in d["queries"].items():
+                mins[k] = min(mins.get(k, float("inf")), v)
+    return sorted(mins, key=lambda k: -mins[k])[:n]
 
 
 def main() -> None:
@@ -42,20 +59,7 @@ def main() -> None:
 
     names = list(args.names)
     if args.top:
-        import statistics
-
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        passes = []
-        with open(os.path.join(repo, "BENCH_r12_local.json")) as fh:
-            for line in fh:
-                d = json.loads(line)
-                if d.get("queries"):
-                    passes.append(d["queries"])
-        mins: dict[str, float] = {}
-        for p in passes:
-            for k, v in p.items():
-                mins[k] = min(mins.get(k, float("inf")), v)
-        names += [k for k, _ in sorted(mins.items(), key=lambda x: -x[1])[: args.top]]
+        names += top_queries(args.top)
 
     spark = get_spark("shifu_profile")
     sc = spark.sparkContext
