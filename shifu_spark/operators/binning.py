@@ -5,7 +5,8 @@ Reference algorithms (SURVEY §2.5):
     693 LoC, ≤10k centroids)           -> Spark: exact `percentile`, every
     column in one aggregate.
   * MunroPat — multi-pass quantiles (MunroPatBinning.java)  -> same.
-  * EqualInterval — (max-min)/k edges (EqualIntervalBinning.java:30).
+  * EqualInterval — (max-min)/k edges (EqualIntervalBinning.java:30)
+    -> :func:`equal_interval_bin_expr` over one min/max aggregate.
   * Native — exact sort + equal-count cut (NativeBinning.java:27)
     -> `ntile(k)` window.
   * Categorical — frequency-ordered categories (CategoricalBinning.java:33).
@@ -29,16 +30,6 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 # boundary builders
 # ---------------------------------------------------------------------------
-
-def equal_interval_boundaries(df: DataFrame, col: str, num_bins: int) -> list[float]:
-    """(max-min)/k fixed-width left edges — EqualIntervalBinning.java:30."""
-    row = df.agg(F.min(F.col(col).try_cast("double")), F.max(F.col(col).try_cast("double"))).collect()[0]
-    mn, mx = row[0], row[1]
-    if mn is None or mx is None or not num_bins:
-        return []
-    width = (mx - mn) / num_bins
-    return [mn + i * width for i in range(num_bins)]
-
 
 def equal_population_boundaries(
     df: DataFrame,
@@ -162,6 +153,31 @@ def ntile_boundaries(
 # lookup expressions (BinUtils semantics)
 # ---------------------------------------------------------------------------
 
+def equal_interval_bin_expr(x: Column, mn: Column, mx: Column, k: int) -> Column:
+    """Equal-interval bin of ``x`` over k fixed-width bins (max-min)/k
+    wide (EqualIntervalBinning.java:30) — the one place the rule is written.
+
+    ``mn``/``mx`` must be the min/max over values only (``is_value``): a
+    single NaN or ±Inf in them poisons every edge. A non-value ``x``
+    gives NULL; callers map it to their missing outcome. ``x = mx`` lands
+    in the last bin, k-1.
+
+    A constant column (mx = mn) is one bin, 0. ANSI mode raises
+    DIVIDE_BY_ZERO on a double division too, so the width goes through
+    ``try_divide``, and its NULL is coalesced to 0 INSIDE the ``least``:
+    ``least`` ignores NULLs, so outside it the bin would be k-1.
+    """
+    from shifu_spark.functions.nonvalue import is_value
+
+    return F.when(
+        is_value(x),
+        F.least(
+            F.coalesce(F.floor(F.try_divide(x - mn, (mx - mn) / k)), F.lit(0).cast("long")),
+            F.lit(k - 1).cast("long"),
+        ),
+    )
+
+
 def bin_index_expr(col: Column | str, boundaries: list[float], missing_index: int | None = None) -> Column:
     """JVM-side bin lookup: index = #{edges <= x} - 1, clamped at 0.
 
@@ -243,34 +259,18 @@ def small_bin_counts(
     Returns (small_bin, lo, cnt, pos, neg) ordered by small_bin.
     """
     v = F.col(col).cast("double")
-    # valid values only: F.least SKIPS nulls, so a NULL/unparseable value
-    # would otherwise land in the TOP small bin (floor(NULL)=NULL,
-    # least(NULL, k-1)=k-1) and corrupt the equal-population merge —
-    # missing values are counted separately by the stats path, never
-    # inside value bins (UpdateBinningInfoReducer missing-slot handling).
-    # NaN must go too: ONE NaN makes max(v)=NaN (Spark sorts NaN
-    # largest), turning EVERY row's bin index into least(NaN,k-1)=k-1 —
-    # the whole binning silently collapses into one bin. ±Inf likewise
-    # (one Inf makes the bin width infinite and every finite row lands
-    # in bin 0) — the unified missing class covers all of it.
+    # values only: missing values are counted by the stats path, never
+    # inside value bins (UpdateBinningInfoReducer missing-slot handling)
     from shifu_spark.functions.nonvalue import is_value
 
     df = df.filter(is_value(v))
     mm = df.agg(F.min(v).alias("mn"), F.max(v).alias("mx"))
     k = num_small_bins
-    # try_divide + coalesce 0: an all-equal column has width 0 and the
-    # bare division is an ANSI DIVIDE_BY_ZERO job kill (double included);
-    # the degenerate distribution is one small bin at lo = mn
-    b = F.least(  # coalesce INSIDE least: least IGNORES NULLs (width 0 => bin 0)
-        F.coalesce(
-            F.floor(F.try_divide(v - F.col("mn"), (F.col("mx") - F.col("mn")) / k)),
-            F.lit(0).cast("long"),
-        ),
-        F.lit(k - 1).cast("long"),
-    )
+    mn, mx = F.col("mn"), F.col("mx")
+    b = equal_interval_bin_expr(v, mn, mx, k)
     binned = df.crossJoin(F.broadcast(mm)).select(
         b.alias("small_bin"),
-        (F.col("mn") + b * ((F.col("mx") - F.col("mn")) / k)).alias("lo"),
+        (mn + b * ((mx - mn) / k)).alias("lo"),
         (pos_expr if pos_expr is not None else F.lit(False)).cast("int").alias("y"),
     )
     return (

@@ -9,12 +9,14 @@ Reference: pig/PSI.pig + udf/PopulationCounterUDF.java:61-107 (per
   * term skipped when expected_i == 0 OR actual ratio <= 0 (i.e. empty
     actual bin contributes nothing — no epsilon here, unlike WOE);
   * column PSI = Σ over ALL units of the unit's Σ terms (the UDF
-    accumulates across the unit bag).
+    accumulates across the unit bag; the psi_by_column query).
 
-Spark shape: one groupBy(unit, column, bin).count() (map-side combined,
-shuffle bounded by units × cols × bins), join against the expected
-distribution (broadcast — it is cols × bins rows), window-sum per unit,
-then two nested aggs. Scales to any row count.
+Spark shape: the caller's groupBy(unit, column, bin).count() (map-side
+combined, shuffle bounded by units × cols × bins), a window-sum per
+unit, a join against the expected distribution (broadcast — it is
+cols × bins rows), then one aggregate per unit. Scales to any row
+count. Batch (the psi_events_by_day query) and streaming
+(streaming.drift.psi_of_batch) both finalize here.
 """
 
 from __future__ import annotations
@@ -28,22 +30,22 @@ def psi_df(
     expected: DataFrame,
     round_to: int | None = 6,
 ) -> DataFrame:
-    """PSI per (column_name, unit) plus the reference's summed column PSI.
+    """PSI per (column_name, unit) — the one place the PSI term is written.
 
     ``actual_counts``: (column_name, unit, bin, cnt)
     ``expected``:      (column_name, bin, expected_frac)
-    Returns (column_name, unit, psi) — use :func:`psi_column_df` for the
-    per-column sum.
+    Returns (column_name, unit, psi), one row per unit of
+    ``actual_counts``; a bin absent from ``expected`` counts in its unit's
+    total and contributes no term, like an expected_frac of 0.
     """
     w_unit = Window.partitionBy("column_name", "unit")
-    # try_divide: a unit whose bins are ALL cnt=0 (zero-filled bins from
-    # an outer-join counts producer) has unit_total 0 — a bare / is an
-    # ANSI DIVIDE_BY_ZERO job-killer; NULL fracs then contribute nothing
-    # via the >0 term guard, matching the oracle (r10 review pass 2)
+    # try_divide: a unit whose bins are all cnt=0 (zero-filled bins from
+    # an outer-join counts producer) has unit_total 0, and ANSI mode
+    # raises on a bare division; its NULL fracs contribute no term
     a = actual_counts.withColumn("unit_total", F.sum("cnt").over(w_unit)).withColumn(
         "actual_frac", F.try_divide(F.col("cnt"), F.col("unit_total"))
     )
-    j = a.join(F.broadcast(expected), ["column_name", "bin"], "inner")
+    j = a.join(F.broadcast(expected), ["column_name", "bin"], "left")
     term = F.when(
         (F.col("expected_frac") > 0) & (F.col("actual_frac") > 0),
         (F.col("actual_frac") - F.col("expected_frac")) * F.log(F.col("actual_frac") / F.col("expected_frac")),
@@ -55,10 +57,3 @@ def psi_df(
     )
     psi = F.round(F.col("psi_raw"), round_to) if round_to is not None else F.col("psi_raw")
     return per_unit.select("column_name", "unit", psi.alias("psi")).orderBy("column_name", "unit")
-
-
-def psi_column_df(per_unit_psi: DataFrame, round_to: int | None = 6) -> DataFrame:
-    """Reference column-level PSI = Σ over units (PSICalculatorUDF)."""
-    agg = per_unit_psi.groupBy("column_name").agg(F.sum("psi").alias("s"))
-    psi = F.round(F.col("s"), round_to) if round_to is not None else F.col("s")
-    return agg.select("column_name", psi.alias("psi")).orderBy("column_name")

@@ -195,24 +195,31 @@ _KSIV_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 _KSIV_BINS = 10
 
 
+def _value_min_max(df: DataFrame, c: str) -> DataFrame:
+    """One-row (mn, mx) of column ``c`` over values only (is_value) — the
+    edges binning.equal_interval_bin_expr needs."""
+    from shifu_spark.functions.nonvalue import is_value
+
+    x = F.col(c)
+    return df.agg(F.min(F.when(is_value(x), x)).alias("mn"), F.max(F.when(is_value(x), x)).alias("mx"))
+
+
 @query("ksiv_equal_interval", None)
 def ksiv_equal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equal-interval binning + KS/IV/WOE, tag = (l_returnflag = 'R').
 
-    Bin assignment is computed inline — least(floor((x-min)/width), k-1) —
-    with min/max from a broadcast single-row agg, so Spark and the oracle
-    evaluate bit-identical double arithmetic.
+    Bins from binning.equal_interval_bin_expr with min/max from a
+    broadcast single-row agg, so Spark and the oracle evaluate
+    bit-identical double arithmetic.
     """
-    from shifu_spark.operators.ksiv import ksiv_df
-
     from shifu_spark.functions.nonvalue import is_value
+    from shifu_spark.operators.binning import equal_interval_bin_expr
+    from shifu_spark.operators.ksiv import ksiv_df
 
     li = _t(spark, sf_dir, "lineitem")
     k = _KSIV_BINS
 
-    # non-finite values are MISSING: excluded from the min/max edges (a
-    # single NaN/Inf otherwise poisons every bin boundary) and routed to
-    # the NULL bin, which both engines keep as its own group
+    # non-values go to the NULL bin, which both engines keep as its own group
     mm = li.agg(
         *[F.min(F.when(is_value(F.col(c)), F.col(c))).alias(f"{c}__mn") for c in _KSIV_COLS],
         *[F.max(F.when(is_value(F.col(c)), F.col(c))).alias(f"{c}__mx") for c in _KSIV_COLS],
@@ -220,17 +227,7 @@ def ksiv_equal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_mm = li.crossJoin(F.broadcast(mm))
     structs = []
     for c in _KSIV_COLS:
-        mn, mx = F.col(f"{c}__mn"), F.col(f"{c}__mx")
-        # try_divide + coalesce 0: an all-equal column (width 0) is a
-        # single bin, not an ANSI DIVIDE_BY_ZERO job kill
-        # coalesce INSIDE least (least ignores NULLs): width 0 => bin 0
-        b = F.when(
-            is_value(F.col(c)),
-            F.least(
-                F.coalesce(F.floor(F.try_divide(F.col(c) - mn, (mx - mn) / k)), F.lit(0).cast("long")),
-                F.lit(k - 1).cast("long"),
-            ),
-        )
+        b = equal_interval_bin_expr(F.col(c), F.col(f"{c}__mn"), F.col(f"{c}__mx"), k)
         structs.append(F.struct(F.lit(c).alias("column_name"), b.alias("bin")))
     is_pos = (F.col("l_returnflag") == "R").alias("_pos")
     melted = with_mm.select(F.explode(F.array(*structs)).alias("cb"), is_pos)
@@ -331,16 +328,17 @@ ORACLES["zscore_normalize"] = _zscore_oracle()
 def woe_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WOE transform (Normalizer.java:619-657): value -> bin -> bin woe.
 
-    Equal-interval bins inline; per-bin WOE from the count table (the
-    ColumnStatsCalculator long[] formula with EPS=1e-10); woe mapped back
-    by a broadcast join on bin id. Integer bin counts -> deterministic.
+    Equal-interval bins, non-values in the missing slot k; per-bin WOE
+    from the count table (the ColumnStatsCalculator long[] formula with
+    EPS=1e-10); woe mapped back by a broadcast join on bin id. Integer
+    bin counts -> deterministic.
     """
+    from shifu_spark.operators.binning import equal_interval_bin_expr
+
     li = _t(spark, sf_dir, "lineitem")
     k = 10
-    c = "l_quantity"
-    mm = li.agg(F.min(c).alias("mn"), F.max(c).alias("mx"))
-    binned = li.crossJoin(F.broadcast(mm)).withColumn(
-        "bin", F.least(F.floor((F.col(c) - F.col("mn")) / ((F.col("mx") - F.col("mn")) / k)), F.lit(k - 1))
+    binned = li.crossJoin(F.broadcast(_value_min_max(li, "l_quantity"))).withColumn(
+        "bin", F.coalesce(equal_interval_bin_expr(F.col("l_quantity"), F.col("mn"), F.col("mx"), k), F.lit(k))
     )
     is_pos = F.col("l_returnflag") == "R"
     counts = binned.groupBy("bin").agg(
@@ -365,10 +363,13 @@ def woe_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["woe_normalize"] = """
-WITH mm AS (SELECT min(l_quantity) AS mn, max(l_quantity) AS mx FROM lineitem),
+WITH mm AS (SELECT min(l_quantity) AS mn, max(l_quantity) AS mx
+            FROM lineitem WHERE l_quantity IS NOT NULL AND isfinite(l_quantity)),
 binned AS (
   SELECT l_orderkey, l_linenumber,
-         least(floor((l_quantity - mn) / ((mx - mn) / 10)), 9) AS bin,
+         CASE WHEN l_quantity IS NULL OR NOT isfinite(l_quantity) THEN 10
+              WHEN mx = mn THEN 0
+              ELSE least(floor((l_quantity - mn) / ((mx - mn) / 10)), 9) END AS bin,
          l_returnflag
   FROM lineitem CROSS JOIN mm
 ),
@@ -395,52 +396,31 @@ FROM binned b JOIN woes w USING (bin)
 def psi_events_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI of `value` per day vs the overall distribution.
 
-    Equal-interval 10 bins inline; expected = whole-table bin fractions;
-    term skipped when expected==0 or actual==0 (PSICalculatorUDF.java:88-99).
-    NULL/NaN/±Inf values are MISSING (the engine-wide nonvalue class):
-    they enter neither the min/max bounds nor either distribution —
-    a NaN max otherwise poisons every bin edge.
+    Equal-interval 10 bins; expected = whole-table bin fractions; the
+    PSI itself is psi.psi_df. NULL/NaN/±Inf values are MISSING (the
+    engine-wide nonvalue class): they enter neither the min/max bounds
+    nor either distribution.
     """
-    from shifu_spark.functions.nonvalue import is_value
-
-    ev = _events(spark, sf_dir).where(is_value(F.col("value")))
-    k = 10
-    mm = ev.agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
-    # try_divide + coalesce 0: an all-equal value column has width 0 and
-    # a bare division is a job-killing ANSI DIVIDE_BY_ZERO (double too);
-    # the degenerate single-bin distribution is bin 0 on both engines
-    binned = ev.crossJoin(F.broadcast(mm)).select(
-        F.date_format("ts", "yyyy-MM-dd").alias("unit"),
-        # coalesce INSIDE least: Spark's least IGNORES NULLs, so
-        # least(floor(NULL), k-1) is k-1, not NULL — the degenerate
-        # single bin must be 0, not the top bin
-        F.least(
-            F.coalesce(
-                F.floor(F.try_divide(F.col("value") - F.col("mn"), (F.col("mx") - F.col("mn")) / k)),
-                F.lit(0).cast("long"),
-            ),
-            F.lit(k - 1).cast("long"),
-        ).alias("bin"),
-    )
-    actual = binned.groupBy("unit", "bin").agg(F.count(F.lit(1)).alias("cnt"))
-    expected = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("ecnt"))
     from pyspark.sql import Window
 
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    expected = expected.withColumn("expected_frac", F.col("ecnt") / F.sum("ecnt").over(wall)).select("bin", "expected_frac")
-    w_unit = Window.partitionBy("unit")
-    a = actual.withColumn("actual_frac", F.col("cnt") / F.sum("cnt").over(w_unit))
-    j = a.join(F.broadcast(expected), "bin")
-    term = F.when(
-        (F.col("expected_frac") > 0) & (F.col("actual_frac") > 0),
-        (F.col("actual_frac") - F.col("expected_frac")) * F.log(F.col("actual_frac") / F.col("expected_frac")),
-    ).otherwise(F.lit(0.0))
-    return (
-        j.withColumn("term", term)
-        .groupBy("unit")
-        .agg(F.round(F.sum("term"), 6).alias("psi"))
-        .orderBy("unit")
+    from shifu_spark.functions.nonvalue import is_value
+    from shifu_spark.operators.binning import equal_interval_bin_expr
+    from shifu_spark.operators.psi import psi_df
+
+    ev = _events(spark, sf_dir).where(is_value(F.col("value")))
+    mm = ev.agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
+    binned = ev.crossJoin(F.broadcast(mm)).select(
+        F.lit("value").alias("column_name"),
+        F.date_format("ts", "yyyy-MM-dd").alias("unit"),
+        equal_interval_bin_expr(F.col("value"), F.col("mn"), F.col("mx"), 10).alias("bin"),
     )
+    actual = binned.groupBy("column_name", "unit", "bin").agg(F.count(F.lit(1)).alias("cnt"))
+    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    expected = (
+        binned.groupBy("column_name", "bin").agg(F.count(F.lit(1)).alias("ecnt"))
+        .select("column_name", "bin", (F.col("ecnt") / F.sum("ecnt").over(wall)).alias("expected_frac"))
+    )
+    return psi_df(actual, expected).select("unit", "psi")
 
 
 ORACLES["psi_events_by_day"] = """
@@ -1314,30 +1294,13 @@ ORACLES["ksiv_equal_negative"] = _ksiv_quantile_oracle("l_returnflag <> 'R'")
 def ksiv_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted KS/IV/WOE (binWeightNeg/binWeightPos, the double[] overload
     of ColumnStatsCalculator) — weight = l_quantity, decimal-summed."""
+    from shifu_spark.operators.binning import equal_interval_bin_expr
     from shifu_spark.operators.ksiv import ksiv_df
 
     li = _t(spark, sf_dir, "lineitem")
-    k = 10
-    from shifu_spark.functions.nonvalue import is_value
-
-    ep = F.col("l_extendedprice")
     # non-finite score values: out of the edges, into the NULL bin
-    mm = li.agg(
-        F.min(F.when(is_value(ep), ep)).alias("mn"),
-        F.max(F.when(is_value(ep), ep)).alias("mx"),
-    )
-    binned = li.crossJoin(F.broadcast(mm)).withColumn(
-        "bin",
-        F.when(
-            is_value(ep),
-            F.least(  # width 0 => bin 0; coalesce INSIDE (least ignores NULLs)
-                F.coalesce(
-                    F.floor(F.try_divide(ep - F.col("mn"), (F.col("mx") - F.col("mn")) / k)),
-                    F.lit(0).cast("long"),
-                ),
-                F.lit(k - 1).cast("long"),
-            ),
-        ),
+    binned = li.crossJoin(F.broadcast(_value_min_max(li, "l_extendedprice"))).withColumn(
+        "bin", equal_interval_bin_expr(F.col("l_extendedprice"), F.col("mn"), F.col("mx"), 10)
     )
     w = F.col("l_quantity").cast("decimal(38,10)")
     counts = (
@@ -1530,27 +1493,11 @@ def bin_avg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Posttrain bin average score (PostTrain.pig:44-45,
     CalculateBinAvgScoreUDF): score = l_extendedprice, bins = equal-
     interval on l_quantity."""
-    from shifu_spark.functions.nonvalue import is_value
+    from shifu_spark.operators.binning import equal_interval_bin_expr
 
     li = _t(spark, sf_dir, "lineitem")
-    k = 10
-    q = F.col("l_quantity")
-    mm = li.agg(
-        F.min(F.when(is_value(q), q)).alias("mn"),
-        F.max(F.when(is_value(q), q)).alias("mx"),
-    )
-    binned = li.crossJoin(F.broadcast(mm)).withColumn(
-        "bin",
-        F.when(
-            is_value(q),
-            F.least(  # width 0 => bin 0; coalesce INSIDE (least ignores NULLs)
-                F.coalesce(
-                    F.floor(F.try_divide(q - F.col("mn"), (F.col("mx") - F.col("mn")) / k)),
-                    F.lit(0).cast("long"),
-                ),
-                F.lit(k - 1).cast("long"),
-            ),
-        ),
+    binned = li.crossJoin(F.broadcast(_value_min_max(li, "l_quantity"))).withColumn(
+        "bin", equal_interval_bin_expr(F.col("l_quantity"), F.col("mn"), F.col("mx"), 10)
     )
     return (
         binned.groupBy("bin")
@@ -3466,24 +3413,26 @@ FROM p ORDER BY l_orderkey, l_linenumber
 @query("onehot_normalize", None)
 def onehot_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONEHOT transform (Normalizer.java:379-424): numeric -> bin one-hot
-    (+ missing slot). Equal-interval 5 bins on l_quantity; one scan +
-    one select, bin edges from a broadcast 1-row min/max agg."""
+    (+ missing slot k for non-values). Equal-interval 5 bins on
+    l_quantity; one scan + one select, bin edges from a broadcast 1-row
+    min/max agg."""
+    from shifu_spark.operators.binning import equal_interval_bin_expr
+
     li = _t(spark, sf_dir, "lineitem")
     k = 5
-    mm = li.agg(F.min("l_quantity").alias("mn"), F.max("l_quantity").alias("mx"))
-    x = F.col("l_quantity")
-    b = F.when(
-        x.isNull(), F.lit(k)  # missing slot
-    ).otherwise(F.least(F.floor((x - F.col("mn")) / ((F.col("mx") - F.col("mn")) / k)), F.lit(k - 1)))
+    b = F.coalesce(equal_interval_bin_expr(F.col("l_quantity"), F.col("mn"), F.col("mx"), k), F.lit(k))
     cols = [F.when(b == i, 1.0).otherwise(0.0).alias(f"q_bin{i}") for i in range(k + 1)]
+    mm = _value_min_max(li, "l_quantity")
     return li.crossJoin(F.broadcast(mm)).select("l_orderkey", "l_linenumber", *cols)
 
 
 ORACLES["onehot_normalize"] = """
-WITH mm AS (SELECT min(l_quantity) AS mn, max(l_quantity) AS mx FROM lineitem),
+WITH mm AS (SELECT min(l_quantity) AS mn, max(l_quantity) AS mx
+            FROM lineitem WHERE l_quantity IS NOT NULL AND isfinite(l_quantity)),
 binned AS (
   SELECT l_orderkey, l_linenumber,
-         CASE WHEN l_quantity IS NULL THEN 5
+         CASE WHEN l_quantity IS NULL OR NOT isfinite(l_quantity) THEN 5
+              WHEN mx = mn THEN 0
               ELSE least(floor((l_quantity - mn) / ((mx - mn) / 5)), 4) END AS bin
   FROM lineitem CROSS JOIN mm
 )
@@ -3501,28 +3450,31 @@ FROM binned
 @query("discrete_zscore_normalize", None)
 def discrete_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISCRETE_ZSCORE (Normalizer.java:468-500): snap to the bin lower
-    boundary, then zscore with clip at mean±6σ. Boundaries + moments from
-    ONE broadcast agg row — still a single data pass."""
+    boundary, then zscore with clip at mean±6σ; a non-value is missing
+    (z = 0). Boundaries + moments over values from ONE broadcast agg
+    row — still a single data pass."""
+    from shifu_spark.functions.nonvalue import is_value
+    from shifu_spark.operators.binning import equal_interval_bin_expr
+
     li = _t(spark, sf_dir, "lineitem")
     k = 5
     v = F.col("l_quantity").cast("double")
+    val = F.when(is_value(v), v)
     mm = li.agg(
-        F.min(v).alias("mn"),
-        F.max(v).alias("mx"),
-        F.count(v).alias("n"),
-        F.sum(v.cast("decimal(38,10)")).cast("double").alias("s1"),
-        F.sum((v * v).cast("decimal(38,10)")).cast("double").alias("s2"),
+        F.min(val).alias("mn"),
+        F.max(val).alias("mx"),
+        F.count(val).alias("n"),
+        F.sum(val.cast("decimal(38,10)")).cast("double").alias("s1"),
+        F.sum((val * val).cast("decimal(38,10)")).cast("double").alias("s2"),
     )
-    n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
+    n, s1, s2, mn, mx = F.col("n"), F.col("s1"), F.col("s2"), F.col("mn"), F.col("mx")
     mean = s1 / n
     std = F.sqrt(F.abs((s2 - s1 * s1 / n + F.lit(1e-10)) / (n - 1)))
-    width = (F.col("mx") - F.col("mn")) / k
-    bin_ = F.least(F.floor((v - F.col("mn")) / width), F.lit(k - 1))
-    snapped = F.col("mn") + bin_ * width
+    bin_ = equal_interval_bin_expr(v, mn, mx, k)
+    snapped = mn + bin_ * ((mx - mn) / k)
     clipped = F.least(F.greatest(snapped, mean - 6 * std), mean + 6 * std)
-    return li.crossJoin(F.broadcast(mm)).select(
-        "l_orderkey", "l_linenumber", F.round((clipped - mean) / std, 6).alias("dz_l_quantity")
-    )
+    z = F.when(bin_.isNull(), F.lit(0.0)).otherwise(F.round((clipped - mean) / std, 6))
+    return li.crossJoin(F.broadcast(mm)).select("l_orderkey", "l_linenumber", z.alias("dz_l_quantity"))
 
 
 ORACLES["discrete_zscore_normalize"] = """
@@ -3531,14 +3483,22 @@ WITH mm AS (
          count(l_quantity)::DOUBLE AS n,
          sum(cast(l_quantity AS DECIMAL(38,10)))::DOUBLE AS s1,
          sum(cast(l_quantity*l_quantity AS DECIMAL(38,10)))::DOUBLE AS s2
-  FROM lineitem
+  FROM lineitem WHERE l_quantity IS NOT NULL AND isfinite(l_quantity)
+),
+binned AS (
+  SELECT l_orderkey, l_linenumber, l_quantity, mm.*,
+         CASE WHEN l_quantity IS NULL OR NOT isfinite(l_quantity) THEN NULL
+              WHEN mx = mn THEN 0
+              ELSE least(floor((l_quantity - mn) / ((mx - mn) / 5)), 4) END AS bin
+  FROM lineitem CROSS JOIN mm
 )
 SELECT l_orderkey, l_linenumber,
-       round((least(greatest(mn + least(floor((l_quantity - mn) / ((mx - mn) / 5)), 4) * ((mx - mn) / 5),
-                             (s1/n) - 6*sqrt(abs((s2 - s1*s1/n + 1e-10)/(n-1)))),
-                    (s1/n) + 6*sqrt(abs((s2 - s1*s1/n + 1e-10)/(n-1))))
-              - (s1/n)) / sqrt(abs((s2 - s1*s1/n + 1e-10)/(n-1))), 6) AS dz_l_quantity
-FROM lineitem CROSS JOIN mm
+       CASE WHEN bin IS NULL THEN 0.0
+            ELSE round((least(greatest(mn + bin * ((mx - mn) / 5),
+                                       (s1/n) - 6*sqrt(abs((s2 - s1*s1/n + 1e-10)/(n-1)))),
+                              (s1/n) + 6*sqrt(abs((s2 - s1*s1/n + 1e-10)/(n-1))))
+                        - (s1/n)) / sqrt(abs((s2 - s1*s1/n + 1e-10)/(n-1))), 6) END AS dz_l_quantity
+FROM binned
 """
 
 
@@ -3547,15 +3507,16 @@ def woe_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WOE_ZSCORE (Normalizer.java:664-672): woe value, then z-score with
     the woe-population mean/std from bin counts
     (calculateWoeMeanAndStdDev:728-756). Bin-count arithmetic keeps the
-    woe table tiny (k rows) and the constants exact."""
+    woe table tiny (k + 1 rows) and the constants exact. Non-values
+    take the missing slot k."""
     from pyspark.sql import Window
+
+    from shifu_spark.operators.binning import equal_interval_bin_expr
 
     li = _t(spark, sf_dir, "lineitem")
     k = 10
-    c = "l_quantity"
-    mm = li.agg(F.min(c).alias("mn"), F.max(c).alias("mx"))
-    binned = li.crossJoin(F.broadcast(mm)).withColumn(
-        "bin", F.least(F.floor((F.col(c) - F.col("mn")) / ((F.col("mx") - F.col("mn")) / k)), F.lit(k - 1))
+    binned = li.crossJoin(F.broadcast(_value_min_max(li, "l_quantity"))).withColumn(
+        "bin", F.coalesce(equal_interval_bin_expr(F.col("l_quantity"), F.col("mn"), F.col("mx"), k), F.lit(k))
     )
     is_pos = F.col("l_returnflag") == "R"
     counts = binned.groupBy("bin").agg(
@@ -3588,10 +3549,14 @@ def woe_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["woe_zscore_normalize"] = """
-WITH mm AS (SELECT min(l_quantity) AS mn, max(l_quantity) AS mx FROM lineitem),
+WITH mm AS (SELECT min(l_quantity) AS mn, max(l_quantity) AS mx
+            FROM lineitem WHERE l_quantity IS NOT NULL AND isfinite(l_quantity)),
 binned AS (
   SELECT l_orderkey, l_linenumber,
-         least(floor((l_quantity - mn) / ((mx - mn) / 10)), 9) AS bin, l_returnflag
+         CASE WHEN l_quantity IS NULL OR NOT isfinite(l_quantity) THEN 10
+              WHEN mx = mn THEN 0
+              ELSE least(floor((l_quantity - mn) / ((mx - mn) / 10)), 9) END AS bin,
+         l_returnflag
   FROM lineitem CROSS JOIN mm
 ),
 counts AS (

@@ -2,7 +2,7 @@
 
 The reference is batch-only (SURVEY §2.9); its one temporal feature is
 PSI per time-unit (PSI.pig). This module is the *new surface* the north
-star asks for: the same PSI semantics as operators/psi.py, run as a
+star asks for: the same PSI code as batch (operators/psi.py), run as a
 Structured Streaming query with event-time windows + watermark, expected
 distribution broadcast from the training catalog.
 
@@ -56,31 +56,19 @@ def streaming_bin_counts(
 
 
 def psi_of_batch(bin_counts: DataFrame, expected_frac: dict[int, float]) -> DataFrame:
-    """PSI per window vs the expected (training) distribution.
-
-    Same skip semantics as batch PSI (expected==0 or actual==0 -> term
-    skipped, PSICalculatorUDF.java:88-99). Called from foreachBatch, or
-    on the complete-mode memory sink in tests.
+    """PSI per window vs the expected (training) distribution: the
+    (window_start, bin, cnt) counts go through batch ``psi.psi_df`` with
+    each window as a unit. Called from foreachBatch, or on the
+    complete-mode memory sink in tests.
     """
-    items = sorted(expected_frac.items())
-    emap = F.create_map(*[F.lit(v) for kv in items for v in kv])
-    from pyspark.sql import Window
+    from shifu_spark.operators.psi import psi_df
 
-    w_unit = Window.partitionBy("window_start")
-    t = (
-        bin_counts.withColumn("actual_frac", F.col("cnt") / F.sum("cnt").over(w_unit))
-        .withColumn("expected_frac", F.coalesce(emap.getItem(F.col("bin")), F.lit(0.0)))
+    emap = F.create_map(*[F.lit(v) for kv in sorted(expected_frac.items()) for v in kv])
+    expected = bin_counts.sparkSession.range(1).select(
+        F.lit("").alias("column_name"), F.explode(emap).alias("bin", "expected_frac")
     )
-    term = F.when(
-        (F.col("expected_frac") > 0) & (F.col("actual_frac") > 0),
-        (F.col("actual_frac") - F.col("expected_frac")) * F.log(F.col("actual_frac") / F.col("expected_frac")),
-    ).otherwise(F.lit(0.0))
-    return (
-        t.withColumn("term", term)
-        .groupBy("window_start")
-        .agg(F.round(F.sum("term"), 6).alias("psi"))
-        .orderBy("window_start")
-    )
+    actual = bin_counts.select(F.lit("").alias("column_name"), F.col("window_start").alias("unit"), "bin", "cnt")
+    return psi_df(actual, expected).select(F.col("unit").alias("window_start"), "psi")
 
 
 def start_drift_monitor_foreach_batch(

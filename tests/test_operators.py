@@ -739,6 +739,67 @@ class TestDynamicHybridBinning:
         top = [r for r in rows if r["small_bin"] == 3]
         assert sum(r["cnt"] for r in top) == 1  # just the max value 3.0
 
+    def test_equal_interval_bin_matches_duckdb_case(self, spark):
+        """equal_interval_bin_expr against DuckDB's CASE spelling of the
+        same rule: non-values -> NULL, width 0 -> bin 0, x = mx -> k-1,
+        values exactly on an edge open the bin above it."""
+        import duckdb
+        import pyarrow as pa
+
+        from shifu_spark.functions.nonvalue import is_value
+        from shifu_spark.operators.binning import equal_interval_bin_expr
+        from tests.oracle import compare
+
+        nan, inf = float("nan"), float("inf")
+        groups = {
+            "edges": [0.0, 2.5, 5.0, 7.5, 10.0, 1.0, 9.99, None, nan, inf, -inf],
+            "inexact": [0.1, 0.2, 0.3, 0.7, 0.35, 0.55, -0.3],
+            "constant": [3.0, 3.0, None, nan],
+        }
+        rows = [(i, g, x) for g, xs in groups.items() for i, x in enumerate(xs)]
+        df = spark.createDataFrame(rows, "id int, g string, x double")
+        x = F.col("x")
+        mm = df.groupBy("g").agg(F.min(F.when(is_value(x), x)).alias("mn"), F.max(F.when(is_value(x), x)).alias("mx"))
+        got = df.join(mm, "g").select("g", "id", equal_interval_bin_expr(x, F.col("mn"), F.col("mx"), 4).alias("bin"))
+
+        con = duckdb.connect()
+        con.register("t", pa.table({
+            "id": [r[0] for r in rows], "g": [r[1] for r in rows],
+            "x": pa.array([r[2] for r in rows], pa.float64()),
+        }))
+        sql = """
+SELECT g, id,
+       (CASE WHEN x IS NULL OR NOT isfinite(x) THEN NULL
+             WHEN mx = mn THEN 0
+             ELSE least(floor((x - mn) / ((mx - mn) / 4)), 3) END)::BIGINT AS bin
+FROM t JOIN (SELECT g, min(x) AS mn, max(x) AS mx FROM t
+             WHERE x IS NOT NULL AND isfinite(x) GROUP BY g) USING (g)
+"""
+        assert compare(got, con, sql, "equal_interval_bin") == []
+        by_key = {(r["g"], r["id"]): r["bin"] for r in got.collect()}
+        assert [by_key[("edges", i)] for i in range(11)] == [0, 1, 2, 3, 3, 0, 3, None, None, None, None]
+        assert [by_key[("constant", i)] for i in range(4)] == [0, 0, None, None]
+
+    def test_onehot_normalize_nan_quantity_matches_oracle(self, spark, tmp_path):
+        """One NaN l_quantity goes to the missing slot on both engines and
+        leaves the bin edges of every other row alone."""
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from shifu_spark.queries import ORACLES, QUERIES
+        from tests.oracle import compare
+
+        li = pq.read_table("/root/testdata/sf0.001/lineitem.parquet")
+        q = li.column("l_quantity").to_pylist()
+        q[0] = float("nan")
+        i = li.schema.get_field_index("l_quantity")
+        pq.write_table(li.set_column(i, "l_quantity", pa.array(q, pa.float64())), tmp_path / "lineitem.parquet")
+        con = duckdb.connect()
+        con.sql(f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{tmp_path}/lineitem.parquet')")
+        out = QUERIES["onehot_normalize"](spark, str(tmp_path))
+        assert compare(out, con, ORACLES["onehot_normalize"], "onehot_nan") == []
+
     def test_hybrid_bin_index(self, spark):
         from shifu_spark.operators.binning import hybrid_bin_index_expr
 

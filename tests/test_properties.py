@@ -1217,16 +1217,11 @@ FROM {frame} GROUP BY 2
         """Boundary builders return [] on empty/all-null input (never a
         crash), and psi_df over an empty counts frame yields no rows on
         both engines."""
-        from shifu_spark.operators.binning import (
-            equal_interval_boundaries,
-            equal_population_boundaries,
-            ntile_boundaries,
-        )
+        from shifu_spark.operators.binning import equal_population_boundaries, ntile_boundaries
         from shifu_spark.operators.psi import psi_df
 
         dfs, con = degen
         for frame in ("empty", "allnull"):
-            assert equal_interval_boundaries(dfs[frame], "x", 4) == []
             assert equal_population_boundaries(dfs[frame], ["x"], 4) == {"x": []}
             assert ntile_boundaries(dfs[frame], "x", 4) == []
         actual = spark.createDataFrame([], "column_name string, unit string, bin int, cnt long")
@@ -1810,22 +1805,20 @@ class TestDirtyTpch:
 
 
 class TestConstantColumns:
-    """r10 bug-class audit #6: ALL-EQUAL COLUMNS — (mx - mn) = 0 turns
-    every inline equal-interval bin width to zero, and Spark 4's ANSI
-    mode raises DIVIDE_BY_ZERO for DOUBLE division too, so one constant
-    column killed psi_events_by_day, ksiv_equal_interval, ksiv_weighted,
-    bin_avg_score and dynamic_binning outright. Convention: width 0 =>
-    the whole population is bin 0 on both engines. The fix's own trap is
-    pinned here too: Spark's least() IGNORES NULLs, so the coalesce must
-    sit INSIDE the least or the degenerate bin silently becomes the TOP
-    bin instead of 0 (caught by bin_avg_score on this very fixture).
+    """ALL-EQUAL COLUMNS — (mx - mn) = 0 makes the equal-interval bin
+    width zero, and Spark 4's ANSI mode raises DIVIDE_BY_ZERO for DOUBLE
+    division too. Convention (binning.equal_interval_bin_expr): width 0
+    => the whole population is bin 0 on both engines, not the top bin.
+    Every query binning by equal interval is listed, plus the moments,
+    correlation and quantile families that divide by a spread.
     """
 
     import pytest as _pt
 
     NAMES = [
         "psi_events_by_day", "ksiv_equal_interval", "ksiv_weighted",
-        "bin_avg_score", "dynamic_binning", "zorder_skipping_stats",
+        "bin_avg_score", "dynamic_binning", "woe_normalize", "onehot_normalize",
+        "discrete_zscore_normalize", "woe_zscore_normalize", "zorder_skipping_stats",
         "hilbert_skipping_stats", "column_stats", "zscore_normalize",
         "correlation_matrix", "robust_column_stats", "events_anomaly_zscore",
         "streaming_drift_psi", "events_moving_avg", "ksiv_equal_positive",
