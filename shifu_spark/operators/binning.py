@@ -237,7 +237,7 @@ def categorical_index_expr(col: Column | str, categories: list[str], missing_ind
     for i, cat in enumerate(categories):
         pairs.extend([F.lit(cat), F.lit(i)])
     m = F.create_map(*pairs)
-    return F.coalesce(m.getItem(c), F.lit(missing_index))
+    return F.coalesce(m[c], F.lit(missing_index))
 
 
 # ---------------------------------------------------------------------------

@@ -7,25 +7,30 @@ container/obj/PerformanceResult.java. Weight semantics: unparseable
 weights default to 1.0 and negatives clamp to 1.0
 (ConfusionMatrix.java:361-370).
 
-Spark shape — fully distributed, no driver scan and **no unpartitioned
-global window** anywhere on the hot path:
+Spark shape — no driver scan over the data:
   * collapse to per-distinct-score points first (groupBy score — bounds
     all downstream work by #distinct scores, not #rows);
-  * cumulative sums via a distributed prefix-sum: range-repartition on
-    the sort key, cumulate WITHIN each range in parallel, then add
-    per-range exclusive offsets (#partitions tiny driver rows broadcast
-    back).  Identical output to a global ``sum() OVER (ORDER BY ...)``
-    but the work is spread across every core instead of one WindowExec
-    task — the form that survives 100 TB where distinct scores grow
-    linearly with data;
+  * cumulative sums via ``prefix_sums``, which splits the points into
+    ``ceil(sizeInBytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``
+    score ranges, capped at ``defaultParallelism``. ``sizeInBytes`` is
+    the optimizer's estimate for the points plan; reading it runs no job.
+    - One range (points that fit one advisory partition): running sums
+      and totals are windows over one constant bucket — no persist, no
+      boundary collect, no offsets join.
+    - More ranges: bucket the points by collected quantile boundaries of
+      the sort key, cumulate within each bucket in parallel, then add
+      per-bucket exclusive offsets (one tiny row per bucket, broadcast
+      back). This is the form for inputs whose distinct scores grow with
+      the data; a large or unknown estimate lands here.
+    Both forms give the rows of a global ``sum() OVER (ORDER BY ...)``;
   * ROC-AUC via the Mann-Whitney rank statistic over those points
     (equivalent to the trapezoid over the full-resolution ROC);
     integer-count arithmetic keeps results bit-deterministic across
     engines.
 
-The round-1 global-window form is kept as ``confusion_points_global``
-purely as an oracle-mirror / differential-test path; every public entry
-point routes through the prefix-sum plan by default.
+``confusion_points_global`` keeps the unpartitioned global-window form
+only as an oracle mirror for differential tests; every public entry
+point routes through ``prefix_sums``.
 """
 
 from __future__ import annotations
@@ -44,11 +49,10 @@ def clamp_weight(weight_col: str) -> Column:
     Java-catch->1.0 branch, not raise under ANSI mode. Non-finite
     weights also clamp to 1.0: a NaN weight would otherwise poison the
     whole weighted tally on the double path and NULL OUT of the
-    DECIMAL(38,10) trapezoid sum (the r9 population-split signature) —
+    DECIMAL(38,10) trapezoid sum, silently dropping that population —
     garbage weights are defensively 1.0, same as unparseable ones
     (deliberate divergence from a literal Java replay, where the
-    NaN-weight sum degenerates to an all-NaN curve; r10 non-finite
-    audit)."""
+    NaN-weight sum degenerates to an all-NaN curve)."""
     from shifu_spark.functions.nonvalue import clamp_weight_expr
 
     return clamp_weight_expr(F.col(weight_col).try_cast("double"))
@@ -57,11 +61,10 @@ def clamp_weight(weight_col: str) -> Column:
 def _score_bounds(df: DataFrame, score_col: str, n: int | None) -> list[float]:
     """Range-bucket boundaries from the RAW score column.
 
-    LEGACY path (r12 optimization): the default curve machinery now
-    derives its bounds from the materialized points table inside
-    ``prefix_sums`` (one pass over the raw data instead of two — guide
-    §1.2/§2.3: don't re-scan what a prior pass already aggregated).
-    Kept for callers that pass explicit ``bounds`` (differential tests)."""
+    Not on the default path: ``prefix_sums`` derives its bounds from
+    the persisted points table, so the raw data is scanned once instead
+    of twice. Kept for callers that pass explicit ``bounds``
+    (differential tests)."""
     spark = df.sparkSession
     k = n or spark.sparkContext.defaultParallelism
     qs = [i / k for i in range(1, k)]
@@ -84,8 +87,8 @@ def _score_points(
     NULL/NaN/±Infinity scores are EXCLUDED: an unrankable score is no
     evaluation point (under Spark/DuckDB NaN-is-greatest ordering a NaN
     score would silently rank as the most confident prediction; the
-    unified missing semantics route it out instead — r10 non-finite
-    audit, same class as the r9 bin-lookup fix)."""
+    unified missing semantics route it out instead, as the bin lookup
+    does)."""
     w = clamp_weight(weight_col) if weight_col else F.lit(1.0)
     df = df.filter(~_is_nonvalue(F.col(score_col).cast("double")))
     return (
@@ -105,7 +108,7 @@ def _score_points(
 
 
 # ---------------------------------------------------------------------------
-# Distributed prefix-sum core (the 100 TB form of the cumulative scan)
+# Prefix-sum core (the distributed form of the cumulative scan)
 # ---------------------------------------------------------------------------
 
 def _finalize_one_row(df: DataFrame) -> DataFrame:
@@ -130,6 +133,27 @@ def _finalize_one_row(df: DataFrame) -> DataFrame:
     return df.sparkSession.createDataFrame(table)
 
 
+def _range_count(df: DataFrame, num_ranges: int | None = None) -> int:
+    """Number of score ranges ``prefix_sums`` splits ``df`` into.
+
+    An explicit ``num_ranges`` wins. Otherwise one range per
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` of the
+    optimizer's size estimate for ``df``, at least 1 and at most
+    ``defaultParallelism``. Reading the estimate optimizes the plan but
+    runs no job. Without CBO the estimate errs high: an ``Aggregate`` or
+    ``Filter`` keeps its child's size scaled by row width, and an unknown
+    size is ``spark.sql.defaultSizeInBytes`` — so a doubtful input keeps
+    the multi-range form."""
+    if num_ranges:
+        return num_ranges
+    spark = df.sparkSession
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return max(1, min(-(-size // target), spark.sparkContext.defaultParallelism))
+
+
 def prefix_sums(
     df: DataFrame,
     order_col: str,
@@ -140,59 +164,68 @@ def prefix_sums(
     bounds: list[float] | None = None,
     cache_out: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """Distributed inclusive prefix-sum of ``cols`` in ``order_col`` order.
+    """Inclusive prefix-sum of ``cols`` in ``order_col`` order.
 
-    Returns the input with ``cum_<col>`` (running sum), ``tot_<col>``
-    (grand total, constant) and ``__pid`` columns appended.
+    Returns the input with ``tot_<col>`` (grand total, constant),
+    ``cum_<col>`` (running sum) and ``__pid`` (range id) columns
+    appended. Rows equal an unpartitioned ``sum() OVER (ORDER BY ...)``.
 
-    Plan:
-      * with ``bounds=None`` (the default path) the input points are
-        PERSISTED ONCE (cache handed back via ``cache_out`` for the
-        caller's deterministic unpersist) and the boundary quantiles
-        are read from that materialization — the upstream pipeline
-        (raw scan + groupBy) runs exactly once however many plan
-        branches or actions consume the result.  The r11 form took a
-        separate percentile pass over the RAW column and left the
-        points lazy, so the offsets broadcast branch re-derived the
-        whole scan+groupBy: 3 raw passes per curve query (r12
-        optimization, guide §1.2 — remove redundant passes first);
+    The range count is ``_range_count(df, num_ranges)``:
+    ``ceil(sizeInBytes / advisoryPartitionSizeInBytes)`` of the input's
+    plan estimate, capped at ``defaultParallelism``, unless
+    ``num_ranges`` is given.
+
+    One range (and no explicit ``bounds``): ``__pid`` is the constant 0,
+    ``cum_*`` is a running window and ``tot_*`` the unbounded window over
+    that one bucket. Nothing is persisted or collected and there is no
+    offsets join, so ``cache_out`` stays empty. The bucket is one task,
+    which the size rule keeps to one advisory partition of points.
+
+    More ranges:
+      * the input points are persisted once (the cache goes to
+        ``cache_out`` for the caller to release) and the ``n - 1``
+        boundary quantiles are read from that materialization, so the
+        upstream scan + groupBy runs once however many plan branches or
+        actions consume the result. Without ``cache_out`` nothing is
+        persisted — nothing could release that cache — and every branch
+        re-derives the points: correct, but multi-pass;
       * the collected boundaries are embedded as literals, so every
-        plan branch sees the SAME buckets as a DETERMINISTIC FUNCTION
-        OF THE DATA.  This is load-bearing: ``repartitionByRange``'s
-        sampled boundaries differ per plan instantiation, so a totals
-        branch and a main branch that don't share the exchange could
-        disagree about which rows a partition id covers — silently
-        misaligning the offsets (observed as a nondeterministic ROC
-        AUC).  A value-derived bucket id is identical in every branch
-        by construction, whether or not Catalyst reuses the exchange;
-      * per-bucket totals (one tiny row per bucket) cumulated under a
-        window over ``__pid`` — unpartitioned, but spanning only
+        plan branch sees the SAME buckets as a deterministic function of
+        the data. ``repartitionByRange`` samples its boundaries per plan
+        instantiation, so a totals branch and a main branch that don't
+        share the exchange could disagree about which rows a bucket
+        covers and misalign the offsets (seen as a nondeterministic ROC
+        AUC). A value-derived bucket id is identical in every branch,
+        whether or not Catalyst reuses the exchange;
+      * per-bucket totals (one tiny row per bucket) are cumulated under
+        a window over ``__pid`` — unpartitioned, but spanning only
         #buckets rows;
-      * broadcast the (#buckets)-row offset table back and add it to the
-        bucket-partitioned within-range running sum (the window shuffles
-        on the bucket id, spreading buckets across every core).
+      * the (#buckets)-row offsets table is broadcast back and added to
+        the within-bucket running sum (the window shuffles on the bucket
+        id, spreading buckets across every core).
 
-    Output is row-identical to an unpartitioned ``sum() OVER (ORDER BY
-    ...)`` but every task works on ~1/num_ranges of the points.
-    ``persist=True`` is only meaningful on the legacy explicit-``bounds``
-    path (the default path persists the input points instead).
+    Explicit ``bounds`` take the multi-range form with those boundaries;
+    ``persist=True`` then persists the bucketed frame (handed to
+    ``cache_out``).
     """
-    spark = df.sparkSession
-    n = num_ranges or spark.sparkContext.defaultParallelism
     key = F.desc(order_col) if descending else F.asc(order_col)
+    wpart = (
+        Window.partitionBy("__pid")
+        .orderBy(key)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    n = _range_count(df, num_ranges) if bounds is None else None
+    if n == 1:
+        # Catalyst folds the constant bucket away: one SinglePartition
+        # exchange, and WindowExec's "No Partition Defined" warning is
+        # expected here
+        one = df.withColumn("__pid", F.lit(0))
+        wbucket = Window.partitionBy("__pid")
+        one = one.select("*", *[F.sum(c).over(wbucket).alias(f"tot_{c}") for c in cols])
+        return one.select("*", *[F.sum(c).over(wpart).alias(f"cum_{c}") for c in cols])
     if bounds is None:
-        # one materialization pays for: the boundary collect, the
-        # per-bucket totals branch, and the main cumulative branch.
-        # The cache is handed to the caller via ``cache_out`` for
-        # deterministic release (the repo's unpersist discipline).
-        # ``cache_out`` is EFFECTIVELY REQUIRED on hot paths (ADVICE
-        # r12): without it the boundary percentile collect below runs
-        # the full points pipeline eagerly AT PLAN-BUILD TIME and every
-        # later action re-derives it per branch — correct, but
-        # multi-pass.  Persisting internally instead would leak the
-        # cache for the session's lifetime (nothing could release it),
-        # which is worse than the extra passes; every in-repo caller
-        # threads ``cache_out`` and releases via _materialize_release.
+        # one materialization pays for the boundary collect, the
+        # per-bucket totals branch and the main cumulative branch
         if cache_out is not None:
             df = df.persist()
             cache_out.append(df)
@@ -230,11 +263,6 @@ def prefix_sums(
         F.col("__pid").alias("__opid"),
         *[F.coalesce(F.sum(f"__t_{c}").over(wprev), zero).alias(f"{c}_off") for c in cols],
         *[F.sum(f"__t_{c}").over(wall).alias(f"tot_{c}") for c in cols],
-    )
-    wpart = (
-        Window.partitionBy("__pid")
-        .orderBy(key)
-        .rowsBetween(Window.unboundedPreceding, 0)
     )
     out = parted.join(F.broadcast(offsets), F.col("__pid") == F.col("__opid")).drop("__opid")
     for c in cols:
@@ -278,10 +306,10 @@ def confusion_points_df(
     ConfusionMatrix.java:276-520).  Weighted columns are emitted only
     when ``weight_col`` is given (they are constant-1 sums otherwise).
 
-    This IS the scalable prefix-sum plan — no unpartitioned window.
-    Pass ``cache_out`` to get the single-materialization plan (the
-    points cache is appended for the caller to release); without it the
-    plan stays fully lazy and each consuming branch re-derives.
+    Runs on ``prefix_sums`` (one range or several, by the points' size).
+    Pass ``cache_out`` to get the single-materialization plan when it
+    takes several ranges (the points cache is appended for the caller
+    to release); without it each consuming branch re-derives the points.
     """
     pts = _score_points(df, score_col, label_expr, weight_col)
     cols = ["pos", "neg"] + (["wpos", "wneg"] if weight_col else [])
@@ -291,24 +319,13 @@ def confusion_points_df(
     return _confusion_select(cum, weighted=weight_col is not None)
 
 
-# Back-compat alias: the scalable path is now the only public plan.
-def confusion_points_scalable(
-    df: DataFrame,
-    score_col: str,
-    label_expr: Column,
-    num_ranges: int | None = None,
-    cache_out: list[DataFrame] | None = None,
-) -> DataFrame:
-    return confusion_points_df(df, score_col, label_expr, None, num_ranges, cache_out)
-
-
 def confusion_points_global(
     df: DataFrame,
     score_col: str,
     label_expr: Column,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """Round-1 global-window form — kept ONLY as a differential-test /
+    """Unpartitioned global-window form — kept ONLY as a differential-test /
     oracle-mirror path (one WindowExec task; do not use at scale)."""
     pts = _score_points(df, score_col, label_expr, weight_col)
     wdesc = Window.orderBy(F.desc("score")).rowsBetween(Window.unboundedPreceding, 0)
@@ -512,7 +529,7 @@ def curve_metrics_df(
     round_to: int | None = 6,
     num_ranges: int | None = None,
 ) -> DataFrame:
-    """ROC AUC + PR AUC + KS in ONE distributed prefix scan.
+    """ROC AUC + PR AUC + KS in ONE prefix scan.
 
     The naive composition (roc_auc_df + confusion_points_df +
     pr_auc_trapezoid) runs three independent prefix machineries — three
@@ -525,8 +542,9 @@ def curve_metrics_df(
         runs in DECIMAL so it is exact at any scale (products overflow
         int64 around 10^12 rows);
       * PR AUC as the recall-ordered trapezoid, adjacent pairs resolved
-        WITHIN each range partition (pid-local lag) plus the
-        #partitions−1 boundary pairs from a tiny max_by/min_by agg;
+        WITHIN each score range (pid-local lag) plus, when there are
+        several ranges, the #ranges−1 boundary pairs from a tiny
+        max_by/min_by agg;
       * KS = max(TPR − FPR) over the full-resolution curve.
 
     Returns one row (auc, pr_auc, ks).
@@ -550,19 +568,24 @@ def _curve_metrics_impl(
     the tie-order pin. The only parameterization:
     which tally columns cumulate (pos/neg vs the weighted wpos/wneg) and
     the decimal scale of the trapezoid numerator (integer counts are
-    exact at scale 0; weights need fractional digits)."""
+    exact at scale 0; weights need fractional digits).
+
+    The range count is ``_range_count`` of the points, as in
+    ``prefix_sums``. With one range every adjacent pair lies inside the
+    one bucket, so the per-range first/last agg, its lag and the
+    ``__barea`` cross join are not built; several ranges add those
+    boundary pairs. Both forms share every metric expression."""
     pos, neg = ("wpos", "wneg") if weight_col else ("pos", "neg")
     u2_type = "decimal(38,10)" if weight_col else "decimal(38,0)"
     pts = _score_points(df, score_col, label_expr, weight_col)
-    # prefix_sums persists the points once — that single materialization
-    # serves the boundary collect, the offsets branch, the barea
-    # broadcast branch and the final agg (r12: was persist=True on the
-    # post-pid frame PLUS a separate raw-column bounds pass)
+    n = _range_count(pts, num_ranges)
+    # with several ranges prefix_sums persists the points once — that
+    # single materialization serves the boundary collect, the offsets
+    # branch, the barea broadcast branch and the final agg
     caches: list[DataFrame] = []
     try:
         cum = prefix_sums(
-            pts, "score", [pos, neg], descending=True, num_ranges=num_ranges,
-            cache_out=caches,
+            pts, "score", [pos, neg], descending=True, num_ranges=n, cache_out=caches,
         )
         cpos, cneg = F.col(f"cum_{pos}"), F.col(f"cum_{neg}")
         t = (
@@ -570,33 +593,10 @@ def _curve_metrics_impl(
             .withColumn("prec", F.try_divide(cpos, cpos + cneg))
             .withColumn("fpr", F.try_divide(cneg, F.col(f"tot_{neg}")))
         )
-        # boundary pairs: (lowest-score row of pid k) -> (highest-score row
-        # of pid k+1). Computed IN-PLAN (per-pid first/last agg -> lag over
-        # the #pids-row table -> 1-row sum, broadcast back) instead of a
-        # driver collect — both this branch and the final agg read the one
-        # checkpointed points table. The lag window is catalog-scale
-        # (#buckets rows; bounded: same class as the offsets window in
-        # prefix_sums).
-        per_pid = t.groupBy("__pid").agg(
-            F.max_by(F.struct("rec", "prec"), "score").alias("first"),
-            F.min_by(F.struct("rec", "prec"), "score").alias("last"),
-        )
-        wpid = Window.orderBy("__pid")
-        pair_term = F.when(
-            F.col("first.prec").isNotNull() & F.col("prev_last.prec").isNotNull(),
-            (F.col("first.rec") - F.col("prev_last.rec"))
-            * (F.col("first.prec") + F.col("prev_last.prec"))
-            / 2.0,
-        )
-        barea_df = (
-            per_pid.withColumn("prev_last", F.lag("last").over(wpid))
-            .filter(F.col("prev_last").isNotNull())
-            .agg(F.coalesce(F.sum(pair_term), F.lit(0.0)).alias("__barea"))
-        )
         # score-desc lag == (recall asc, precision desc) — the pinned tie
         # order every oracle mirrors
         wprev = Window.partitionBy("__pid").orderBy(F.desc("score"))
-        t = t.withColumn("prev_r", F.lag("rec").over(wprev)).withColumn(
+        lagged = t.withColumn("prev_r", F.lag("rec").over(wprev)).withColumn(
             "prev_p", F.lag("prec").over(wprev)
         )
         pr_inner = F.sum(
@@ -622,18 +622,44 @@ def _curve_metrics_impl(
                 F.col(neg).cast(u2_type)
                 * (F.lit(2) * cpos - F.col(pos)).cast(u2_type)
             )
-        agg = t.agg(
+        agg = lagged.agg(
             u2.alias("u2"),
             pr_inner.alias("pr_inner"),
             F.max(F.col("rec") - F.col("fpr")).alias("ks_raw"),
             F.first(f"tot_{pos}").alias("tp"),
             F.first(f"tot_{neg}").alias("tn"),
-        ).crossJoin(F.broadcast(barea_df))
+        )
+        pr = F.coalesce(F.col("pr_inner"), F.lit(0.0))
+        if n > 1:
+            # boundary pairs: (lowest-score row of pid k) -> (highest-score
+            # row of pid k+1). Computed IN-PLAN (per-pid first/last agg ->
+            # lag over the #pids-row table -> 1-row sum, broadcast back)
+            # instead of a driver collect — both this branch and the final
+            # agg read the one persisted points table. The lag window is
+            # catalog-scale (#buckets rows; bounded: same class as the
+            # offsets window in prefix_sums).
+            per_pid = t.groupBy("__pid").agg(
+                F.max_by(F.struct("rec", "prec"), "score").alias("first"),
+                F.min_by(F.struct("rec", "prec"), "score").alias("last"),
+            )
+            wpid = Window.orderBy("__pid")
+            pair_term = F.when(
+                F.col("first.prec").isNotNull() & F.col("prev_last.prec").isNotNull(),
+                (F.col("first.rec") - F.col("prev_last.rec"))
+                * (F.col("first.prec") + F.col("prev_last.prec"))
+                / 2.0,
+            )
+            barea_df = (
+                per_pid.withColumn("prev_last", F.lag("last").over(wpid))
+                .filter(F.col("prev_last").isNotNull())
+                .agg(F.coalesce(F.sum(pair_term), F.lit(0.0)).alias("__barea"))
+            )
+            agg = agg.crossJoin(F.broadcast(barea_df))
+            pr = pr + F.col("__barea")
         auc = F.try_divide(
             F.col("u2").cast("double"),
             2.0 * F.col("tp").cast("double") * F.col("tn").cast("double"),
         )
-        pr = F.coalesce(F.col("pr_inner"), F.lit(0.0)) + F.col("__barea")
         ks = F.col("ks_raw")
         if round_to is not None:
             auc, pr, ks = F.round(auc, round_to), F.round(pr, round_to), F.round(ks, round_to)
@@ -672,9 +698,9 @@ def weighted_curve_metrics_df(
         falls), plus the #buckets−1 boundary pairs from one tiny agg;
       * weighted KS = max(wTPR − wFPR).
 
-    Replaces the round-2 ``weighted_pr_auc_df`` two-machinery form
-    (prefix_sums + pr_auc_trapezoid's second percentile pass/persist) —
-    VERDICT r2 "What's wrong #3". Returns one row
+    One prefix machinery, not two: composing ``prefix_sums`` with
+    ``pr_auc_trapezoid`` would pay a second percentile pass and persist
+    over the same points. Returns one row
     (weighted_auc, weighted_pr_auc, weighted_ks).
     """
     return _curve_metrics_impl(

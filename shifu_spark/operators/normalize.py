@@ -85,7 +85,7 @@ def categorical_posrate_expr(col: Column | str, categories: list[str], pos_rates
     for cat, pr in zip(categories, pos_rates):
         pairs.extend([F.lit(cat), F.lit(float(pr))])
     m = F.create_map(*pairs)
-    return F.coalesce(m.getItem(c), F.lit(missing_value))
+    return F.coalesce(m[c], F.lit(missing_value))
 
 
 def onehot_exprs(col: Column | str, boundaries: list[float], prefix: str) -> list[Column]:

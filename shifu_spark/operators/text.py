@@ -159,11 +159,11 @@ def unigram_logprob_exprs(
     t = F.col(text) if isinstance(text, str) else text
     m = F.create_map(*[F.lit(x) for kv in sorted(v.items()) for x in kv])
     toks = F.split(t, " ")
-    lp = F.transform(toks, lambda w: F.coalesce(m.getItem(w), F.lit(float(oov_logprob))))
+    lp = F.transform(toks, lambda w: F.coalesce(m[w], F.lit(float(oov_logprob))))
     total = F.aggregate(lp, F.lit(0.0), lambda acc, x: acc + x)
     n = F.size(toks)
     mean_lp = F.when(n > 0, total / n).otherwise(F.lit(None))
-    oov = F.size(F.filter(toks, lambda w: m.getItem(w).isNull()))
+    oov = F.size(F.filter(toks, lambda w: m[w].isNull()))
     oov_rate = F.when(n > 0, oov.cast("double") / n).otherwise(F.lit(None))
     return mean_lp, oov_rate
 
@@ -542,11 +542,11 @@ def bigram_logprob_exprs(
         pair = F.concat_ws(" ", F.element_at(toks, i - 1), F.element_at(toks, i))
         backoff = (
             F.coalesce(
-                umap.getItem(F.element_at(toks, i)), F.lit(float(UNIGRAM_OOV_LOGPROB))
+                umap[F.element_at(toks, i)], F.lit(float(UNIGRAM_OOV_LOGPROB))
             )
             + F.lit(float(BIGRAM_BACKOFF_PENALTY))
         )
-        return F.coalesce(bmap.getItem(pair), backoff)
+        return F.coalesce(bmap[pair], backoff)
 
     idx = F.sequence(F.lit(2), n)
     lps = F.transform(idx, pos_lp)
@@ -554,9 +554,9 @@ def bigram_logprob_exprs(
     n_pos = (n - 1).cast("double")
     mean_lp = F.when(n >= 2, total / n_pos).otherwise(F.lit(None))
     bmiss = F.size(
-        F.filter(idx, lambda i: bmap.getItem(
+        F.filter(idx, lambda i: bmap[
             F.concat_ws(" ", F.element_at(toks, i - 1), F.element_at(toks, i))
-        ).isNull())
+        ].isNull())
     )
     backoff_rate = F.when(n >= 2, bmiss.cast("double") / n_pos).otherwise(F.lit(None))
     return mean_lp, backoff_rate

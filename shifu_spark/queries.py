@@ -4683,17 +4683,19 @@ FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
 
 @query("confusion_matrix_scalable", None)
 def confusion_matrix_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative confusion matrix via distributed prefix-sum
-    (eval_metrics.confusion_points_scalable): range-partitioned
-    within-range windows + broadcast per-range offsets — the 100 TB form
-    of the single-task ORDER BY window. Same oracle as
-    confusion_matrix_points (outputs are identical by construction)."""
-    from shifu_spark.operators.eval_metrics import confusion_points_scalable
+    """Cumulative confusion matrix in the at-scale prefix-sum form
+    (eval_metrics.confusion_points_df with one range per core):
+    range-bucketed within-range windows + broadcast per-range offsets.
+    At the gate's data sizes the derived range count is 1, so this
+    query keeps the multi-range plan under oracle parity. Same oracle
+    as confusion_matrix_points (outputs are identical by construction)."""
+    from shifu_spark.operators.eval_metrics import confusion_points_df
 
     li = _t(spark, sf_dir, "lineitem")
     caches: list[DataFrame] = []
-    pts = confusion_points_scalable(
-        li, "l_extendedprice", F.col("l_returnflag") == "R", cache_out=caches
+    pts = confusion_points_df(
+        li, "l_extendedprice", F.col("l_returnflag") == "R",
+        num_ranges=spark.sparkContext.defaultParallelism, cache_out=caches,
     )
     out = pts.select(
         "score", "tp", "fp", "fn", "tn",

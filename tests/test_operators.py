@@ -902,6 +902,184 @@ class TestScalableConfusion:
         assert rows_a == rows_b
 
 
+class TestCurveRangeForms:
+    """The prefix-sum core picks its range count from the points' plan
+    size: one range (a window over a constant bucket) for small eval
+    sets, range buckets + broadcast offsets above that. Every curve
+    entry point must give the same answer whichever form runs."""
+
+    @property
+    def label(self):
+        return F.col("label") == 1
+
+    @staticmethod
+    def _cases():
+        """(name, rows) cases: score ties with NULL/NaN/±Inf scores, one
+        distinct score, no positives. Weights are dyadic (plus an
+        unparseable and a negative one, both clamped to 1.0), so
+        weighted sums are exact in any order and equality tests the
+        bucketing, not float associativity."""
+        inf = float("inf")
+        ws = ["0.5", "1.5", "2", "0.25", "x", "-3", None]
+        rows = [
+            (round((i * 7919 % 503) / 503.0, 2), int(i * 31 % 7 < 3), ws[i % len(ws)])
+            for i in range(600)
+        ]
+        rows += [(None, 1, "1"), (float("nan"), 1, "2"), (inf, 0, "1"), (-inf, 1, "0.5")]
+        single = [(0.5, int(i % 3 == 0), "1.5") for i in range(40)] + [(float("nan"), 1, "1")]
+        return [
+            ("ties_and_nonvalues", rows),
+            ("single_score", single),
+            ("no_positives", [(r[0], 0, r[2]) for r in rows]),
+        ]
+
+    @staticmethod
+    def _cached(spark, rows):
+        """Cached and materialized: a Python-RDD frame has no size
+        estimate, and an unknown size takes the multi-range form."""
+        df = spark.createDataFrame(rows, "score double, label int, w string").cache()
+        df.count()
+        return df
+
+    def _results(self, df, n):
+        from shifu_spark.operators.eval_metrics import (
+            confusion_points_df,
+            curve_metrics_df,
+            gain_buckets_df,
+            roc_auc_df,
+            weighted_curve_metrics_df,
+            weighted_gain_buckets_df,
+        )
+
+        lab = self.label
+        return {
+            "curve": curve_metrics_df(df, "score", lab, num_ranges=n).collect(),
+            "weighted_curve": weighted_curve_metrics_df(df, "score", lab, "w", num_ranges=n).collect(),
+            "roc": roc_auc_df(df, "score", lab, num_ranges=n).collect(),
+            "weighted_roc": roc_auc_df(df, "score", lab, weight_col="w", num_ranges=n).collect(),
+            "points": sorted(map(tuple, confusion_points_df(df, "score", lab, num_ranges=n).collect())),
+            "weighted_points": sorted(
+                map(tuple, confusion_points_df(df, "score", lab, "w", num_ranges=n).collect())
+            ),
+            "gains": gain_buckets_df(confusion_points_df(df, "score", lab, num_ranges=n)).collect(),
+            "weighted_gains": weighted_gain_buckets_df(df, "score", lab, "w", num_ranges=n).collect(),
+        }
+
+    def test_one_range_matches_forced_ranges(self, spark):
+        from shifu_spark.operators.eval_metrics import _range_count, _score_points
+
+        for name, rows in self._cases():
+            df = self._cached(spark, rows)
+            try:
+                assert _range_count(_score_points(df, "score", self.label, "w")) == 1, name
+                derived = self._results(df, None)
+                for n in (4, 8):
+                    forced = self._results(df, n)
+                    for k in derived:
+                        assert derived[k] == forced[k], (name, k, n)
+            finally:
+                df.unpersist()
+
+    def test_small_advisory_size_derives_several_ranges(self, spark):
+        """Lowering the advisory partition size must move the same input
+        to the multi-range plan (persisted points, offsets join) with
+        unchanged results, so the derivation is not a constant 1."""
+        from shifu_spark.operators.eval_metrics import (
+            _range_count,
+            _score_points,
+            confusion_points_df,
+            curve_metrics_df,
+        )
+
+        if spark.sparkContext.defaultParallelism < 2:
+            pytest.skip("a one-core session caps the range count at 1")
+        df = self._cached(spark, self._cases()[0][1])
+        pts = _score_points(df, "score", self.label, None)
+
+        def run():
+            caches = []
+            plan = confusion_points_df(df, "score", self.label, cache_out=caches)
+            try:
+                points = sorted(map(tuple, plan.collect()))
+                opt = plan._jdf.queryExecution().optimizedPlan().toString()
+            finally:
+                for c in caches:
+                    c.unpersist()
+            curve = curve_metrics_df(df, "score", self.label).collect()
+            return _range_count(pts), len(caches), "__opid" in opt, points, curve
+
+        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        old = spark.conf.get(key)
+        try:
+            n1, cached1, joined1, points1, curve1 = run()
+            spark.conf.set(key, "1k")
+            n, cached, joined, points, curve = run()
+        finally:
+            spark.conf.set(key, old)
+            df.unpersist()
+        assert (n1, cached1, joined1) == (1, 0, False)
+        assert n > 1 and cached == 1 and joined
+        assert (points, curve) == (points1, curve1)
+
+    def test_curve_metrics_job_count(self, spark):
+        """A 12k-row eval set takes the one-range form: a handful of
+        jobs, not a persist + boundary collect + offsets branch each."""
+        from shifu_spark.operators.eval_metrics import curve_metrics_df
+
+        sc = spark.sparkContext
+        df = spark.range(12000).select(
+            F.round(F.rand(11), 4).alias("score"), (F.rand(12) < 0.3).cast("int").alias("label")
+        ).cache()
+        try:
+            df.count()
+            group = "test_operators:curve_metrics_jobs"
+            sc.setJobGroup(group, group)
+            try:
+                row = curve_metrics_df(df, "score", self.label).collect()[0]
+            finally:
+                sc.setJobGroup("test_operators:idle", "idle")
+            assert row["auc"] is not None
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+        finally:
+            df.unpersist()
+
+
+def test_map_lookups_raise_no_future_warning(spark):
+    """Map literals are indexed with ``m[key]``: ``getItem(<Column>)`` is
+    deprecated in Spark 4 and slated for removal."""
+    import warnings
+
+    from shifu_spark.operators.binning import categorical_index_expr
+    from shifu_spark.operators.normalize import categorical_posrate_expr
+    from shifu_spark.operators.text import (
+        BIGRAM_BACKOFF_PENALTY,
+        BIGRAM_LOGPROB,
+        UNIGRAM_LOGPROB,
+        UNIGRAM_OOV_LOGPROB,
+        bigram_logprob_exprs,
+        unigram_logprob_exprs,
+    )
+
+    df = spark.createDataFrame([("a", "table hash zzz"), ("q", "the"), (None, "zzz")], "c string, t string")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        uni_lp, uni_oov = unigram_logprob_exprs("t")
+        bi_lp, bi_miss = bigram_logprob_exprs("t")
+        rows = df.select(
+            categorical_index_expr("c", ["b", "a"]).alias("idx"),
+            categorical_posrate_expr("c", ["b", "a"], [0.25, 0.75], 0.5).alias("rate"),
+            uni_lp.alias("uni_lp"), uni_oov.alias("uni_oov"),
+            bi_lp.alias("bi_lp"), bi_miss.alias("bi_miss"),
+        ).collect()
+    assert [(r["idx"], r["rate"]) for r in rows] == [(1, 0.75), (2, 0.5), (2, 0.5)]
+    u = UNIGRAM_LOGPROB
+    assert rows[0]["uni_lp"] == (u["table"] + u["hash"] + UNIGRAM_OOV_LOGPROB) / 3
+    assert [r["uni_oov"] for r in rows] == [1 / 3, 0.0, 1.0]
+    backoff = UNIGRAM_OOV_LOGPROB + BIGRAM_BACKOFF_PENALTY
+    assert rows[0]["bi_lp"] == (BIGRAM_LOGPROB["table hash"] + backoff) / 2
+    assert rows[0]["bi_miss"] == 0.5 and rows[1]["bi_lp"] is None
+
+
 class TestFinalizeOneRow:
     def test_arrow_rewrap_is_exact_and_jobless(self, spark):
         """The rewrapped frame keeps the schema (nullability included)
