@@ -1,12 +1,16 @@
 #!/usr/bin/env python
-"""Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness — runs every registered query, in registry order, at
+$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS] and prints two JSON lines:
+the full record {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "stages": {stage: sec}, "sf": ...}, then a compact
+one without the per-query maps. Each query's time goes to the stage its
+``@query(stage=...)`` declares.
 
-Per-query timing includes full plan execution (collect) but not session
-startup. Queries run twice? No — single cold run per query (the driver
-compares wall-clock against BASELINE; warm-up would flatter us).
+Per-query timing includes full plan execution (``count()``) but not
+session startup. The suite first runs once at sf0.001 to warm JVM
+classloading and codegen (skipped when that is the bench dir); each
+query's time is then the min of $SPARK_GRAFT_BENCH_RUNS (default 3) full
+executions, caches cleared between runs.
 """
 
 from __future__ import annotations
@@ -19,269 +23,49 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# headline set: one per operator family — keep this list stable round-over-round.
-# Maps query -> pipeline stage (BASELINE.md asks per-stage attribution:
-# stats / norm / train / eval, plus the LLM-pipeline families).
-HEADLINE_STAGES = {
-    "tpch_q1": "query",
-    "column_stats": "stats",
-    "ksiv_equal_interval": "stats",
-    "zscore_normalize": "norm",
-    "woe_normalize": "norm",
-    "psi_events_by_day": "stats",
-    "correlation_matrix": "stats",
-    "confusion_matrix_points": "eval",
-    "roc_auc": "eval",
-    "combo_score_join": "eval",
-    "nation_revenue": "query",
-    "ngram_jaccard_pairs": "dedup",
-    "minhash_lsh_pairs": "dedup",
-    "text_stats": "text",
-    "embedding_topk": "similarity",
-    # round-1 additions (new operator families; per-query timings are the
-    # stable unit of comparison, the total only grows with coverage)
-    "embedding_neardup_pairs": "similarity",
-    "embedding_lsh_topk": "similarity",
-    "simhash_neardup_pairs": "dedup",
-    "exact_dedup": "dedup",
-    "dynamic_binning": "stats",
-    "pr_auc": "eval",
-    "weighted_confusion": "eval",
-    "freq_items": "stats",
-    # ---- end of round-1 set (the 23 queries BENCH_r01's total covers;
-    # "baseline_comparable_value" below sums exactly these so the 2x
-    # round-over-round gate compares like-for-like) ----
-    # round-2 additions: queries that previously lacked driver coverage +
-    # the new normalize/eval/hybrid surfaces
-    "multiclass_confusion": "eval",
-    "gain_buckets": "eval",
-    "weighted_roc_auc": "eval",
-    "weighted_pr_auc": "eval",
-    "weighted_gain_buckets": "eval",
-    "eval_meta_score": "eval",
-    "sensitivity_st": "train",
-    "sgd_lr_train": "train",
-    "nn_train": "train",
-    "wdl_forward_pinned": "train",
-    "wdl_train": "train",
-    "wdl_ensemble_pinned": "train",
-    "wdl_train_minibatch": "train",
-    "ga_varselect": "train",
-    "kmeans_step_centroids": "similarity",
-    "embedding_ivf_topk": "similarity",
-    "embedding_ivf_multiprobe": "similarity",
-    "dedup_groups": "dedup",
-    # r3: the registered LSH is now the 16-bit-band scale parameterization
-    # (the toy-width instance was demoted to test-only per VERDICT r2 #2)
-    "embedding_neardup_lsh_scale": "similarity",
-    "salted_group_counts": "stats",
-    "events_props_json": "query",
-    "old_zscale_normalize": "norm",
-    "weight_hybrid_normalize": "norm",
-    "zscale_onehot_normalize": "norm",
-    "category_missing_mean": "norm",
-    "hybrid_column_woe": "norm",
-    # round-3 additions: reporting layer + Structured Streaming replays
-    # (streaming numbers include trigger/sink machinery, hence their own
-    # stage so batch-engine stages stay comparable round-over-round)
-    "gain_chart_export": "eval",
-    "streaming_sessionize": "streaming",
-    "streaming_minhash_dedup": "streaming",
-    "streaming_running_stats": "streaming",
-    "auto_filter": "stats",
-    "native_ntile_binning": "stats",
-    "ksiv_equal_positive": "stats",
-    "varselect_top_ks": "stats",
-    "image_png_features": "multimodal",
-    "video_y4m_features": "multimodal",
-    # round-4 additions: pinned-tree encoding, streaming eval twin, and
-    # the real JPEG codec closing the media family
-    "tree_path_encoding_pinned": "train",
-    "nn_forward_pinned": "train",
-    "streaming_eval_metrics": "streaming",
-    "image_jpeg_features": "multimodal",
-    "pq_encode": "similarity",
-    "pq_adc_topk": "similarity",
-    "streaming_heavy_hitters": "streaming",
-    # complete the multimodal family in the bench (wav/ppm were driver-
-    # proven in r03 but never benched)
-    "audio_wav_features": "multimodal",
-    "audio_corrupt_skip": "multimodal",
-    "warc_corrupt_recovery": "multimodal",
-    "image_ppm_features": "multimodal",
-    "chunk_dup_fraction": "dedup",
-    "unigram_logprob_quality": "text",
-    "hash_stratified_sample": "stats",
-    "kfold_assignment": "train",
-    "streaming_dim_enrichment": "streaming",
-    "streaming_attribution_join": "streaming",
-    # continuation-session round-4 additions: compressed codecs + the
-    # retrieval/decontamination text pair
-    "audio_mulaw_features": "multimodal",
-    "audio_adpcm_features": "multimodal",
-    "video_mjpeg_features": "multimodal",
-    "bm25_topk": "text",
-    "decontamination_overlap": "text",
-    "gopher_quality_flags": "text",
-    "quality_classifier_score": "text",
-    "sequence_packing": "text",
-    "embedding_ivfpq_topk": "similarity",
-    "ann_recall_report": "similarity",
-    "source_mixture_sample": "stats",
-    "streaming_decontamination": "streaming",
-    "warc_extract_stats": "multimodal",
-    "dedup_rep_by_quality": "dedup",
-    "video_gif_features": "multimodal",
-    "wds_shard_stats": "multimodal",
-    "calibration_buckets": "eval",
-    "brier_score": "eval",
-    "corpus_curation_funnel": "dedup",
-    # round-5 additions: pinned scoring halves of the LR/RF families +
-    # the REAL FLAC codec
-    "lr_forward_pinned": "train",
-    "rf_forward_pinned": "train",
-    "audio_flac_features": "multimodal",
-    "streaming_sequence_packing": "streaming",
-    "streaming_source_mixture": "streaming",
-    "pii_redaction": "text",
-    "repetition_signals": "text",
-    "gbt_forward_pinned": "train",
-    "corpus_report_by_source": "text",
-    "zorder_skipping_stats": "query",
-    # round-6 additions: mixture/attribution/dedup/tokenizer surfaces
-    "lang_mixture": "text",
-    "asof_attribution_join": "query",
-    "tpch_q3_shipping_priority": "query",
-    "doc_length_histogram": "text",
-    "poisson_bootstrap_sample": "stats",
-    "mixture_weights_by_source": "text",
-    "semantic_dedup": "similarity",
-    "bpe_tokenize": "text",
-    "streaming_asof_attribution": "streaming",
-    "hilbert_skipping_stats": "query",
-    "tpch_q5_local_supplier": "query",
-    "tpch_q18_large_orders": "query",
-    "revenue_rollup_region_nation": "query",
-    "order_priority_pivot": "query",
-    "customers_without_urgent_orders": "query",
-    "rag_chunk_spans": "text",
-    "countmin_heavy_hitters": "stats",
-    "bloom_membership_report": "stats",
-    "hll_distinct_report": "stats",
-    "streaming_countmin": "streaming",
-    "dedup_groups_distributed": "dedup",
-    "hll_union_report": "stats",
-    "dq_constraint_report": "stats",
-    "hll_by_source": "stats",
-    "session_window_batch": "query",
-    "tpch_q4_late_shipments": "query",
-    "events_moving_avg": "query",
-    "bpe_fertility_by_source": "text",
-    "pagerank_part_supplier": "query",
-    "bigram_logprob_quality": "text",
-    "cohort_retention": "query",
-    "streaming_gold_table": "streaming",
-    "event_funnel_analysis": "query",
-    "tpch_q6_forecast_revenue": "query",
-    "tpch_q7_volume_shipping": "query",
-    "tpch_q8_market_share": "query",
-    "tpch_q9_product_profit": "query",
-    "tpch_q10_returned_items": "query",
-    "tpch_q13_order_count_distribution": "query",
-    "tpch_q14_promo_effect": "query",
-    "tpch_q15_top_supplier": "query",
-    "tpch_q16_supplier_relation": "query",
-    "tpch_q17_small_qty_revenue": "query",
-    "tpch_q19_disjunctive_revenue": "query",
-    "tpch_q21_waiting_supplier": "query",
-    "tpch_q22_sales_opportunity": "query",
-    "robust_column_stats": "stats",
-    "triangle_count_parts": "query",
-    "matryoshka_recall": "similarity",
-    "order_status_priority_cube": "query",
-    "customer_order_gaps": "query",
-    "salted_skew_join_revenue": "query",
-    "fuzzy_vocab_pairs": "dedup",
-    "cdc_merge_snapshot": "query",
-    "scd2_segment_history": "query",
-    "streaming_exact_dedup": "streaming",
-    "streaming_outer_attribution": "streaming",
-    "busy_window_range_join": "query",
-    "rfm_customer_segments": "query",
-    "events_anomaly_zscore": "stats",
-    "compaction_bin_packing": "query",
-    "pca_power_iteration": "similarity",
-    # round-7: close the bench coverage gap (VERDICT r6 "What's missing
-    # #5") — every registered query gets a stage mapping, so BENCH
-    # n_queries == registry count and the 2x gate sees the whole surface.
-    "purify_filter": "query",
-    "unpivot_column_totals": "query",
-    "topk_orders_per_priority": "query",
-    "shingleset_dedup": "dedup",
-    "doc_fingerprint": "text",
-    "token_count_by_source": "text",
-    "ksiv_categorical": "stats",
-    "ksiv_equal_population": "stats",
-    "ksiv_equal_negative": "stats",
-    "ksiv_weighted": "stats",
-    "varselect_top_iv": "stats",
-    "bin_avg_score": "eval",
-    "date_to_unix": "norm",
-    "concat_fields": "norm",
-    "segment_expansion": "query",
-    "events_sessionize": "query",
-    "distinct_counts": "stats",
-    "psi_by_column": "stats",
-    "stratified_sample": "stats",
-    "sensitivity_se": "train",
-    "kfold_cv": "train",
-    "grid_search": "train",
-    "score_rescale": "eval",
-    "multiclass_tag_recode": "norm",
-    "text_roundtrip_stats": "text",
-    "rf_train": "train",
-    "streaming_drift_psi": "streaming",
-    "reason_codes": "train",
-    "tree_path_encoding": "train",
-    "onehot_normalize": "norm",
-    "discrete_zscore_normalize": "norm",
-    "woe_zscore_normalize": "norm",
-    "hybrid_normalize": "norm",
-    "categorical_index_normalize": "norm",
-    "asis_woe_normalize": "norm",
-    "invalid_tag_filter": "query",
-    "mean_impute": "norm",
-    "feature_importance": "train",
-    "confusion_matrix_scalable": "eval",
-    # round-7 new operator: NSColumn namespaced-header addressing
-    "ns_purify_filter": "query",
-    # round-7 TPC-H completion: the last 4 classic shapes
-    "tpch_q2_min_cost_supplier": "query",
-    "tpch_q11_important_stock": "query",
-    "tpch_q12_priority_shipping": "query",
-    "tpch_q20_excess_stock": "query",
-}
-HEADLINE = list(HEADLINE_STAGES)
-
-# the stable r01 subset — the set BENCH_r01's "value" (31.3s) totals over.
-R01_HEADLINE = HEADLINE[: HEADLINE.index("multiclass_confusion")]
+# The stable r01 subset: BENCH_r01's "value" (31.3s) totals exactly these
+# 23 queries, so "baseline_comparable_value" compares like with like
+# across runs whatever else the registry gains.
+R01_HEADLINE = (
+    "tpch_q1",
+    "column_stats",
+    "ksiv_equal_interval",
+    "zscore_normalize",
+    "woe_normalize",
+    "psi_events_by_day",
+    "correlation_matrix",
+    "confusion_matrix_points",
+    "roc_auc",
+    "combo_score_join",
+    "nation_revenue",
+    "ngram_jaccard_pairs",
+    "minhash_lsh_pairs",
+    "text_stats",
+    "embedding_topk",
+    "embedding_neardup_pairs",
+    "embedding_lsh_topk",
+    "simhash_neardup_pairs",
+    "exact_dedup",
+    "dynamic_binning",
+    "pr_auc",
+    "weighted_confusion",
+    "freq_items",
+)
 
 WARMUP_SF_DIR = "/root/testdata/sf0.001"
 
-# Calibration probe (VERDICT r9 item 3): three same-tree full runs varied
-# 213->246s across one afternoon, so the committed artifact was hostage to
-# box health and every drift adjudication needed an ad-hoc worktree A/B.
+# Calibration probe: three same-tree full runs varied 213->246s across one
+# afternoon, so a raw total says as much about box health as about code.
 # The probe is a FIXED, data-independent, CPU-bound Spark job (xxhash64
 # fold over spark.range — no I/O, no shuffle beyond the 32->1 agg, no
 # Python) timed min-of-3 before and after the suite; probe time scales
 # with the same box slowness that inflates query time, so
 # normalized = raw * (PROBE_REF_S / probe_s) is comparable across days.
-# PROBE_REF_S pins the probe's cost on the round-10 box the day this
-# landed; future rounds adjudicate drift against probe_s first and only
-# A/B trees when normalized numbers still disagree.
+# PROBE_REF_S pins the probe's cost on a healthy box; adjudicate drift
+# against probe_s first and A/B trees only when normalized numbers still
+# disagree.
 PROBE_ROWS = 4_000_000_000
-# healthy-box probe cost pinned when the probe landed (r10; three
-# min-of-3 samples 0.739/0.713/0.714 on a quiet local[32])
+# three min-of-3 samples 0.739/0.713/0.714 on a quiet local[32]
 PROBE_REF_S = 0.72
 
 
@@ -322,9 +106,8 @@ def nearest_probe_factor(probe_samples: list[dict], qpos: int) -> float:
     return PROBE_REF_S / ((left + right) / 2.0)
 
 
-#: Stall re-measure trigger (VERDICT r11 item 8): r11's adjudication saw
-#: sporadic multi-second scheduler/IO stalls land inside 0.1-0.5s
-#: queries (8x spreads on a probe-flat box).
+#: Stall re-measure trigger: sporadic multi-second scheduler/IO stalls
+#: land inside 0.1-0.5s queries (8x spreads on a probe-flat box).
 STALL_RATIO = 4.0
 
 
@@ -348,20 +131,25 @@ def apply_stall_remeasure(runs: list[float], rerun) -> tuple[list[float], float 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from shifu_spark.queries import QUERIES, STAGES
+    from shifu_spark.session import get_spark, local_cpus
+
+    # loud on drift: a renamed R01 query silently dropped from the run
+    # would read as a phantom improvement of baseline_comparable_value
+    missing = [n for n in R01_HEADLINE if n not in QUERIES]
+    if missing:
+        raise ValueError(f"bench names not in registry: {missing}")
+    headline = list(QUERIES)
     # optional comma-separated subset (e.g. the sf1 scale-proof families)
     only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     if only:
-        subset = [n for n in only.split(",") if n]
-        unknown = sorted(set(subset) - set(HEADLINE))
+        subset = {n for n in only.split(",") if n}
+        unknown = sorted(subset - set(QUERIES))
         if unknown:
             # a typo'd subset would otherwise run EMPTY and print a
             # valid-looking JSON line over nothing
             raise ValueError(f"SPARK_GRAFT_BENCH_QUERIES names not in bench: {unknown}")
-        headline = [n for n in HEADLINE if n in set(subset)]
-    else:
-        headline = HEADLINE
-    from shifu_spark.queries import QUERIES
-    from shifu_spark.session import get_spark, local_cpus
+        headline = [n for n in headline if n in subset]
 
     spark = get_spark("shifu_spark_bench")
     # Warm JVM classloading / codegen / Arrow paths by running the suite
@@ -370,19 +158,17 @@ def main() -> None:
     # JIT noise. Skipped if the warmup dir is the bench dir.
     if os.path.isdir(WARMUP_SF_DIR) and os.path.realpath(WARMUP_SF_DIR) != os.path.realpath(sf_dir):
         for name in headline:
-            fn = QUERIES.get(name)
-            if fn is not None:
-                try:
-                    fn(spark, WARMUP_SF_DIR).count()
-                except Exception:
-                    pass
+            try:
+                QUERIES[name](spark, WARMUP_SF_DIR).count()
+            except Exception:
+                pass
         spark.catalog.clearCache()
 
-    # VERDICT r10 item 5: pre/post probes alone can't localize box-health
-    # swings DURING the run (r10 saw pre 0.91 vs post 0.61 — ~50% intra-
-    # run drift), so sample the probe mid-suite too (~every quarter of
-    # the query list) and normalize each query by its NEAREST bracketing
-    # probe pair. probe_samples records (queries completed, probe_s).
+    # pre/post probes alone can't localize box-health swings DURING the
+    # run (pre 0.91 vs post 0.61 has been seen — ~50% intra-run drift),
+    # so sample the probe mid-suite too (~every quarter of the query
+    # list) and normalize each query by its NEAREST bracketing probe
+    # pair. probe_samples records (queries completed, probe_s).
     probe_pre = calibration_probe(spark)
     probe_samples: list[dict[str, float]] = [{"after": 0, "s": probe_pre}]
     timings: dict[str, float] = {}
@@ -390,27 +176,16 @@ def main() -> None:
     stall_remeasured: dict[str, float] = {}  # name -> discarded worst run (s)
     positions: dict[str, int] = {}  # 1-based suite position per query
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # loud on drift: a renamed registry query silently dropped from the
-    # run would read as a phantom performance improvement, and a typo'd
-    # SPARK_GRAFT_BENCH_QUERIES subset would print a valid-looking JSON
-    # line over a partial run (__spark_entry__ raises on unknown
-    # _PRIORITY names for the same drift class)
-    missing = [n for n in headline if n not in QUERIES]
-    if missing:
-        raise ValueError(f"bench names not in registry: {missing}")
-    unmapped = [n for n in QUERIES if n not in HEADLINE_STAGES]
-    if not only and unmapped:
-        raise ValueError(f"registry queries missing a bench stage mapping: {unmapped}")
     mid_every = max(1, -(-len(headline) // 4))  # ceil: ~3 mid-suite probes
     for qi, name in enumerate(headline, 1):
         fn = QUERIES[name]
         positions[name] = qi
-        # min of THREE full executions (VERDICT r3 "What's wrong #4":
-        # n=2 let a one-off GC/scheduler stall hit both runs and read as
-        # a phantom 2x regression). The min is the engine's actual cost
+        # min of n_runs (default THREE) full executions: with n=2 a
+        # one-off GC/scheduler stall can hit both runs and read as a
+        # phantom 2x regression. The min is the engine's actual cost
         # (cache cleared between runs, every run executes the full
         # plan); the per-query spread (max-min)/min is emitted so the
-        # judge can see which numbers are jitter-dominated.
+        # reader can see which numbers are jitter-dominated.
         def one_run(fn=fn) -> float:
             t0 = time.perf_counter()
             fn(spark, sf_dir).count()
@@ -423,11 +198,11 @@ def main() -> None:
             # when the Python DataFrame is GC'd and the ContextCleaner
             # drops the JVM reference. Left to chance, ~100 queries of
             # checkpoint blocks pile up in executor storage and the next
-            # big shuffle pays an eviction storm — r12 saw a consistent
-            # 13-42s first-run spike on semantic_dedup mid-suite that
-            # vanishes in isolation. Collect promptly so each query is
-            # measured against a clean block manager, not its
-            # predecessors' leftovers.
+            # big shuffle pays an eviction storm (a consistent 13-42s
+            # first-run spike on semantic_dedup mid-suite that vanishes in
+            # isolation). Collect promptly so each query is measured
+            # against a clean block manager, not its predecessors'
+            # leftovers.
             gc.collect()
             return dt
 
@@ -445,16 +220,14 @@ def main() -> None:
 
     probe_post = calibration_probe(spark, warm=False)
     probe_samples.append({"after": len(headline), "s": probe_post})
-    # suite-level factor: mean over ALL probe samples (pre + mid + post;
-    # same quantity the r10 pre/post mean estimated, now better sampled).
+    # suite-level factor: mean over ALL probe samples (pre + mid + post).
     # factor < 1 = box slower than the pinned reference -> normalized
     # totals shrink accordingly; drift adjudication reads these first.
     probe_mean = sum(p["s"] for p in probe_samples) / len(probe_samples)
     probe_factor = round(PROBE_REF_S / probe_mean, 4)
-    # ADVICE r11: probe_factor switched definition in r11 (pre/post pair
-    # -> mean over pre+mid+post), so r<=10 BENCH artifacts' normalized
-    # fields are not methodologically identical to r11+ ones. Carry the
-    # legacy pair factor alongside so cross-round drift adjudication can
+    # probe_factor was once the pre/post-pair mean, so older BENCH
+    # records' normalized fields are not comparable with the all-sample
+    # mean. Carry the pair factor alongside so drift adjudication can
     # compare like with like, and name the method in the artifact itself.
     probe_factor_prepost = round(PROBE_REF_S / ((probe_pre + probe_post) / 2.0), 4)
 
@@ -473,18 +246,18 @@ def main() -> None:
             "for cross-round comparison"
         ),
         "probe_factor_prepost": probe_factor_prepost,
-        # stall re-measure rule (VERDICT r11 item 8): a query whose
-        # slowest run exceeded STALL_RATIO x its fastest got ONE extra
-        # run; timing is min over all full executions and the single
-        # worst (discarded) run is recorded here, so one-off box stalls
-        # stop polluting committed spreads while bimodal queries stay
-        # visible (they stall again in the extra run)
+        # stall re-measure rule: a query whose slowest run exceeded
+        # STALL_RATIO x its fastest got ONE extra run; timing is min over
+        # all full executions and the single worst (discarded) run is
+        # recorded here, so one-off box stalls stop polluting committed
+        # spreads while bimodal queries stay visible (they stall again
+        # in the extra run)
         "stall_remeasured": stall_remeasured,
         "stall_ratio": STALL_RATIO,
         # box-stall tally: queries where one run took >2x the min
-        # (r11 adjudication found 8-16s stalls inside ~2s queries on a
-        # probe-fast box — a high count says the box, not the code,
-        # and warns that even min-of-n may have eaten a stall)
+        # (8-16s stalls inside ~2s queries happen on a probe-fast box —
+        # a high count says the box, not the code, and warns that even
+        # min-of-n may have eaten a stall)
         "stalled_queries": sum(1 for v in spreads.values() if v > 1.0),
     }
 
@@ -496,7 +269,7 @@ def main() -> None:
     stages: dict[str, float] = {}
     normalized_stages: dict[str, float] = {}
     for name, sec in timings.items():
-        stage = HEADLINE_STAGES.get(name, "query")
+        stage = STAGES[name]
         stages[stage] = round(stages.get(stage, 0.0) + sec, 3)
         # per-stage normalization by each query's NEAREST probe pair —
         # robust to intra-run box swings the suite-level factor smears
@@ -514,8 +287,8 @@ def main() -> None:
                 "query_spread": spreads,
                 "stages": stages,
                 # total over the exact query set BENCH_r01 measured —
-                # compare THIS to r01's value (31.3s); the headline total
-                # above grows with coverage (43 queries vs r01's 23)
+                # compare THIS to BENCH_r01's value (31.3s); the headline
+                # total above grows with the registry
                 "baseline_comparable_value": round(
                     sum(sec for name, sec in timings.items() if name in R01_HEADLINE), 3
                 ),
@@ -524,16 +297,16 @@ def main() -> None:
                 ),
                 # train-family queries carry model-fit cost with high
                 # run-to-run variance; splitting them keeps the eval/curve
-                # signal clean (VERDICT r2 bench-trim ask)
+                # signal clean
                 "core_value": round(
-                    sum(s for n, s in timings.items() if HEADLINE_STAGES.get(n) != "train"), 3
+                    sum(s for n, s in timings.items() if STAGES[n] != "train"), 3
                 ),
                 "train_value": round(
-                    sum(s for n, s in timings.items() if HEADLINE_STAGES.get(n) == "train"), 3
+                    sum(s for n, s in timings.items() if STAGES[n] == "train"), 3
                 ),
-                # box-health calibration (VERDICT r9 item 3): raw totals
-                # above, probe-normalized twins below; adjudicate drift
-                # against probe_factor before suspecting the code
+                # box-health calibration: raw totals above, probe-
+                # normalized twins below; adjudicate drift against
+                # probe_factor before suspecting the code
                 **probe_fields,
                 "normalized_value": round(sum(timings.values()) * probe_factor, 3),
                 "normalized_stages": normalized_stages,
@@ -544,10 +317,9 @@ def main() -> None:
                 "sf": sf_val,
     }
     print(json.dumps(full_payload))
-    # VERDICT r4 "What's wrong #1": with ~80 per-query entries the full
-    # JSON line outgrew the driver's 2000-char stdout tail, truncating
-    # mid-dict and leaving the headline unrecoverable from the artifact.
-    # Emit a compact, self-contained metric line LAST so the tail always
+    # with ~80 per-query entries the full JSON line outgrows a 2000-char
+    # stdout tail, truncating mid-dict and leaving the headline
+    # unrecoverable from the artifact. Emit a compact, self-contained metric line LAST so the tail always
     # captures the gate numbers; it is valid on its own (metric/value/
     # unit/sf) if a consumer parses only the final line.
     print(
@@ -561,7 +333,7 @@ def main() -> None:
                     sum(sec for name, sec in timings.items() if name in R01_HEADLINE), 3
                 ),
                 "core_value": round(
-                    sum(s for n, s in timings.items() if HEADLINE_STAGES.get(n) != "train"), 3
+                    sum(s for n, s in timings.items() if STAGES[n] != "train"), 3
                 ),
                 "stages": stages,
                 **probe_fields,
@@ -571,10 +343,8 @@ def main() -> None:
             }
         )
     )
-    # VERDICT r12 item 1: the driver keeps only the last ~3k chars of
-    # bench stdout, so the full per-query map (dropped from the compact
-    # final line by the r4 truncation fix) was unrecoverable in r12 and
-    # PERF_r12's per_query/scaling blocks came up empty. Persist the
+    # a consumer that keeps only the last ~3k chars of stdout loses the
+    # full per-query map (the compact final line drops it). Persist the
     # COMPLETE record — queries, query_spread, probe samples — plus the
     # core count to a sidecar JSONL next to this file; keep the last 8
     # records so both the main and the low-cpu scaling run survive and

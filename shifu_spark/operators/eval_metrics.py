@@ -58,25 +58,6 @@ def clamp_weight(weight_col: str) -> Column:
     return clamp_weight_expr(F.col(weight_col).try_cast("double"))
 
 
-def _score_bounds(df: DataFrame, score_col: str, n: int | None) -> list[float]:
-    """Range-bucket boundaries from the RAW score column.
-
-    Not on the default path: ``prefix_sums`` derives its bounds from
-    the persisted points table, so the raw data is scanned once instead
-    of twice. Kept for callers that pass explicit ``bounds``
-    (differential tests)."""
-    spark = df.sparkSession
-    k = n or spark.sparkContext.defaultParallelism
-    qs = [i / k for i in range(1, k)]
-    s = F.col(score_col).cast("double")
-    # same population as _score_points: non-finite scores are not eval
-    # points, so they must not steer the bucket boundaries either
-    row = df.agg(
-        F.percentile_approx(F.when(~_is_nonvalue(s), s), qs, 1000).alias("b")
-    ).collect()
-    return [b for b in (row[0]["b"] or []) if b is not None]
-
-
 def _score_points(
     df: DataFrame, score_col: str, label_expr: Column, weight_col: str | None
 ) -> DataFrame:
@@ -160,8 +141,6 @@ def prefix_sums(
     cols: list[str],
     descending: bool = True,
     num_ranges: int | None = None,
-    persist: bool = False,
-    bounds: list[float] | None = None,
     cache_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Inclusive prefix-sum of ``cols`` in ``order_col`` order.
@@ -175,11 +154,11 @@ def prefix_sums(
     plan estimate, capped at ``defaultParallelism``, unless
     ``num_ranges`` is given.
 
-    One range (and no explicit ``bounds``): ``__pid`` is the constant 0,
-    ``cum_*`` is a running window and ``tot_*`` the unbounded window over
-    that one bucket. Nothing is persisted or collected and there is no
-    offsets join, so ``cache_out`` stays empty. The bucket is one task,
-    which the size rule keeps to one advisory partition of points.
+    One range: ``__pid`` is the constant 0, ``cum_*`` is a running window
+    and ``tot_*`` the unbounded window over that one bucket. Nothing is
+    persisted or collected and there is no offsets join, so ``cache_out``
+    stays empty. The bucket is one task, which the size rule keeps to one
+    advisory partition of points.
 
     More ranges:
       * the input points are persisted once (the cache goes to
@@ -203,10 +182,6 @@ def prefix_sums(
       * the (#buckets)-row offsets table is broadcast back and added to
         the within-bucket running sum (the window shuffles on the bucket
         id, spreading buckets across every core).
-
-    Explicit ``bounds`` take the multi-range form with those boundaries;
-    ``persist=True`` then persists the bucketed frame (handed to
-    ``cache_out``).
     """
     key = F.desc(order_col) if descending else F.asc(order_col)
     wpart = (
@@ -214,7 +189,7 @@ def prefix_sums(
         .orderBy(key)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    n = _range_count(df, num_ranges) if bounds is None else None
+    n = _range_count(df, num_ranges)
     if n == 1:
         # Catalyst folds the constant bucket away: one SinglePartition
         # exchange, and WindowExec's "No Partition Defined" warning is
@@ -223,17 +198,14 @@ def prefix_sums(
         wbucket = Window.partitionBy("__pid")
         one = one.select("*", *[F.sum(c).over(wbucket).alias(f"tot_{c}") for c in cols])
         return one.select("*", *[F.sum(c).over(wpart).alias(f"cum_{c}") for c in cols])
-    if bounds is None:
-        # one materialization pays for the boundary collect, the
-        # per-bucket totals branch and the main cumulative branch
-        if cache_out is not None:
-            df = df.persist()
-            cache_out.append(df)
-        persist = False
-        qs = [i / n for i in range(1, n)]
-        bounds_row = df.agg(F.percentile_approx(order_col, qs, 1000).alias("b")).collect()
-        bounds = [b for b in (bounds_row[0]["b"] or []) if b is not None]
-    bounds = sorted({float(b) for b in bounds})
+    # one materialization pays for the boundary collect, the per-bucket
+    # totals branch and the main cumulative branch
+    if cache_out is not None:
+        df = df.persist()
+        cache_out.append(df)
+    qs = [i / n for i in range(1, n)]
+    bounds_row = df.agg(F.percentile_approx(order_col, qs, 1000).alias("b")).collect()
+    bounds = sorted({float(b) for b in (bounds_row[0]["b"] or []) if b is not None})
     if bounds:
         arr = F.array(*[F.lit(b) for b in bounds])
         # ascending bucket id = #{boundaries < value}; ties share a bucket
@@ -246,12 +218,6 @@ def prefix_sums(
     # no physical repartition needed: the per-bucket window below
     # clusters+sorts on __pid itself, and the offsets join is by value
     parted = df.withColumn("__pid", bucket)
-    if persist:
-        parted = parted.persist()
-        # hand the cache back so the caller can unpersist in a finally —
-        # run-once queries would otherwise leak it for the session's life
-        if cache_out is not None:
-            cache_out.append(parted)
     totals = parted.groupBy("__pid").agg(*[F.sum(c).alias(f"__t_{c}") for c in cols])
     # bounded: these unpartitioned windows run over the per-bucket totals
     # (#buckets <= defaultParallelism rows), not the data — the WindowExec
@@ -427,72 +393,6 @@ def _weighted_roc_auc(
             c.unpersist()
 
 
-def pr_auc_trapezoid(
-    points: DataFrame, round_to: int | None = 6, num_ranges: int | None = None
-) -> DataFrame:
-    """PR AUC: trapezoid over (recall, precision) points ordered by recall.
-
-    Mirrors AreaUnderCurve.ofPr (:56-133): Σ (r_i − r_{i-1})·(p_i + p_{i-1})/2.
-
-    Distributed adjacent-pair scan: bucket by RECALL VALUE (quantile
-    boundaries collected once as literals — deterministic under any
-    physical partitioning, same rationale as prefix_sums), pair rows
-    WITHIN each bucket under a bucket-local lag window, and close the
-    #buckets−1 boundary pairs from the per-bucket first/last rows (one
-    tiny min_by/max_by agg, stitched on the driver). Recall ties share a
-    bucket by construction, so tie groups never split."""
-    spark = points.sparkSession
-    n = num_ranges or spark.sparkContext.defaultParallelism
-    pts = points.select("recall", "precision").filter(F.col("recall").isNotNull())
-    qs = [i / n for i in range(1, n)]
-    brow = pts.agg(F.percentile_approx("recall", qs, 1000).alias("b")).collect()
-    rbounds = sorted({float(b) for b in (brow[0]["b"] or []) if b is not None})
-    if rbounds:
-        arr = F.array(*[F.lit(b) for b in rbounds])
-        bucket = F.aggregate(
-            arr, F.lit(0), lambda acc, b: acc + F.when(F.col("recall") > b, 1).otherwise(0)
-        )
-    else:
-        bucket = F.lit(0)
-    pid = pts.withColumn("__pid", bucket).persist()
-    try:
-        # tie-deterministic endpoints: recall ties resolve by precision
-        # DESC (the score-descending scan order every other path uses)
-        okey = F.struct(F.col("recall").alias("r"), (-F.col("precision")).alias("np"))
-        bmap = (
-            pid.groupBy("__pid")
-            .agg(
-                F.min_by(F.struct("recall", "precision"), okey).alias("first"),
-                F.max_by(F.struct("recall", "precision"), okey).alias("last"),
-            )
-            .collect()
-        )
-        by_pid = {r["__pid"]: r for r in bmap}
-        boundary_area = 0.0
-        pids = sorted(by_pid)
-        for prev, cur in zip(pids, pids[1:]):
-            a, b = by_pid[prev]["last"], by_pid[cur]["first"]
-            if a["precision"] is None or b["precision"] is None:
-                continue
-            boundary_area += (b["recall"] - a["recall"]) * (b["precision"] + a["precision"]) / 2.0
-        wprev = Window.partitionBy("__pid").orderBy(F.asc("recall"), F.desc("precision"))
-        t = (
-            pid.withColumn("prev_r", F.lag("recall").over(wprev))
-            .withColumn("prev_p", F.lag("precision").over(wprev))
-            .filter(F.col("prev_r").isNotNull())
-        )
-        inner = F.sum(
-            (F.col("recall") - F.col("prev_r")) * (F.col("precision") + F.col("prev_p")) / 2.0
-        )
-        auc = F.coalesce(inner, F.lit(0.0)) + F.lit(boundary_area)
-        if round_to is not None:
-            auc = F.round(auc, round_to)
-        # finalize eagerly so the cache can be released deterministically
-        return _finalize_one_row(t.agg(auc.alias("pr_auc")))
-    finally:
-        pid.unpersist()
-
-
 def gain_buckets_df(points: DataFrame, num_buckets: int = 10, round_to: int | None = 6) -> DataFrame:
     """Bucketed gains table: first point crossing each 1/N "action rate".
 
@@ -531,10 +431,10 @@ def curve_metrics_df(
 ) -> DataFrame:
     """ROC AUC + PR AUC + KS in ONE prefix scan.
 
-    The naive composition (roc_auc_df + confusion_points_df +
-    pr_auc_trapezoid) runs three independent prefix machineries — three
-    groupBys and two extra range shuffles over the same points. This form
-    derives all three metrics from a single score-desc cumulative scan:
+    Composing the metrics separately (roc_auc_df, plus a PR AUC over
+    confusion_points_df) would run one prefix machinery each — a groupBy
+    and range shuffle apiece over the same points. This form derives all
+    three metrics from a single score-desc cumulative scan:
 
       * ROC AUC as the tie-corrected trapezoid over counts,
         U = Σ neg_i·(tp_{i-1}+tp_i)/2 — algebraically identical to the
@@ -698,10 +598,7 @@ def weighted_curve_metrics_df(
         falls), plus the #buckets−1 boundary pairs from one tiny agg;
       * weighted KS = max(wTPR − wFPR).
 
-    One prefix machinery, not two: composing ``prefix_sums`` with
-    ``pr_auc_trapezoid`` would pay a second percentile pass and persist
-    over the same points. Returns one row
-    (weighted_auc, weighted_pr_auc, weighted_ks).
+    Returns one row (weighted_auc, weighted_pr_auc, weighted_ks).
     """
     return _curve_metrics_impl(
         df, score_col, label_expr, weight_col, round_to, num_ranges,
@@ -736,7 +633,8 @@ def weighted_gain_buckets_df(
     """Weighted gains table: first score point at or past each weighted
     action-rate 1/N boundary (ConfusionMatrix.java weighted bucket walk).
     Action rate = (wtp+wfp)/total_weight; per bucket the max-score point
-    is picked with one max_by agg."""
+    is picked with one max_by agg. A zero total weight gives NULL rates,
+    not a divide-by-zero, like the other weighted curves."""
     pts = _score_points(df, score_col, label_expr, weight_col)
     cum = prefix_sums(
         pts, "score", ["wpos", "wneg"], descending=True, num_ranges=num_ranges,
@@ -744,7 +642,7 @@ def weighted_gain_buckets_df(
     )
     tot_w = F.col("tot_wpos") + F.col("tot_wneg")
     t = (
-        cum.withColumn("action_rate", (F.col("cum_wpos") + F.col("cum_wneg")) / tot_w)
+        cum.withColumn("action_rate", F.try_divide(F.col("cum_wpos") + F.col("cum_wneg"), tot_w))
         .withColumn("wprecision", F.try_divide(F.col("cum_wpos"), F.col("cum_wpos") + F.col("cum_wneg")))
         .withColumn("wrecall", F.try_divide(F.col("cum_wpos"), F.col("tot_wpos")))
         .withColumn("bucket", F.least(F.floor(F.col("action_rate") * num_buckets), F.lit(num_buckets)))

@@ -99,73 +99,74 @@ def run_stats(df: DataFrame, mc: ModelConfig, ccs: list[ColumnConfig]) -> list[C
     ds, st = mc.dataset, mc.stats
     tag, pos, neg = ds.target_column, ds.pos_tags, ds.neg_tags
     work = df.filter(F.col(tag).isin(pos + neg)) if tag else df
-    work = work.cache()
-
     num_cols = [c.column_name for c in ccs if c.is_candidate and c.is_numerical]
     cat_cols = [c.column_name for c in ccs if c.is_candidate and c.is_categorical]
     by_name = {c.column_name: c for c in ccs}
 
-    # numeric moments (single wide agg)
-    for s in numeric_column_stats(work, num_cols):
-        cc = by_name[s.column_name]
-        cs = cc.column_stats
-        cs.total_count = s.total_count
-        cs.missing_count = s.missing_count
-        cs.valid_num_count = s.valid_count
-        cs.mean, cs.std_dev = s.mean, s.std_dev
-        cs.min, cs.max = s.min, s.max
-        cs.skewness, cs.kurtosis = s.skewness, s.kurtosis
-        cs.p25th, cs.median, cs.p75th = s.p25, s.median, s.p75
-        cs.distinct_count = s.distinct_count
-        cs.missing_percentage = s.missing_percentage
+    work = work.cache()
+    try:
+        # numeric moments (single wide agg)
+        for s in numeric_column_stats(work, num_cols):
+            cc = by_name[s.column_name]
+            cs = cc.column_stats
+            cs.total_count = s.total_count
+            cs.missing_count = s.missing_count
+            cs.valid_num_count = s.valid_count
+            cs.mean, cs.std_dev = s.mean, s.std_dev
+            cs.min, cs.max = s.min, s.max
+            cs.skewness, cs.kurtosis = s.skewness, s.kurtosis
+            cs.p25th, cs.median, cs.p75th = s.p25, s.median, s.p75
+            cs.distinct_count = s.distinct_count
+            cs.missing_percentage = s.missing_percentage
 
-    # numeric boundaries per the configured BinningMethod
-    boundaries = equal_population_boundaries(
-        work, num_cols, st.max_num_bin, method=st.binning_method,
-        tag_col=tag, pos_tags=pos, neg_tags=neg,
-    )
-    for c, b in boundaries.items():
-        by_name[c].column_binning.bin_boundary = b
-        by_name[c].column_binning.length = len(b) + 1  # + missing slot
+        # numeric boundaries per the configured BinningMethod
+        boundaries = equal_population_boundaries(
+            work, num_cols, st.max_num_bin, method=st.binning_method,
+            tag_col=tag, pos_tags=pos, neg_tags=neg,
+        )
+        for c, b in boundaries.items():
+            by_name[c].column_binning.bin_boundary = b
+            by_name[c].column_binning.length = len(b) + 1  # + missing slot
 
-    for c, cats in categorical_bins(work, cat_cols, st.cate_max_num_bin).items():
-        by_name[c].column_binning.bin_category = cats
-        by_name[c].column_binning.length = len(cats) + 1
+        for c, cats in categorical_bins(work, cat_cols, st.cate_max_num_bin).items():
+            by_name[c].column_binning.bin_category = cats
+            by_name[c].column_binning.length = len(cats) + 1
 
-    # bin counts + KS/IV/WOE in one melt pass (numeric cols)
-    if num_cols and tag:
-        counts = bin_counts_df(work, num_cols, boundaries, tag, pos, ds.weight_column).collect()
-        per_col: dict[str, dict[int, tuple]] = {}
-        for r in counts:
-            per_col.setdefault(r["column_name"], {})[r["bin"]] = (
-                r["bin_count_neg"], r["bin_count_pos"], r["bin_weight_neg"], r["bin_weight_pos"],
-            )
-        for c in num_cols:
-            cc = by_name[c]
-            nb = len(boundaries[c]) + 1  # + missing bin (last slot)
-            neg_a = [0] * nb
-            pos_a = [0] * nb
-            wneg = [0.0] * nb
-            wpos = [0.0] * nb
-            for b, (cn, cp, wn, wp) in per_col.get(c, {}).items():
-                neg_a[b], pos_a[b], wneg[b], wpos[b] = cn, cp, wn, wp
-            bn = cc.column_binning
-            bn.bin_count_neg, bn.bin_count_pos = neg_a, pos_a
-            bn.bin_weighted_neg, bn.bin_weighted_pos = wneg, wpos
-            bn.bin_pos_rate = [
-                (p / (p + n) if (p + n) > 0 else 0.0) for n, p in zip(neg_a, pos_a)
-            ]
-            m = column_metrics_from_counts(neg_a, pos_a)
-            if m:
-                cc.column_stats.ks, cc.column_stats.iv, cc.column_stats.woe = m.ks, m.iv, m.woe
-                bn.bin_count_woe = m.bin_woe
-            wm = column_metrics_from_counts(wneg, wpos)
-            if wm:
-                cc.column_stats.weighted_ks = wm.ks
-                cc.column_stats.weighted_iv = wm.iv
-                cc.column_stats.weighted_woe = wm.woe
-                bn.bin_weighted_woe = wm.bin_woe
-    work.unpersist()
+        # bin counts + KS/IV/WOE in one melt pass (numeric cols)
+        if num_cols and tag:
+            counts = bin_counts_df(work, num_cols, boundaries, tag, pos, ds.weight_column).collect()
+            per_col: dict[str, dict[int, tuple]] = {}
+            for r in counts:
+                per_col.setdefault(r["column_name"], {})[r["bin"]] = (
+                    r["bin_count_neg"], r["bin_count_pos"], r["bin_weight_neg"], r["bin_weight_pos"],
+                )
+            for c in num_cols:
+                cc = by_name[c]
+                nb = len(boundaries[c]) + 1  # + missing bin (last slot)
+                neg_a = [0] * nb
+                pos_a = [0] * nb
+                wneg = [0.0] * nb
+                wpos = [0.0] * nb
+                for b, (cn, cp, wn, wp) in per_col.get(c, {}).items():
+                    neg_a[b], pos_a[b], wneg[b], wpos[b] = cn, cp, wn, wp
+                bn = cc.column_binning
+                bn.bin_count_neg, bn.bin_count_pos = neg_a, pos_a
+                bn.bin_weighted_neg, bn.bin_weighted_pos = wneg, wpos
+                bn.bin_pos_rate = [
+                    (p / (p + n) if (p + n) > 0 else 0.0) for n, p in zip(neg_a, pos_a)
+                ]
+                m = column_metrics_from_counts(neg_a, pos_a)
+                if m:
+                    cc.column_stats.ks, cc.column_stats.iv, cc.column_stats.woe = m.ks, m.iv, m.woe
+                    bn.bin_count_woe = m.bin_woe
+                wm = column_metrics_from_counts(wneg, wpos)
+                if wm:
+                    cc.column_stats.weighted_ks = wm.ks
+                    cc.column_stats.weighted_iv = wm.iv
+                    cc.column_stats.weighted_woe = wm.woe
+                    bn.bin_weighted_woe = wm.bin_woe
+    finally:
+        work.unpersist()
     return ccs
 
 
@@ -213,22 +214,26 @@ def run_pipeline(df: DataFrame, mc: ModelConfig, algorithm: str = "LR", bags: in
         df, ccs, norm_type=mc.normalize.norm_type, cutoff=mc.normalize.std_dev_cut_off,
         tag_col=mc.dataset.target_column, pos_tags=mc.dataset.pos_tags, neg_tags=mc.dataset.neg_tags,
     ).cache()
-    feat_cols = [c.column_name for c in ccs if c.final_select]
-    assembled = assemble_features(norm, feat_cols)
+    scored = None
+    try:
+        feat_cols = [c.column_name for c in ccs if c.final_select]
+        assembled = assemble_features(norm, feat_cols)
 
-    params = TrainParams(algorithm=algorithm, bags=bags)
-    models = train_models(assembled, params, len(feat_cols))
+        params = TrainParams(algorithm=algorithm, bags=bags)
+        models = train_models(assembled, params, len(feat_cols))
 
-    scored = score_ensemble(assembled, models, keep_cols=["label"]).cache()
-    # one prefix scan yields AUC + PR AUC (+KS) together
-    curve = curve_metrics_df(scored, "mean", F.col("label") == 1.0).collect()[0]
-    auc, pr = curve["auc"], curve["pr_auc"]
-    n = scored.count()
+        scored = score_ensemble(assembled, models, keep_cols=["label"]).cache()
+        # one prefix scan yields AUC + PR AUC (+KS) together
+        curve = curve_metrics_df(scored, "mean", F.col("label") == 1.0).collect()[0]
+        auc, pr = curve["auc"], curve["pr_auc"]
+        n = scored.count()
+    finally:
+        norm.unpersist()
+        if scored is not None:
+            scored.unpersist()
     spark = df.sparkSession
     # degenerate corpora (single-class) have NULL AUCs — keep them NULL
     auc_v = float(auc) if auc is not None else None
     pr_v = float(pr) if pr is not None else None
     metrics = spark.createDataFrame([(auc_v, pr_v, int(n))], "auc double, pr_auc double, n_rows long")
-    norm.unpersist()
-    scored.unpersist()
     return ccs, models, metrics

@@ -2,7 +2,8 @@
 DataFrame callable plus a matching DuckDB oracle SQL string.
 
 Registration happens via the @query decorator; __spark_entry__.py re-exports
-QUERIES / ORACLES for the driver.
+QUERIES / ORACLES as its query contract, and bench.py reads each query's
+pipeline stage from STAGES.
 """
 
 from __future__ import annotations
@@ -14,11 +15,28 @@ from pyspark.sql import functions as F
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+#: query name -> the bench stage its time is attributed to
+STAGES: dict[str, str] = {}
+
+#: the pipeline stages bench.py totals per-query time into: Shifu's
+#: stats / norm / train / eval, relational queries, and the
+#: training-data families; streaming keeps its own stage because its
+#: times include trigger and sink machinery
+BENCH_STAGES = frozenset({
+    "query", "stats", "norm", "train", "eval",
+    "text", "dedup", "similarity", "multimodal", "streaming",
+})
 
 
-def query(name: str, oracle: str | None = None):
+def query(name: str, oracle: str | None = None, *, stage: str):
+    if stage not in BENCH_STAGES:
+        raise ValueError(
+            f"query {name!r}: unknown stage {stage!r}, expected one of {sorted(BENCH_STAGES)}"
+        )
+
     def deco(fn):
         QUERIES[name] = fn
+        STAGES[name] = stage
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
@@ -126,7 +144,7 @@ ORDER BY l_returnflag, l_linestatus
 """
 
 
-@query("tpch_q1", _Q1_ORACLE)
+@query("tpch_q1", _Q1_ORACLE, stage="query")
 def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing summary: the flagship scan→filter→groupBy→agg.
 
@@ -171,7 +189,7 @@ def _stats_oracle() -> str:
     return numeric_stats_oracle_sql("lineitem", _STATS_COLS) + "\nORDER BY column_name"
 
 
-@query("column_stats", None)
+@query("column_stats", stage="stats")
 def column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column moments/percentiles/distincts — one wide agg, one pass.
 
@@ -204,7 +222,7 @@ def _value_min_max(df: DataFrame, c: str) -> DataFrame:
     return df.agg(F.min(F.when(is_value(x), x)).alias("mn"), F.max(F.when(is_value(x), x)).alias("mx"))
 
 
-@query("ksiv_equal_interval", None)
+@query("ksiv_equal_interval", stage="stats")
 def ksiv_equal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equal-interval binning + KS/IV/WOE, tag = (l_returnflag = 'R').
 
@@ -274,7 +292,7 @@ ORACLES["ksiv_equal_interval"] = _ksiv_oracle()
 _ZS_COLS = ["l_quantity", "l_extendedprice"]
 
 
-@query("zscore_normalize", None)
+@query("zscore_normalize", stage="norm")
 def zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZSCALE transform (Normalizer.java:426-470): clip at mean±6σ, scale.
 
@@ -324,7 +342,7 @@ def _zscore_oracle() -> str:
 ORACLES["zscore_normalize"] = _zscore_oracle()
 
 
-@query("woe_normalize", None)
+@query("woe_normalize", stage="norm")
 def woe_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WOE transform (Normalizer.java:619-657): value -> bin -> bin woe.
 
@@ -392,7 +410,7 @@ FROM binned b JOIN woes w USING (bin)
 # PSI (SURVEY §2.4 — PSI.pig / PSICalculatorUDF semantics) on events
 # ---------------------------------------------------------------------------
 
-@query("psi_events_by_day", None)
+@query("psi_events_by_day", stage="stats")
 def psi_events_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI of `value` per day vs the overall distribution.
 
@@ -453,7 +471,7 @@ FROM j GROUP BY unit ORDER BY unit
 _CORR_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
 
-@query("correlation_matrix", None)
+@query("correlation_matrix", stage="stats")
 def correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise-complete Pearson from exact decimal co-moments — one wide agg."""
     from shifu_spark.operators.correlation import correlation_df
@@ -474,7 +492,7 @@ ORACLES["correlation_matrix"] = _corr_oracle()
 # Eval metrics (SURVEY §2.6 — ConfusionMatrix / AreaUnderCurve)
 # ---------------------------------------------------------------------------
 
-@query("confusion_matrix_points", None)
+@query("confusion_matrix_points", stage="eval")
 def confusion_matrix_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative confusion matrix over score-desc order, one row per
     distinct score (ConfusionMatrix.java:276-520 as a window plan)."""
@@ -522,7 +540,7 @@ FROM cum
 """
 
 
-@query("roc_auc", None)
+@query("roc_auc", stage="eval")
 def roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROC AUC (Mann-Whitney rank form == full-resolution trapezoid,
     AreaUnderCurve.java:56-133)."""
@@ -556,7 +574,7 @@ FROM ranked
 # Joins (SURVEY §2.3 — combo/PigDataJoin) + broadcast join chain
 # ---------------------------------------------------------------------------
 
-@query("combo_score_join", None)
+@query("combo_score_join", stage="eval")
 def combo_score_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Combo-model score assembly: 3 derived score tables inner-joined by
     uid, ensemble mean/max/min/median (PigDataJoin.java:45-133 +
@@ -593,7 +611,7 @@ FROM t1 JOIN t2 USING (uid) JOIN t3 USING (uid)
 """
 
 
-@query("nation_revenue", None)
+@query("nation_revenue", stage="query")
 def nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast-join chain: lineitem⋈orders⋈customer⋈nation, revenue per
     nation. Dims are broadcast (no shuffle of the fact table beyond the
@@ -632,7 +650,7 @@ GROUP BY n_name ORDER BY n_name
 # Purify / unpivot / top-k (SURVEY §2.2, §2.6)
 # ---------------------------------------------------------------------------
 
-@query("purify_filter", None)
+@query("purify_filter", stage="query")
 def purify_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JEXL row filter translated to a pushed-down Catalyst predicate
     (DataPurifier.java:47-130 semantics via functions/jexl.py)."""
@@ -656,7 +674,7 @@ GROUP BY l_linestatus ORDER BY l_linestatus
 """
 
 
-@query("unpivot_column_totals", None)
+@query("unpivot_column_totals", stage="query")
 def unpivot_column_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row→column unpivot (AddColumnNumUDF semantics): melt 4 numeric
     columns into (column_name, value) then aggregate per column."""
@@ -687,7 +705,7 @@ FROM melted GROUP BY column_name ORDER BY column_name
 """
 
 
-@query("topk_orders_per_priority", None)
+@query("topk_orders_per_priority", stage="query")
 def topk_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders by totalprice per priority — the top-N pattern of
     VarSelectReducer.java:114-226 as a row_number window (deterministic
@@ -719,7 +737,7 @@ WHERE rk <= 3 ORDER BY o_orderpriority, rk
 # LLM-data pipeline: dedup (BASELINE.json north star, first-class surface)
 # ---------------------------------------------------------------------------
 
-@query("exact_dedup", None)
+@query("exact_dedup", stage="dedup")
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by md5 digest; canonical = min doc_id per group."""
     from shifu_spark.operators.dedup import exact_dedup_df
@@ -734,7 +752,7 @@ FROM documents ORDER BY doc_id
 """
 
 
-@query("shingleset_dedup", None)
+@query("shingleset_dedup", stage="dedup")
 def shingleset_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup on the sorted distinct 3-gram shingle set digest — catches
     duplicates exact-text dedup misses."""
@@ -759,7 +777,7 @@ FROM digests ORDER BY doc_id
 """
 
 
-@query("ngram_jaccard_pairs", None)
+@query("ngram_jaccard_pairs", stage="dedup")
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs 3-gram Jaccard ≥ 0.5 near-dup pairs (exact verifier)."""
     from shifu_spark.operators.dedup import ngram_jaccard_pairs_df
@@ -791,7 +809,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@query("minhash_lsh_pairs", None)
+@query("minhash_lsh_pairs", stage="dedup")
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(8 salted md5 hashes) + LSH(4 bands × 2) candidates,
     exact-Jaccard verified at ≥ 0.5 — the scale path for near-dup."""
@@ -842,7 +860,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@query("simhash_neardup_pairs", None)
+@query("simhash_neardup_pairs", stage="dedup")
 def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash(32-bit) hamming ≤ 3 pairs via 4-chunk pigeonhole LSH.
 
@@ -859,7 +877,7 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LLM-data pipeline: text analysis
 # ---------------------------------------------------------------------------
 
-@query("text_stats", None)
+@query("text_stats", stage="text")
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token counts, vocabulary diversity, quality score, lang-id."""
     from shifu_spark.operators.text import text_stats_df
@@ -896,7 +914,7 @@ FROM t ORDER BY doc_id
 """
 
 
-@query("doc_fingerprint", None)
+@query("doc_fingerprint", stage="text")
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content digest + 5-token-prefix blocking digest per doc."""
     from shifu_spark.operators.text import fingerprint_df
@@ -911,7 +929,7 @@ FROM documents ORDER BY doc_id
 """
 
 
-@query("token_count_by_source", None)
+@query("token_count_by_source", stage="text")
 def token_count_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token accounting per source — whitespace + BPE-ish pieces."""
     from shifu_spark.operators.text import bpe_piece_count_expr, token_count_expr
@@ -941,7 +959,7 @@ FROM documents GROUP BY source ORDER BY source
 # LLM-data pipeline: embedding similarity search
 # ---------------------------------------------------------------------------
 
-@query("embedding_topk", None)
+@query("embedding_topk", stage="similarity")
 def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for query vectors vec_id < 10.
 
@@ -973,7 +991,7 @@ FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
 """
 
 
-@query("embedding_neardup_pairs", None)
+@query("embedding_neardup_pairs", stage="similarity")
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (semantic dedup) at cosine ≥ 0.3."""
     from shifu_spark.operators.similarity import embedding_neardup_pairs_block
@@ -1079,7 +1097,7 @@ def _lsh_scale_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.unionByName(pert)
 
 
-@query("embedding_neardup_lsh_scale", None)
+@query("embedding_neardup_lsh_scale", stage="similarity")
 def embedding_neardup_lsh_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded LSH embedding near-dup at the PRODUCTION parameterization:
     64 seeded ±1 hyperplanes → 4 bands × 16 bits, cosine ≥ 0.9, over the
@@ -1158,7 +1176,7 @@ ORACLES["embedding_neardup_lsh_scale"] = _lsh_scale_oracle()
 # Categorical binning + KS/IV (SURVEY §2.5 CategoricalBinning)
 # ---------------------------------------------------------------------------
 
-@query("ksiv_categorical", None)
+@query("ksiv_categorical", stage="stats")
 def ksiv_categorical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical binning (frequency-ordered, CategoricalBinning.java:33)
     + KS/IV/WOE on orders.o_orderpriority, tag = (o_orderstatus = 'F')."""
@@ -1250,7 +1268,7 @@ GROUP BY 2"""
     return ksiv_oracle_sql(counts_sql)
 
 
-@query("ksiv_equal_population", None)
+@query("ksiv_equal_population", stage="stats")
 def ksiv_equal_population(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EqualTotal equal-population bins via exact percentile (the SPDT/
     EqualPopulationBinning replacement) + KS/IV on l_extendedprice.
@@ -1264,7 +1282,7 @@ def ksiv_equal_population(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["ksiv_equal_population"] = _ksiv_quantile_oracle(None)
 
 
-@query("ksiv_equal_positive", None)
+@query("ksiv_equal_positive", stage="stats")
 def ksiv_equal_positive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EqualPositive binning — the reference's DEFAULT BinningMethod
     (ModelStatsConf.java:34-36): boundaries are exact quantiles over the
@@ -1276,7 +1294,7 @@ def ksiv_equal_positive(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["ksiv_equal_positive"] = _ksiv_quantile_oracle("l_returnflag = 'R'")
 
 
-@query("ksiv_equal_negative", None)
+@query("ksiv_equal_negative", stage="stats")
 def ksiv_equal_negative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EqualNegative binning (BinningMethod.EqualNegative,
     ModelStatsConf.java:34-36): boundaries are exact quantiles over the
@@ -1290,7 +1308,7 @@ def ksiv_equal_negative(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["ksiv_equal_negative"] = _ksiv_quantile_oracle("l_returnflag <> 'R'")
 
 
-@query("ksiv_weighted", None)
+@query("ksiv_weighted", stage="stats")
 def ksiv_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted KS/IV/WOE (binWeightNeg/binWeightPos, the double[] overload
     of ColumnStatsCalculator) — weight = l_quantity, decimal-summed."""
@@ -1337,7 +1355,7 @@ ORACLES["ksiv_weighted"] = _ksiv_weighted_oracle()
 # Varselect / posttrain (SURVEY §2.6, §2.10)
 # ---------------------------------------------------------------------------
 
-@query("varselect_top_iv", None)
+@query("varselect_top_iv", stage="stats")
 def varselect_top_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N columns by IV (VariableSelector / VarSelectReducer top-N
     pattern) over the equal-interval KS/IV table."""
@@ -1358,7 +1376,7 @@ FROM base QUALIFY rank <= 2 ORDER BY rank
 """
 
 
-@query("varselect_top_ks", None)
+@query("varselect_top_ks", stage="stats")
 def varselect_top_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N columns by KS (pipeline.var_select ``by='ks'`` — the other
     half of the reference's sort-columns-by-KS/IV selection,
@@ -1382,7 +1400,7 @@ FROM base QUALIFY rank <= 2 ORDER BY rank
 """
 
 
-@query("auto_filter", None)
+@query("auto_filter", stage="stats")
 def auto_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Auto-filter varselect (ModelVarSelectConf.java:92-113,
     VariableSelector): a column survives iff missing rate <= 0.98 AND
@@ -1454,7 +1472,7 @@ FROM rk ORDER BY column_name
 """
 
 
-@query("native_ntile_binning", None)
+@query("native_ntile_binning", stage="stats")
 def native_ntile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native equal-count binning (NativeBinning.java:27): exact ntile
     cut — left edge of tile i = min value inside tile i, per
@@ -1488,7 +1506,7 @@ GROUP BY tile ORDER BY tile
 """
 
 
-@query("bin_avg_score", None)
+@query("bin_avg_score", stage="eval")
 def bin_avg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Posttrain bin average score (PostTrain.pig:44-45,
     CalculateBinAvgScoreUDF): score = l_extendedprice, bins = equal-
@@ -1523,7 +1541,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@query("gain_buckets", None)
+@query("gain_buckets", stage="eval")
 def gain_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed gains table (performanceBucketNum semantics): first
     confusion point at or past each action-rate decile."""
@@ -1565,7 +1583,7 @@ WHERE rn = 1 ORDER BY bucket
 """
 
 
-@query("gain_chart_export", None)
+@query("gain_chart_export", stage="eval")
 def gain_chart_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gain-chart operating-point table (core/eval/GainChart.java + the
     export CSV twin): the bucketed gains rows plus cumulative lift
@@ -1615,7 +1633,7 @@ WHERE rn = 1 ORDER BY bucket
 # Scalar transforms / segments / sessionization (SURVEY §2.8, §2.2)
 # ---------------------------------------------------------------------------
 
-@query("date_to_unix", None)
+@query("date_to_unix", stage="norm")
 def date_to_unix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ConvertToUnixTimeUDF.java:29-58: timestamp -> epoch seconds.
 
@@ -1640,7 +1658,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
-@query("concat_fields", None)
+@query("concat_fields", stage="norm")
 def concat_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ConcatLogUDF: field concatenation as a pure column expression."""
     c = _t(spark, sf_dir, "customer")
@@ -1658,7 +1676,7 @@ FROM customer ORDER BY c_custkey
 """
 
 
-@query("segment_expansion", None)
+@query("segment_expansion", stage="query")
 def segment_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Segment/virtual-dataset expansion (AddColumnNumAndFilterUDF:75-99):
     stats per segment = union of filtered copies with segment ids."""
@@ -1688,7 +1706,7 @@ FROM seg GROUP BY segment_id ORDER BY segment_id
 """
 
 
-@query("events_sessionize", None)
+@query("events_sessionize", stage="query")
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: new session when gap > 30 min; sessions per user.
     lag + conditional cumsum windows (the batch form of
@@ -1730,7 +1748,7 @@ FROM s GROUP BY user_id ORDER BY user_id
 """
 
 
-@query("distinct_counts", None)
+@query("distinct_counts", stage="stats")
 def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-column distinct counts (the init auto-type input;
     production uses approx_count_distinct = HLL++, the reference's
@@ -1754,7 +1772,7 @@ FROM lineitem
 """
 
 
-@query("psi_by_column", None)
+@query("psi_by_column", stage="stats")
 def psi_by_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference column-level PSI = Σ over units of unit PSI
     (PSICalculatorUDF accumulates across the unit bag)."""
@@ -1770,7 +1788,7 @@ FROM ({ORACLES['psi_events_by_day']})
 """
 
 
-@query("stratified_sample", None)
+@query("stratified_sample", stage="stats")
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded Bernoulli sampling with keep-all-positives
     (DataSampler.java:112-160) — rows-only check (seeded RNG is not
@@ -1807,7 +1825,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("hash_stratified_sample", None)
+@query("hash_stratified_sample", stage="stats")
 def hash_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic content-keyed Bernoulli sample with
     keep-all-positives (purify.hash_bernoulli_sample) — the
@@ -1851,7 +1869,7 @@ GROUP BY l_returnflag ORDER BY l_returnflag
 ORACLES["hash_stratified_sample"] = _hash_sample_oracle()
 
 
-@query("kfold_assignment", None)
+@query("kfold_assignment", stage="train")
 def kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-keyed k-fold split (purify.hash_fold_expr) — the
     hash-checkable half of k-fold CV (the fit stays rows-only): fold =
@@ -1897,7 +1915,7 @@ ORACLES["kfold_assignment"] = _kfold_assignment_oracle()
 _SENS_W = {"l_quantity": 0.08, "l_discount": -12.0, "l_tax": 5.0}
 
 
-@query("sensitivity_se", None)
+@query("sensitivity_se", stage="train")
 def sensitivity_se_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sensitivity SE varselect (VarSelectMapper/Reducer semantics) with a
     fixed linear model: per column, MSE of sigmoid(logit − w_j·x_j) vs
@@ -1940,7 +1958,7 @@ FROM lineitem""")
 ORACLES["sensitivity_se"] = _sens_oracle()
 
 
-@query("sensitivity_st", None)
+@query("sensitivity_st", stage="train")
 def sensitivity_st_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sensitivity ST varselect (VarSelectMapper.java:306-309 FILTER_BY_ST:
     diff = target − column-masked score; reducer ranks rms desc): per
@@ -1984,7 +2002,7 @@ FROM lineitem""")
 ORACLES["sensitivity_st"] = _sens_st_oracle()
 
 
-@query("weighted_pr_auc", None)
+@query("weighted_pr_auc", stage="eval")
 def weighted_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PR AUC (PerformanceResult weighted PR curve): trapezoid
     over weighted (recall, precision); weight = l_quantity with the
@@ -2025,7 +2043,7 @@ FROM lagged WHERE prev_r IS NOT NULL
 """
 
 
-@query("weighted_gain_buckets", None)
+@query("weighted_gain_buckets", stage="eval")
 def weighted_gain_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted gains table (ConfusionMatrix weighted bucket walk): first
     point at or past each weighted action-rate decile."""
@@ -2068,7 +2086,7 @@ WHERE rn = 1 ORDER BY bucket
 """
 
 
-@query("kfold_cv", None)
+@query("kfold_cv", stage="train")
 def kfold_cv_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-fold CV as a dataflow op (SURVEY §2.10; deterministic crc32 fold
     assignment): 3-fold LR on lineitem numerics against the planted
@@ -2097,7 +2115,7 @@ def kfold_cv_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("grid_search", None)
+@query("grid_search", stage="train")
 def grid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid search over TrainParams (SURVEY §2.10 train-conf grid): 2
     learning-rate points of LR on the planted separable target, seeded
@@ -2128,7 +2146,7 @@ def grid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("learning_rate")
 
 
-@query("score_rescale", None)
+@query("score_rescale", stage="eval")
 def score_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-score rescale strategies (ConfusionMatrix.java:257-276,404-420):
     SIGMOID (1/(1+e^{-2s})), OLD_SIGMOID (1/(1+e^{-s})), and MAXMIN with
@@ -2161,7 +2179,7 @@ FROM lineitem CROSS JOIN mm
 """
 
 
-@query("multiclass_tag_recode", None)
+@query("multiclass_tag_recode", stage="norm")
 def multiclass_tag_recode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-class tag recode (NormalizeUDF.java:354-372): index of the
     first tag-set containing the raw tag; per-class counts prove the
@@ -2187,7 +2205,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@query("text_roundtrip_stats", None)
+@query("text_roundtrip_stats", stage="text")
 def text_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.1 sources end-to-end, driver-checkable: write orders as
     gzip pipe-delimited text with a `.pig_header` sidecar
@@ -2247,7 +2265,7 @@ FROM orders GROUP BY 1 ORDER BY 1
 """
 
 
-@query("rf_train", None)
+@query("rf_train", stage="train")
 def rf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RF training as a dataflow op (SURVEY §2.10; DTMaster/DTWorker ->
     MLlib RandomForestClassifier): fit on lineitem numerics against a
@@ -2386,7 +2404,7 @@ def _run_stream_to_files(
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-@query("streaming_drift_psi", None)
+@query("streaming_drift_psi", stage="streaming")
 def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured-Streaming drift PSI, driver-checkable: replay the
     events table as a bounded stream (availableNow trigger), window the
@@ -2452,7 +2470,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream.withColumn("ts", ets)
 
 
-@query("streaming_sessionize", None)
+@query("streaming_sessionize", stage="streaming")
 def streaming_sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization as a Structured Streaming query
     (streaming/ops.streaming_sessionize -> session_window state merge),
@@ -2508,7 +2526,7 @@ FROM per_sess GROUP BY user_id ORDER BY user_id
 """
 
 
-@query("streaming_minhash_dedup", None)
+@query("streaming_minhash_dedup", stage="streaming")
 def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MinHash dedup: signature-at-ingest (stateless in-row
     K-minhash over word shingles, operators/dedup.with_minhash_signature)
@@ -2545,7 +2563,7 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sink.select("rep_id", "n_docs").orderBy("rep_id")
 
 
-@query("streaming_running_stats", None)
+@query("streaming_running_stats", stage="streaming")
 def streaming_running_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key running moments carried in ``applyInPandasWithState``
     group state (streaming/ops — the distributed form of
@@ -2631,7 +2649,7 @@ FROM sig GROUP BY signature ORDER BY rep_id
 """
 
 
-@query("streaming_eval_metrics", None)
+@query("streaming_eval_metrics", stage="streaming")
 def streaming_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming model eval — the streaming twin of the §2.6 eval family
     (ConfusionMatrix.java / PerformanceEvaluator): per event-time day
@@ -2699,7 +2717,7 @@ FROM agg ORDER BY window_start
 """
 
 
-@query("chunk_dup_fraction", None)
+@query("chunk_dup_fraction", stage="dedup")
 def chunk_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-granular exact-substring dedup stats (Lee et al., ACL 2022
     fixed-chunk approximation; operators/dedup.chunk_dup_fraction_df):
@@ -2736,7 +2754,7 @@ FROM flagged GROUP BY doc_id ORDER BY doc_id
 """
 
 
-@query("unigram_logprob_quality", None)
+@query("unigram_logprob_quality", stage="text")
 def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LM-based quality scoring (the perplexity-filter stage of an LLM
     data pipeline, CCNet-style): per-doc mean unigram log-prob + OOV
@@ -2782,7 +2800,7 @@ FROM scored ORDER BY doc_id
 ORACLES["unigram_logprob_quality"] = _unigram_oracle()
 
 
-@query("streaming_dim_enrichment", None)
+@query("streaming_dim_enrichment", stage="streaming")
 def streaming_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment join — the remaining core Structured
     Streaming pattern (stream joined to a broadcast dimension BEFORE the
@@ -2833,7 +2851,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@query("streaming_attribution_join", None)
+@query("streaming_attribution_join", stage="streaming")
 def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked STREAM-STREAM interval join — the canonical
     attribution pattern and the last core Structured Streaming join
@@ -2890,7 +2908,7 @@ GROUP BY 1 ORDER BY user_id
 """
 
 
-@query("streaming_heavy_hitters", None)
+@query("streaming_heavy_hitters", stage="streaming")
 def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming heavy hitters: per event-time day window, the top-3
     user_ids by event count (streaming/ops.streaming_windowed_key_counts
@@ -2931,7 +2949,7 @@ FROM ranked WHERE rank <= 3 ORDER BY window_start, rank
 """
 
 
-@query("hybrid_column_woe", None)
+@query("hybrid_column_woe", stage="norm")
 def hybrid_column_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid (ColumnType.H) column end-to-end: l_quantity with sentinel
     values 1/2 collected as categories (hybridThreshold=3,
@@ -2993,7 +3011,7 @@ FROM t JOIN woes w USING (slot)
 """
 
 
-@query("eval_meta_score", None)
+@query("eval_meta_score", stage="eval")
 def eval_meta_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Meta-score / champion-challenger eval
     (EvalModelProcessor.runDistMetaScore:1007, EvalScoreMetaSort.pig,
@@ -3052,7 +3070,7 @@ SELECT auc, pr_auc, ks FROM auc_t CROSS JOIN pr_t CROSS JOIN ks_t
 """
 
 
-@query("reason_codes", None)
+@query("reason_codes", stage="train")
 def reason_codes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reason codes (CalculateReasonCodeUDF): top-2 |w·x| features per
     row for a fixed linear model, joined to one string for hashing."""
@@ -3080,7 +3098,7 @@ FROM contrib ORDER BY l_orderkey, l_linenumber
 """
 
 
-@query("tree_path_encoding", None)
+@query("tree_path_encoding", stage="train")
 def tree_path_encoding_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tree-path leaf encoding (EncodeDataUDF) with a seeded RF — leaf ids
     are MLlib-internal so this is a rows-only check, made
@@ -3155,7 +3173,7 @@ _PINNED_TREES = [
 ]
 
 
-@query("tree_path_encoding_pinned", None)
+@query("tree_path_encoding_pinned", stage="train")
 def tree_path_encoding_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tree-path leaf encoding against PINNED fixture trees — the
     hash-checkable half of EncodeDataUDF.java:45-120 (pure leaf lookup;
@@ -3194,7 +3212,7 @@ FROM lineitem ORDER BY l_orderkey, l_linenumber
 """
 
 
-@query("nn_forward_pinned", None)
+@query("nn_forward_pinned", stage="train")
 def nn_forward_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NN scoring with PINNED weights — the hash-checkable half of the
     NN family (the fit stays rows-only; scoring is EvalScoreUDF.java
@@ -3249,7 +3267,7 @@ FROM h ORDER BY l_orderkey, l_linenumber
 """
 
 
-@query("lr_forward_pinned", None)
+@query("lr_forward_pinned", stage="train")
 def lr_forward_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LR scoring with PINNED weights — the hash-checkable half of the
     LR family (the SGD fit stays rows-only; scoring is the reference's
@@ -3310,7 +3328,7 @@ _PINNED_RF_TREES = [
 ]
 
 
-@query("rf_forward_pinned", None)
+@query("rf_forward_pinned", stage="train")
 def rf_forward_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RF scoring with PINNED fixture trees — the hash-checkable half of
     the RF family (the fit stays rows-only). Drives the REAL paths:
@@ -3357,7 +3375,7 @@ FROM p ORDER BY l_orderkey, l_linenumber
 """
 
 
-@query("gbt_forward_pinned", None)
+@query("gbt_forward_pinned", stage="train")
 def gbt_forward_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GBT scoring with PINNED fixture trees — completes the pinned
     scoring halves of the training family (LR/NN/RF/tree-path are the
@@ -3410,7 +3428,7 @@ FROM p ORDER BY l_orderkey, l_linenumber
 # ---------------------------------------------------------------------------
 
 
-@query("onehot_normalize", None)
+@query("onehot_normalize", stage="norm")
 def onehot_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONEHOT transform (Normalizer.java:379-424): numeric -> bin one-hot
     (+ missing slot k for non-values). Equal-interval 5 bins on
@@ -3447,7 +3465,7 @@ FROM binned
 """
 
 
-@query("discrete_zscore_normalize", None)
+@query("discrete_zscore_normalize", stage="norm")
 def discrete_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISCRETE_ZSCORE (Normalizer.java:468-500): snap to the bin lower
     boundary, then zscore with clip at mean±6σ; a non-value is missing
@@ -3502,7 +3520,7 @@ FROM binned
 """
 
 
-@query("woe_zscore_normalize", None)
+@query("woe_zscore_normalize", stage="norm")
 def woe_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WOE_ZSCORE (Normalizer.java:664-672): woe value, then z-score with
     the woe-population mean/std from bin counts
@@ -3583,7 +3601,7 @@ FROM binned b JOIN consts w USING (bin)
 """
 
 
-@query("hybrid_normalize", None)
+@query("hybrid_normalize", stage="norm")
 def hybrid_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID (Normalizer.java:687-700): numeric -> zscore, categorical ->
     woe — both in ONE select. Categorical woe table is per-category counts
@@ -3678,7 +3696,7 @@ _MM_SQL = """SELECT count(l_quantity)::DOUBLE AS n,
   FROM lineitem"""
 
 
-@query("old_zscale_normalize", None)
+@query("old_zscale_normalize", stage="norm")
 def old_zscale_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OLD_ZSCALE (Normalizer.java:444-452, zScoreNormalize isOld=true):
     numeric -> zscore exactly like ZSCALE, but categorical passes the raw
@@ -3708,7 +3726,7 @@ FROM lineitem l CROSS JOIN mm JOIN cate c USING (l_returnflag)
 """
 
 
-@query("weight_hybrid_normalize", None)
+@query("weight_hybrid_normalize", stage="norm")
 def weight_hybrid_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEIGHT_HYBRID (Normalizer.java:687-700 isWeightedNorm=true):
     numeric -> zscore, categorical -> WEIGHTED woe (weight = l_quantity
@@ -3762,7 +3780,7 @@ FROM lineitem l CROSS JOIN mm JOIN cate c USING (l_returnflag)
 """
 
 
-@query("zscale_onehot_normalize", None)
+@query("zscale_onehot_normalize", stage="norm")
 def zscale_onehot_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZSCALE_ONEHOT (Normalizer.java zscaleOneHotNormalize:391-406):
     numeric -> zscore single column; categorical -> one-hot over category
@@ -3790,7 +3808,7 @@ FROM lineitem l CROSS JOIN mm
 """
 
 
-@query("category_missing_mean", None)
+@query("category_missing_mean", stage="norm")
 def category_missing_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CategoryMissingNormType=MEAN (Normalizer.java:579-596,
     defaultMissingValue:602-605): an unseen category fills with the
@@ -3829,7 +3847,7 @@ FROM lineitem l CROSS JOIN m LEFT JOIN cate c USING (l_returnflag)
 """
 
 
-@query("categorical_index_normalize", None)
+@query("categorical_index_normalize", stage="norm")
 def categorical_index_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """*_INDEX NormType family (Normalizer.java:287-350 — embedding
     inputs): categorical columns emit the RAW bin index via the
@@ -3868,7 +3886,7 @@ FROM lineitem CROSS JOIN mm
 """
 
 
-@query("asis_woe_normalize", None)
+@query("asis_woe_normalize", stage="norm")
 def asis_woe_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASIS_WOE NormType (Normalizer.java:353-377): numeric columns pass
     through unchanged (try_cast double), categorical columns map to
@@ -3919,7 +3937,7 @@ FROM lineitem l JOIN woes w USING (l_returnflag)
 """
 
 
-@query("invalid_tag_filter", None)
+@query("invalid_tag_filter", stage="query")
 def invalid_tag_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Invalid-tag row filter (NormalizeUDF.java:262-278 via
     normalize.filter_valid_tags): rows whose tag is outside pos∪neg are
@@ -3952,7 +3970,7 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
-@query("mean_impute", None)
+@query("mean_impute", stage="norm")
 def mean_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Missing-value mean imputation (Normalizer.java:602-605 semantics:
     missing/unparseable numeric -> population mean of valid values).
@@ -3985,7 +4003,7 @@ FROM lineitem CROSS JOIN mm
 # ---------------------------------------------------------------------------
 
 
-@query("pr_auc", None)
+@query("pr_auc", stage="eval")
 def pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PR AUC: trapezoid over (recall, precision) points
     (AreaUnderCurve.ofPr semantics) — via the one-pass
@@ -4026,7 +4044,7 @@ FROM lagged WHERE prev_r IS NOT NULL
 """
 
 
-@query("feature_importance", None)
+@query("feature_importance", stage="train")
 def feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature importance (FeatureImportanceMapper/Reducer.java): mean
     |contribution| per column for a fixed linear model, normalized to
@@ -4066,7 +4084,7 @@ def _fi_oracle() -> str:
 ORACLES["feature_importance"] = _fi_oracle()
 
 
-@query("freq_items", None)
+@query("freq_items", stage="stats")
 def freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent-item sets per column (CountAndFrequentItemsWritable /
     auto-type inference): top-3 values by count per column via ONE
@@ -4118,7 +4136,7 @@ ORDER BY column_name, rnk
 _LSH_PLANES = [[1.0 if 16 * i <= d < 16 * (i + 1) else 0.0 for d in range(64)] for i in range(4)]
 
 
-@query("embedding_lsh_topk", None)
+@query("embedding_lsh_topk", stage="similarity")
 def embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-3: candidates share the 4-bit
     sign-pattern bucket, exact cosine re-rank inside the bucket
@@ -4162,7 +4180,7 @@ FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
 # ---------------------------------------------------------------------------
 
 
-@query("weighted_confusion", None)
+@query("weighted_confusion", stage="eval")
 def weighted_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted cumulative confusion matrix (ConfusionMatrix.java weighted
     counters; weight clamp :361-370). Weight = l_quantity; one row per
@@ -4202,7 +4220,7 @@ FROM pts
 """
 
 
-@query("multiclass_confusion", None)
+@query("multiclass_confusion", stage="eval")
 def multiclass_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-class confusion matrix
     (ConfusionMatrix.computeConfusionMatixForMultipleClassification:625):
@@ -4275,7 +4293,7 @@ def _fit_invariant_rows(spark, losses, auc, auc_floor):
     )
 
 
-@query("sgd_lr_train", None)
+@query("sgd_lr_train", stage="train")
 def sgd_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed SGD LR (core/dtrain/lr BSP as mapInPandas partial
     gradients + driver optimizer, ml/sgd.py). Rows-only check: training
@@ -4297,7 +4315,7 @@ def sgd_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fit_invariant_rows(spark, res.train_losses, auc, 0.9)
 
 
-@query("nn_train", None)
+@query("nn_train", stage="train")
 def nn_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed MLP with Shifu's activation set (core/dtrain/nn BSP as
     mapInPandas backprop partials + driver optimizer, ml/nn.py —
@@ -4321,7 +4339,7 @@ def nn_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fit_invariant_rows(spark, res.train_losses, auc, 0.9)
 
 
-@query("ga_varselect", None)
+@query("ga_varselect", stage="train")
 def ga_varselect_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GA wrapper variable selection (core/dvarsel CandidateGenerator
     mechanics; ml/ga_varselect.py). Two Gram-matrix passes, then the GA
@@ -4365,7 +4383,7 @@ def ga_varselect_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query("dynamic_binning", None)
+@query("dynamic_binning", stage="stats")
 def dynamic_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic binning two-pass: 100 fine equal-interval small bins
     (GenSmallBinningInfoUDF) merged to 10 equal-population target bins by
@@ -4423,7 +4441,7 @@ FROM cum GROUP BY 1 ORDER BY bin
 """
 
 
-@query("embedding_ivf_topk", None)
+@query("embedding_ivf_topk", stage="similarity")
 def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe-1 ANN (operators/similarity.ivf_topk): seed-vector
     centroids (vec_id 0-7), every vector assigned to its max-cosine
@@ -4436,7 +4454,7 @@ def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, F.col("vec_id").between(10, 19), F.col("vec_id") < 8, k=3)
 
 
-@query("embedding_ivf_multiprobe", None)
+@query("embedding_ivf_multiprobe", stage="similarity")
 def embedding_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe IVF ANN (operators/similarity.ivf_topk_multiprobe):
     data vectors in their 1 nearest cell, queries probe their top-2 cells
@@ -4525,7 +4543,7 @@ codes AS (
 )"""
 
 
-@query("pq_encode", None)
+@query("pq_encode", stage="similarity")
 def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encode (Jégou et al. 2011) — the
     compressed-vector half of the production ANN stack (IVF routes, PQ
@@ -4549,7 +4567,7 @@ FROM codes ORDER BY vec_id
 """
 
 
-@query("pq_adc_topk", None)
+@query("pq_adc_topk", stage="similarity")
 def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-k: distance(query, vec) ≈
     Σ_s lut[s][code_s] — four LUT lookups per row instead of a 64-dim
@@ -4596,7 +4614,7 @@ FROM codes ORDER BY {adc}, vec_id LIMIT 30
 ORACLES["pq_adc_topk"] = _pq_adc_oracle()
 
 
-@query("kmeans_step_centroids", None)
+@query("kmeans_step_centroids", stage="similarity")
 def kmeans_step_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd iteration of the IVF quantizer trainer
     (operators/similarity.kmeans_step): assign all vectors to their
@@ -4681,7 +4699,7 @@ FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
 """
 
 
-@query("confusion_matrix_scalable", None)
+@query("confusion_matrix_scalable", stage="eval")
 def confusion_matrix_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative confusion matrix in the at-scale prefix-sum form
     (eval_metrics.confusion_points_df with one range per core):
@@ -4709,7 +4727,7 @@ def confusion_matrix_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["confusion_matrix_scalable"] = ORACLES["confusion_matrix_points"]
 
 
-@query("events_props_json", None)
+@query("events_props_json", stage="query")
 def events_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured payload extraction: parse the JSON props column
     JVM-side (get_json_object — no Python, pushdown-friendly) and
@@ -4749,7 +4767,7 @@ FROM e GROUP BY event_type ORDER BY event_type
 """
 
 
-@query("weighted_roc_auc", None)
+@query("weighted_roc_auc", stage="eval")
 def weighted_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted ROC AUC (PerformanceResult weighted curves,
     AreaUnderCurve weighted trapezoid): trapezoid over weighted
@@ -4792,7 +4810,7 @@ FROM lagged
 """
 
 
-@query("dedup_groups", None)
+@query("dedup_groups", stage="dedup")
 def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUP resolution: connected components over the
     MinHash+LSH banded pair generator (the 100 TB-shaped composition —
@@ -4851,7 +4869,7 @@ SELECT src AS doc_id, min(lbl) AS group_id FROM reach GROUP BY src ORDER BY doc_
 """
 
 
-@query("salted_group_counts", None)
+@query("salted_group_counts", stage="stats")
 def salted_group_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-mitigated aggregation (StatsSpdtI.pig salted two-level
     GROUP BY as operators/stats.salted_agg): lineitem has only 3 return
@@ -4985,6 +5003,7 @@ SELECT doc_id,
   CAST(count(*) FILTER (WHERE pv * v < 0) AS BIGINT) AS zero_crossings
 FROM sl GROUP BY doc_id ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def audio_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize→encode(RIFF)→decode(stdlib wave)→features; the oracle
@@ -5016,6 +5035,7 @@ SELECT doc_id,
   CAST(count(*) FILTER (WHERE pv * v < 0) AS BIGINT) AS zero_crossings
 FROM sl GROUP BY doc_id ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def audio_corrupt_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corrupt-payload QUARANTINE, driver-proven: the wav synth stream
@@ -5080,6 +5100,7 @@ SELECT doc_id,
   round(CAST(sum(CASE WHEN j % 3 = 2 THEN val END) AS DOUBLE) / (max(w) * max(h)), 6) AS mean_b
 FROM v GROUP BY doc_id ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def image_ppm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize→encode(P6)→decode(pure numpy)→per-channel stats; oracle
@@ -5127,6 +5148,7 @@ SELECT doc_id,
   round(CAST(sum(CASE WHEN j % 3 = 2 THEN val END) AS DOUBLE) / (max(w) * max(h)), 6) AS mean_b
 FROM v GROUP BY doc_id ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def image_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize→encode(REAL PNG: zlib DEFLATE + CRC chunks +
@@ -5191,6 +5213,7 @@ SELECT doc_id,
   round(CAST(256 * sum(val) AS DOUBLE) / (max(w) * max(h)), 6) AS mean_b
 FROM v GROUP BY doc_id ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def image_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize→encode(REAL baseline JFIF: DCT + quantization + DC/AC
@@ -5257,6 +5280,7 @@ SELECT doc_id,
         / (count(DISTINCT f) * max(w) * max(h)), 6) AS mean_y
 FROM v GROUP BY doc_id ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def video_y4m_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize→encode(REAL y4m C444 video stream)→decode(header tags
@@ -5335,6 +5359,7 @@ SELECT doc_id,
   CAST(count(*) FILTER (WHERE pv * v < 0) AS BIGINT) AS zero_crossings
 FROM sl GROUP BY doc_id ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def audio_mulaw_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize→encode(REAL G.711 mu-law: integer segment/mantissa
@@ -5431,7 +5456,7 @@ FROM sl GROUP BY doc_id ORDER BY doc_id
 """
 
 
-@query("audio_adpcm_features", _ADPCM_ORACLE)
+@query("audio_adpcm_features", _ADPCM_ORACLE, stage="multimodal")
 def audio_adpcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize the 4-bit CODE stream→assemble a real single-block IMA
     ADPCM WAV (block header predictor/index + packed low-nibble-first
@@ -5487,6 +5512,7 @@ SELECT doc_id,
   CAST(count(*) FILTER (WHERE pv * x < 0) AS BIGINT) AS zero_crossings
 FROM sl GROUP BY doc_id ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def audio_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize→encode(REAL FLAC: fixed linear predictors + Rice-coded
@@ -5556,6 +5582,7 @@ SELECT doc_id,
         / (count(DISTINCT f) * max(w) * max(h)), 6) AS mean_y
 FROM v GROUP BY doc_id ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def video_mjpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize→encode(per-frame REAL baseline JPEG + REAL AVI RIFF
@@ -5616,6 +5643,7 @@ SELECT doc_id, sum(c_micro) / CAST(1000000 AS DOUBLE) AS score
 FROM contrib GROUP BY doc_id
 ORDER BY score DESC, doc_id LIMIT {_BM25_TOPK}
 """,
+    stage="text",
 )
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25(k1=1.2, b=0.75) top-20 docs for a pinned 3-term query.
@@ -5698,6 +5726,7 @@ SELECT train.doc_id,
 FROM train LEFT JOIN bench ON train.s = bench.s
 GROUP BY train.doc_id ORDER BY train.doc_id
 """,
+    stage="text",
 )
 def decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: per training doc, the fraction of its
@@ -5822,6 +5851,7 @@ SELECT source,
   round(sum(CAST(dup_frac AS DECIMAL(38,10)))::DOUBLE / count(*), 6) AS mean_dup_frac
 FROM per_doc GROUP BY source ORDER BY source
 """.replace("{qc_bias}", str(_QC_BIAS)).replace("{qc_w}", _QC_W_SQL).replace("{gq_stop}", _GQ_STOP_SQL),
+    stage="text",
 )
 def corpus_report_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus report card — the per-source rollup a data curator
@@ -5905,7 +5935,7 @@ FROM k GROUP BY zbucket ORDER BY zbucket
 """
 
 
-@query("zorder_skipping_stats", None)
+@query("zorder_skipping_stats", stage="query")
 def zorder_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout planning (the Delta ``OPTIMIZE ZORDER`` / Iceberg
     sort-order analog): Morton-interleave 8-bit quantized
@@ -5944,7 +5974,7 @@ def zorder_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["zorder_skipping_stats"] = _zorder_oracle()
 
 
-@query("pii_redaction", None)
+@query("pii_redaction", stage="text")
 def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing — the standard pre-tokenization pass of an LLM data
     pipeline (C4/Dolma-style): count + redact emails / IPv4s / phone
@@ -5980,6 +6010,7 @@ SELECT doc_id,
   (1.0::DOUBLE - len(list_distinct(grams)) / len(grams)) <= CAST(0.30 AS DOUBLE) AS keep
 FROM g ORDER BY doc_id
 """,
+    stage="text",
 )
 def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-document repetition filter (Rae et al. 2021 repetition family;
@@ -6023,6 +6054,7 @@ SELECT base.doc_id,
 FROM base JOIN top ON base.doc_id = top.doc_id
 ORDER BY base.doc_id
 """,
+    stage="text",
 )
 def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-rule corpus filters (token-count / mean-word-length /
@@ -6054,6 +6086,7 @@ SELECT doc_id,
         + exp(-(CAST({_QC_BIAS} AS DOUBLE) + wsum / n_tokens))) >= CAST(0.5 AS DOUBLE)) AS keep
 FROM s ORDER BY doc_id
 """,
+    stage="text",
 )
 def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style quality classifier with pinned dyadic weights:
@@ -6106,6 +6139,7 @@ SELECT doc_id,
     AS n_seqs
 FROM c ORDER BY doc_id
 """,
+    stage="text",
 )
 def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style sequence packing plan: concatenate docs in a
@@ -6138,7 +6172,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@query("embedding_ivfpq_topk", None)
+@query("embedding_ivfpq_topk", stage="similarity")
 def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-ADC: the canonical production ANN (coarse IVF cells prune the
     corpus to the query's top-2 probed cells, PQ asymmetric distance
@@ -6223,7 +6257,7 @@ def _ann_sq_expr(vec_sql: str, q: list[float]) -> str:
     )
 
 
-@query("ann_recall_report", None)
+@query("ann_recall_report", stage="similarity")
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality ladder: recall@20 against the EXACT answer for three
     methods sharing one IVF layout (seed cells, 2 probed):
@@ -6458,7 +6492,7 @@ FROM k GROUP BY source ORDER BY source
 """
 
 
-@query("source_mixture_sample", None)
+@query("source_mixture_sample", stage="stats")
 def source_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pretraining data-mixture sampling: each source is down-sampled at
     its own target rate (the mixture-weights step of corpus assembly —
@@ -6510,7 +6544,7 @@ def _mixture_rollup(d: DataFrame) -> DataFrame:
 ORACLES["source_mixture_sample"] = _mixture_oracle()
 
 
-@query("streaming_source_mixture", None)
+@query("streaming_source_mixture", stage="streaming")
 def streaming_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of source_mixture_sample (11th streaming pattern):
     the md5-threshold membership test is STATELESS (content-keyed, so a
@@ -6535,7 +6569,7 @@ def streaming_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["streaming_source_mixture"] = ORACLES["source_mixture_sample"]
 
 
-@query("streaming_decontamination", None)
+@query("streaming_decontamination", stage="streaming")
 def streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of decontamination_overlap (9th streaming
     pattern): documents arrive as a stream, the benchmark shingle set is
@@ -6581,7 +6615,7 @@ def streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["streaming_decontamination"] = ORACLES["decontamination_overlap"]
 
 
-@query("streaming_sequence_packing", None)
+@query("streaming_sequence_packing", stage="streaming")
 def streaming_sequence_packing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of sequence_packing (10th streaming pattern):
     documents arrive as a stream and each md5 shard carries ONE long of
@@ -6663,6 +6697,7 @@ SELECT doc_id,
   lang AS meta_lang
 FROM documents ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def warc_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC ingest end-to-end: synthesize real per-record-gzip WARC
@@ -6714,6 +6749,7 @@ SELECT doc_id,
   CASE WHEN doc_id % 5 = 2 THEN NULL ELSE lang END AS meta_lang
 FROM documents ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def warc_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC member-level corruption RECOVERY, driver-proven: per-doc
@@ -6794,7 +6830,7 @@ def warc_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("dedup_rep_by_quality", None)
+@query("dedup_rep_by_quality", stage="dedup")
 def dedup_rep_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware dedup representative selection — the production
     form of keep-one-per-cluster: instead of min doc_id, each near-dup
@@ -6927,6 +6963,7 @@ SELECT doc_id,
   round(CAST(sum(r) AS DOUBLE) / (count(DISTINCT f) * max(w) * max(h)), 6) AS mean_y
 FROM c GROUP BY doc_id ORDER BY doc_id
 """,
+    stage="multimodal",
 )
 def video_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize→encode(REAL GIF89a: global color table + per-frame
@@ -6984,6 +7021,7 @@ SELECT doc_id, 'b', CAST(2 AS INT), CAST(length(source) AS BIGINT), 'und'
 FROM documents
 ORDER BY doc_id, sample_key
 """,
+    stage="multimodal",
 )
 def wds_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset shard ingest end-to-end: synthesize real tar shards
@@ -7034,6 +7072,7 @@ SELECT bucket,
   round(abs(sum(score)::DOUBLE / count(*) - sum(y)::DOUBLE / count(*)), 6) AS calib_gap
 FROM b GROUP BY bucket ORDER BY bucket
 """,
+    stage="eval",
 )
 def calibration_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration / reliability table (the model-monitoring staple the
@@ -7077,6 +7116,7 @@ SELECT round(sum((score - y) * (score - y))::DOUBLE / count(*), 6) AS brier,
        CAST(count(*) AS BIGINT) AS n
 FROM s
 """,
+    stage="eval",
 )
 def brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brier score (mean squared error of the probabilistic forecast)
@@ -7096,7 +7136,7 @@ def brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("corpus_curation_funnel", None)
+@query("corpus_curation_funnel", stage="dedup")
 def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE end-to-end pretraining-corpus curation pipeline as one
     cross-checked funnel — every LLM-data stage this engine implements,
@@ -7535,7 +7575,7 @@ FROM m ORDER BY doc_id
 """
 
 
-@query("lang_mixture", None)
+@query("lang_mixture", stage="text")
 def lang_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document language-MIXTURE fractions + dominant-language purity
     (operators/text.lang_mixture_df) — the multilingual-contamination
@@ -7569,6 +7609,7 @@ SELECT p.purchase_id, p.user_id,
 FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND c.click_ts <= p.ts
 ORDER BY p.purchase_id
 """,
+    stage="query",
 )
 def asof_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AS-OF join (operators/join.asof_join): every purchase event gets
@@ -7624,6 +7665,7 @@ WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey AND l_orderkey = o_ord
 GROUP BY l_orderkey, o_orderdate
 ORDER BY revenue DESC, o_orderdate_us, l_orderkey LIMIT 10
 """,
+    stage="query",
 )
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 (shipping priority): the canonical selective
@@ -7686,6 +7728,7 @@ SELECT source, bucket::INT AS bucket,
   max(n_tokens)::INT AS max_tokens
 FROM b GROUP BY source, bucket ORDER BY source, bucket
 """,
+    stage="text",
 )
 def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-length planning histogram: per-source doc counts and token
@@ -7729,7 +7772,7 @@ FROM k GROUP BY copies ORDER BY copies
 """
 
 
-@query("poisson_bootstrap_sample", None)
+@query("poisson_bootstrap_sample", stage="stats")
 def poisson_bootstrap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed bootstrap / bagging resample
     (operators/purify.poisson_copies_expr): per-row Poisson(1) copy
@@ -7785,6 +7828,7 @@ SELECT source, n_docs::BIGINT AS n_docs, mean_score,
   round(CAST(wdec AS DOUBLE) / CAST(sum(wdec) OVER () AS DOUBLE), 6) AS weight
 FROM w ORDER BY source
 """.format(qc_bias=_QC_BIAS, qc_w=_QC_W_SQL),
+    stage="text",
 )
 def mixture_weights_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pretraining mixture-weight assignment (the DoReMi-lite /
@@ -7855,6 +7899,7 @@ SELECT c.vec_id, c.cell, (d.vec_id IS NULL) AS keep
 FROM cells c LEFT JOIN drops d ON c.vec_id = d.vec_id
 ORDER BY c.vec_id
 """,
+    stage="similarity",
 )
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (operators/similarity.semantic_dedup_df): embedding-space
@@ -7919,7 +7964,7 @@ FROM agg a JOIN aug g USING (doc_id) ORDER BY a.doc_id
 """
 
 
-@query("bpe_tokenize", None)
+@query("bpe_tokenize", stage="text")
 def bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenization (operators/bpe.bpe_encode_df): the
     pinned merge table (PQ-codebook pattern) broadcast into an
@@ -7956,6 +8001,7 @@ SELECT p.user_id, p.purchase_id, epoch_us(p.ts) AS ts_us,
 FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND c.click_ts <= p.ts
 ORDER BY p.purchase_id
 """,
+    stage="streaming",
 )
 def streaming_asof_attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming AS-OF join (12th streaming pattern;
@@ -8020,7 +8066,7 @@ FROM j GROUP BY hbucket ORDER BY hbucket
 """
 
 
-@query("hilbert_skipping_stats", None)
+@query("hilbert_skipping_stats", stage="query")
 def hilbert_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hilbert-curve layout planning (operators/layout.hilbert_keys) —
     the better-locality sibling of zorder_skipping_stats: quantize
@@ -8070,6 +8116,7 @@ WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey AND l_suppkey = s_suppke
   AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
 GROUP BY n_name ORDER BY revenue DESC, n_name
 """,
+    stage="query",
 )
 def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 (local supplier volume): the canonical 6-way star join
@@ -8134,6 +8181,7 @@ WHERE o_orderkey IN (SELECT l_orderkey FROM big)
 GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
 ORDER BY o_totalprice DESC, o_orderdate_us, o_orderkey LIMIT 100
 """,
+    stage="query",
 )
 def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 (large-volume customers): the canonical
@@ -8195,6 +8243,7 @@ JOIN region ON n_regionkey = r_regionkey
 GROUP BY ROLLUP (r_name, n_name)
 ORDER BY gid, region, nation
 """,
+    stage="query",
 )
 def revenue_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical ROLLUP report (region -> nation -> grand total): the
@@ -8249,7 +8298,7 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
 
-@query("order_priority_pivot", None)
+@query("order_priority_pivot", stage="query")
 def order_priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT (long -> wide crosstab): order counts by status x priority.
     The pivot values are PINNED literals (``pivot(col, values)``), so
@@ -8286,6 +8335,7 @@ WHERE NOT EXISTS (
   WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
 ORDER BY c_custkey
 """,
+    stage="query",
 )
 def customers_without_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS / anti-join (the set-difference shape the registry
@@ -8326,6 +8376,7 @@ SELECT doc_id, cid::INT AS chunk_id,
     ' ')) AS chunk_digest
 FROM s ORDER BY doc_id, chunk_id
 """,
+    stage="text",
 )
 def rag_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping chunking (operators/text.chunk_spans_df): 64-token
@@ -8372,7 +8423,7 @@ FROM est ORDER BY exact_count DESC, user_id
 """
 
 
-@query("countmin_heavy_hitters", None)
+@query("countmin_heavy_hitters", stage="stats")
 def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch heavy hitters (operators/sketch): build a 4x32
     frequency sketch of event user_ids in ONE pass (the shuffle carries
@@ -8444,7 +8495,7 @@ ORDER BY h.user_id
 """
 
 
-@query("bloom_membership_report", None)
+@query("bloom_membership_report", stage="stats")
 def bloom_membership_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership (operators/sketch.bloom_build_df): build
     a 256-bit/k=3 filter over high-value purchasers (~32 of 150 users)
@@ -8506,7 +8557,7 @@ FROM e, x
 """
 
 
-@query("hll_distinct_report", None)
+@query("hll_distinct_report", stage="stats")
 def hll_distinct_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """From-scratch HyperLogLog (operators/sketch.hll_registers_df):
     64-register raw estimator over lineitem order keys — ONE pass, a
@@ -8570,7 +8621,7 @@ FROM est ORDER BY window_us, user_id
 """
 
 
-@query("streaming_countmin", None)
+@query("streaming_countmin", stage="streaming")
 def streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed Count-Min sketch over the event stream (13th streaming
     pattern; streaming/ops.streaming_cms_windowed): per-day 4x32
@@ -8615,7 +8666,7 @@ def streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["streaming_countmin"] = _streaming_cms_oracle()
 
 
-@query("dedup_groups_distributed", ORACLES["dedup_groups"])
+@query("dedup_groups_distributed", ORACLES["dedup_groups"], stage="dedup")
 def dedup_groups_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DISTRIBUTED regime of near-dup group resolution: identical
     composition to dedup_groups, but with the small-graph threshold
@@ -8676,7 +8727,7 @@ FROM e, x
 """
 
 
-@query("hll_union_report", None)
+@query("hll_union_report", stage="stats")
 def hll_union_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch MERGEABILITY (operators/sketch.hll_merge): union the
     click-user and purchase-user HLLs by register-wise max and estimate
@@ -8746,6 +8797,7 @@ SELECT check_name, metric, violations, (violations = 0) AS passed FROM (
   UNION ALL SELECT * FROM ref UNION ALL SELECT * FROM vals)
 ORDER BY check_name
 """,
+    stage="stats",
 )
 def dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality constraint suite (the Deequ/Great-Expectations
@@ -8825,7 +8877,7 @@ FROM e JOIN x ON e.source = x.source ORDER BY e.source
 """
 
 
-@query("hll_by_source", None)
+@query("hll_by_source", stage="stats")
 def hll_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED HLL — the production shape of sketch aggregation
     (GROUP BY dimension, sketch as the aggregation state): per-source
@@ -8876,7 +8928,7 @@ def hll_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["hll_by_source"] = _hll_by_source_oracle()
 
 
-@query("session_window_batch", ORACLES["streaming_sessionize"])
+@query("session_window_batch", ORACLES["streaming_sessionize"], stage="query")
 def session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native ``session_window`` in BATCH mode (Spark 3.2+): gap-based
     sessions as a first-class groupBy key — the engine merges
@@ -8913,6 +8965,7 @@ WHERE EXISTS (
     AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
 GROUP BY o_orderpriority ORDER BY o_orderpriority
 """,
+    stage="query",
 )
 def tpch_q4_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q4-shaped EXISTS semi-join (the schema has no
@@ -8952,6 +9005,7 @@ WITH w AS (
   FROM events)
 SELECT user_id, event_id, mov_avg FROM w ORDER BY user_id, event_id
 """,
+    stage="query",
 )
 def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLING-frame window (the one frame type the registry lacked:
@@ -9006,7 +9060,7 @@ GROUP BY d.source ORDER BY d.source
     )
 
 
-@query("bpe_fertility_by_source", None)
+@query("bpe_fertility_by_source", stage="text")
 def bpe_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer FERTILITY report (pieces per word, by source) — the
     standard tokenizer-quality metric (a vocabulary that fits the
@@ -9056,7 +9110,7 @@ FROM pr ORDER BY rank DESC, node LIMIT 20
 """
 
 
-@query("pagerank_part_supplier", None)
+@query("pagerank_part_supplier", stage="query")
 def pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (operators/graph.pagerank_df) over the symmetrized
     part–supplier bipartite graph from lineitem (node id = key*2 for
@@ -9130,7 +9184,7 @@ FROM scored ORDER BY doc_id
 """
 
 
-@query("bigram_logprob_quality", None)
+@query("bigram_logprob_quality", stage="text")
 def bigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated-bigram LM quality scoring
     (text.bigram_logprob_exprs) — the next step up the CCNet ladder
@@ -9172,6 +9226,7 @@ SELECT epoch_us(j.cohort_wk) AS cohort_week_us, j.week_offset,
 FROM j JOIN sizes s ON j.cohort_wk = s.cohort_wk
 ORDER BY cohort_week_us, week_offset
 """,
+    stage="query",
 )
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly COHORT RETENTION (the classic product-analytics triangle):
@@ -9224,6 +9279,7 @@ SELECT user_id AS key, count(*)::BIGINT AS n,
   max(value) AS mx
 FROM events GROUP BY user_id ORDER BY key
 """,
+    stage="streaming",
 )
 def streaming_gold_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Medallion GOLD-TABLE maintenance (14th streaming pattern;
@@ -9298,6 +9354,7 @@ SELECT count(*)::BIGINT AS n_users,
         CAST(greatest(count(*) FILTER (WHERE i1 > 0 AND i2r > 0), 1) AS DOUBLE), 6) AS click_to_purchase
 FROM st2
 """,
+    stage="query",
 )
 def event_funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential-pattern funnel (the product-analytics conversion
@@ -9399,6 +9456,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
 """,
+    stage="query",
 )
 def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 (forecasting revenue change): the pure predicate-pushdown
@@ -9446,6 +9504,7 @@ FROM (
 GROUP BY supp_nation, cust_nation, l_year
 ORDER BY supp_nation, cust_nation, l_year
 """,
+    stage="query",
 )
 def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 (volume shipping): bilateral trade volume between two
@@ -9510,6 +9569,7 @@ WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
 GROUP BY c_custkey, c_name, c_acctbal, n_name
 ORDER BY revenue DESC, c_custkey LIMIT 20
 """,
+    stage="query",
 )
 def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 (returned-item reporting): top-20 customers by lost
@@ -9570,6 +9630,7 @@ SELECT c_count::BIGINT AS c_count, count(*)::BIGINT AS custdist
 FROM c_orders GROUP BY c_count
 ORDER BY custdist DESC, c_count DESC
 """,
+    stage="query",
 )
 def tpch_q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 (customer order-count distribution): the double-
@@ -9609,6 +9670,7 @@ WHERE l_partkey = p_partkey
   AND l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
   AND l_shipdate < TIMESTAMP '1996-10-01 00:00:00'
 """,
+    stage="query",
 )
 def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 (promotion effect): conditional-aggregation ratio — the
@@ -9658,6 +9720,7 @@ WHERE s_suppkey = supplier_no
   AND total_revenue = (SELECT max(total_revenue) FROM revenue)
 ORDER BY s_suppkey
 """,
+    stage="query",
 )
 def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 (top supplier): join-back-against-a-scalar-aggregate —
@@ -9707,6 +9770,7 @@ WHERE p_partkey = l_partkey AND (
   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30))
 """,
+    stage="query",
 )
 def tpch_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 (discounted revenue): the disjunctive cross-table
@@ -9761,6 +9825,7 @@ FROM (
 ) all_nations
 GROUP BY o_year ORDER BY o_year
 """,
+    stage="query",
 )
 def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 (national market share): NATION_9's share of PROMO-part
@@ -9842,6 +9907,7 @@ FROM (
 ) profit
 GROUP BY nation, o_year ORDER BY nation, o_year DESC
 """,
+    stage="query",
 )
 def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 (product-type profit): revenue on parts whose name
@@ -9894,6 +9960,7 @@ WHERE p_partkey = l_partkey AND p_brand <> 'Brand#4'
 GROUP BY p_brand, p_type, p_size
 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 """,
+    stage="query",
 )
 def tpch_q16_supplier_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 (parts/supplier relationship): distinct-supplier counts
@@ -9947,6 +10014,7 @@ WHERE p_partkey = l_partkey AND a_partkey = l_partkey
   AND p_brand = 'Brand#2' AND p_size < 10
   AND l_quantity < qty_thresh
 """,
+    stage="query",
 )
 def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 (small-quantity-order revenue): the correlated-scalar-
@@ -10015,6 +10083,7 @@ WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
                     AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
 GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20
 """,
+    stage="query",
 )
 def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 (suppliers who kept orders waiting): the EXISTS +
@@ -10077,6 +10146,7 @@ WHERE c_acctbal > ab
                     AND o_orderpriority = '1-URGENT')
 GROUP BY c_nationkey ORDER BY nationkey
 """,
+    stage="query",
 )
 def tpch_q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 (global sales opportunity): above-average-balance
@@ -10137,7 +10207,7 @@ def _robust_stats_oracle() -> str:
     return robust_stats_oracle_sql("lineitem", _STATS_COLS) + "\nORDER BY column_name"
 
 
-@query("robust_column_stats", None)
+@query("robust_column_stats", stage="stats")
 def robust_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-column profile (quartiles / MAD / Tukey fences /
     outlier counts) — the heavy-tail complement of the moment-based
@@ -10172,6 +10242,7 @@ SELECT (SELECT count(*) FROM deg)::BIGINT AS n_nodes,
        round(3.0 * (SELECT t FROM tri) / (SELECT sum(d * (d - 1) // 2) FROM deg), 6)
          AS clustering
 """,
+    stage="query",
 )
 def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle census + global clustering coefficient of the part
@@ -10239,7 +10310,7 @@ SELECT {d} AS dims,
 _MRL_DIMS = [8, 16, 32, 64]
 
 
-@query("matryoshka_recall", _matryoshka_oracle(_MRL_DIMS))
+@query("matryoshka_recall", _matryoshka_oracle(_MRL_DIMS), stage="similarity")
 def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka (prefix-truncation) retrieval recall@10 at widths
     8/16/32/64 over the 64-d corpus — the dimension axis of the ANN
@@ -10265,6 +10336,7 @@ FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 ORDER BY gid, status, priority
 """,
+    stage="query",
 )
 def order_status_priority_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets (all four marginals of status × priority) —
@@ -10315,6 +10387,7 @@ FROM g JOIN customer ON o_custkey = c_custkey
 WHERE gap_us IS NOT NULL
 GROUP BY c_nationkey ORDER BY nationkey
 """,
+    stage="query",
 )
 def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-order gap profile (lag window): per-customer consecutive
@@ -10361,6 +10434,7 @@ SELECT o_orderpriority AS priority,
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY o_orderpriority ORDER BY priority
 """,
+    stage="query",
 )
 def salted_skew_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large×large equi-join through the MANUAL salting path
@@ -10432,6 +10506,7 @@ WHERE (length(lw) = length(sw)
              i -> substr(lw, 1, i - 1) || substr(lw, i + 1, length(lw)) = sw)) > 0)
 ORDER BY word_a, word_b
 """,
+    stage="dedup",
 )
 def fuzzy_vocab_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy vocabulary matching (spelling-variant / OCR-noise
@@ -10492,6 +10567,7 @@ SELECT c_mktsegment AS segment, count(*)::BIGINT AS n_customers,
 FROM r WHERE rn = 1 AND op <> 'D'
 GROUP BY c_mktsegment ORDER BY segment
 """,
+    stage="query",
 )
 def cdc_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch CDC MERGE (the Delta/Iceberg `MERGE INTO` semantics as a
@@ -10552,6 +10628,7 @@ SELECT (valid_to IS NULL) AS is_current, count(*)::BIGINT AS n_intervals,
   coalesce(sum((valid_to - valid_from) // 86400000000), 0)::BIGINT AS total_days
 FROM iv GROUP BY is_current ORDER BY is_current
 """,
+    stage="query",
 )
 def scd2_segment_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type-2 history build (operators/cdc.scd2_intervals): a
@@ -10608,6 +10685,7 @@ SELECT event_type, count(*)::BIGINT AS n_events,
   round(sum(cast(value AS DECIMAL(38,10)))::DOUBLE, 4) AS total_value
 FROM events GROUP BY event_type ORDER BY event_type
 """,
+    stage="streaming",
 )
 def streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-ID deduplication — the 15th streaming pattern
@@ -10667,6 +10745,7 @@ SELECT (click_id IS NOT NULL) AS attributed,
   count(DISTINCT purchase_id)::BIGINT AS n_purchases
 FROM emitted GROUP BY attributed ORDER BY attributed
 """,
+    stage="streaming",
 )
 def streaming_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER interval join — the hardest
@@ -10736,6 +10815,7 @@ FROM iv JOIN pts p ON p.pt >= iv.lo AND p.pt < iv.hi
 GROUP BY iv.hr
 ORDER BY window_start
 """,
+    stage="query",
 )
 def busy_window_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure RANGE join (no equi key) at scale: profile every event
@@ -10829,6 +10909,7 @@ SELECT r_score::INT AS r_score, f_score::INT AS f_score, m_score::INT AS m_score
   round(sum(CAST(mon_cents AS DECIMAL(38,10)))::DOUBLE / (count(*) * 100), 4) AS avg_monetary
 FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 """,
+    stage="query",
 )
 def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation — the classic customer-value grid (recency /
@@ -10958,6 +11039,7 @@ SELECT event_type, day::BIGINT AS day, n::BIGINT AS n_events,
   END AS is_anomaly
 FROM w ORDER BY event_type, day
 """,
+    stage="stats",
 )
 def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-window anomaly detection on the event time series:
@@ -11031,6 +11113,7 @@ SELECT source, bin_id::BIGINT AS bin_id,
   (sum(bytes) >= 131072) AS full_bin
 FROM planned GROUP BY source, bin_id ORDER BY source, bin_id
 """,
+    stage="query",
 )
 def compaction_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction planner — the lakehouse maintenance shape
@@ -11110,7 +11193,7 @@ FROM it{iters} ORDER BY dim
     )
 
 
-@query("pca_power_iteration", _pca_oracle())
+@query("pca_power_iteration", _pca_oracle(), stage="similarity")
 def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal direction of the embedding table (uncentered
     second-moment matrix) — the linear-algebra member of the iterative
@@ -11140,6 +11223,7 @@ FROM customer
 WHERE c_acctbal > 1000.0 AND c_mktsegment = 'BUILDING' OR c_acctbal < 0.0
 GROUP BY c_mktsegment ORDER BY segment
 """,
+    stage="query",
 )
 def ns_purify_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NSColumn namespaced-header addressing end-to-end (column/
@@ -11243,6 +11327,7 @@ WHERE p_partkey = m_partkey AND cost_um = min_cost
 ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
 LIMIT 100
 """,
+    stage="query",
 )
 def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 (minimum-cost supplier): for every small STANDARD part,
@@ -11341,6 +11426,7 @@ GROUP BY l_partkey, t_e4
 HAVING sum(value_e4)::BIGINT * 1000 > t_e4
 ORDER BY stock_value DESC, partkey
 """,
+    stage="query",
 )
 def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 (important stock identification): per-part stock value
@@ -11423,6 +11509,7 @@ WHERE o_orderkey = l_orderkey
   AND l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
 GROUP BY l_returnflag ORDER BY ship_class
 """,
+    stage="query",
 )
 def tpch_q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 (shipping modes and order priority): per ship class,
@@ -11480,6 +11567,7 @@ WHERE s_nationkey = n_nationkey AND s_suppkey = l_suppkey
   AND n_nationkey < 13
 ORDER BY s_name
 """,
+    stage="query",
 )
 def tpch_q20_excess_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 (potential part promotion): suppliers in half the
@@ -11542,7 +11630,7 @@ def tpch_q20_excess_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query("wdl_forward_pinned", None)
+@query("wdl_forward_pinned", stage="train")
 def wdl_forward_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide&Deep scoring with PINNED weights — the hash-checkable half of
     the W&D family (the fit stays rows-only). Drives the REAL scoring
@@ -11623,7 +11711,7 @@ FROM h ORDER BY l_orderkey, l_linenumber
 """
 
 
-@query("wdl_train", None)
+@query("wdl_train", stage="train")
 def wdl_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Wide&Deep training (core/dtrain/wdl BSP as mapInPandas
     partial gradients + driver optimizer, ml/wdl.py — wide sparse
@@ -11659,7 +11747,7 @@ def wdl_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fit_invariant_rows(spark, model.train_losses, auc, 0.9)
 
 
-@query("wdl_ensemble_pinned", None)
+@query("wdl_ensemble_pinned", stage="train")
 def wdl_ensemble_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bagged Wide&Deep ENSEMBLE scoring with PINNED weights — W&D wired
     through the family-agnostic combo path: per-model scores come from
@@ -11760,7 +11848,7 @@ FROM s ORDER BY l_orderkey, l_linenumber
 """
 
 
-@query("wdl_train_minibatch", None)
+@query("wdl_train_minibatch", stage="train")
 def wdl_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide&Deep MINI-BATCH training — the reference's actual training
     regime (WDLWorker iterates on per-superstep subsamples the way

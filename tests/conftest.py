@@ -34,7 +34,6 @@ _SLOW_ONLY = (
     "tests/test_operators.py::TestContinuationRound6Ops::test_cdc_merge_same_seq_same_op_payload_tiebreak",
     "tests/test_ga_varselect.py::TestGramFitness::test_gram_matches_numpy",
     "tests/test_ga_varselect.py::TestGAVarselect::test_recovers_informative_features",
-    "tests/test_cache_discipline.py::test_weighted_single_scan_matches_two_machinery_form",
     "tests/test_cache_discipline.py::test_streaming_queries_drop_memory_sinks",
     "tests/test_cache_discipline.py::test_bm25_and_ann_release_caches",
     "tests/test_cache_discipline.py::test_dedup_queries_release_caches",

@@ -973,6 +973,12 @@ class TestCurveRangeForms:
             try:
                 assert _range_count(_score_points(df, "score", self.label, "w")) == 1, name
                 derived = self._results(df, None)
+                # the rank-statistic ROC AUC and the single-scan trapezoid agree
+                assert derived["roc"][0]["auc"] == derived["curve"][0]["auc"], name
+                assert (
+                    derived["weighted_roc"][0]["auc"]
+                    == derived["weighted_curve"][0]["weighted_auc"]
+                ), name
                 for n in (4, 8):
                     forced = self._results(df, n)
                     for k in derived:
@@ -1020,6 +1026,24 @@ class TestCurveRangeForms:
         assert (n1, cached1, joined1) == (1, 0, False)
         assert n > 1 and cached == 1 and joined
         assert (points, curve) == (points1, curve1)
+
+    @pytest.mark.parametrize("num_ranges", [None, 4])
+    def test_weighted_gains_zero_total_weight(self, spark, num_ranges):
+        """Every weight 0: the action rate has no denominator. The gains
+        table gives NULL rates, as the other weighted curves do, instead
+        of an ANSI divide-by-zero. Like the DuckDB mirror, least() skips
+        the NULL, so every point lands in the last bucket and its
+        max-score point is the one row."""
+        from shifu_spark.operators.eval_metrics import weighted_gain_buckets_df
+
+        rows = [(i / 100.0, int(i % 3 == 0), "0") for i in range(100)]
+        df = self._cached(spark, rows)
+        try:
+            out = weighted_gain_buckets_df(df, "score", self.label, "w", num_ranges=num_ranges)
+            got = [tuple(r) for r in out.collect()]
+        finally:
+            df.unpersist()
+        assert got == [(10, 0.99, None, None, None)]
 
     def test_curve_metrics_job_count(self, spark):
         """A 12k-row eval set takes the one-range form: a handful of
@@ -1406,6 +1430,40 @@ class TestPQArrowDifferential:
             a = [tuple(r) for r in pq_encode_df(emb, books).orderBy("vec_id").collect()]
             b = [tuple(r) for r in pq_encode_arrow(emb, books).orderBy("vec_id").collect()]
             assert a == b, f"k={k}: arrow/expression code divergence"
+
+
+def test_query_registry_rejects_unknown_stage():
+    """The bench stage is declared with the query; a stage outside the
+    known set fails when the decorator runs, so at import time."""
+    from shifu_spark import queries
+
+    saved = {d: dict(getattr(queries, d)) for d in ("QUERIES", "ORACLES", "STAGES")}
+    try:
+        with pytest.raises(ValueError, match="unknown stage 'evl'"):
+            queries.query("__stage_probe", "SELECT 1", stage="evl")
+        assert "__stage_probe" not in queries.QUERIES
+
+        @queries.query("__stage_probe", "SELECT 1", stage="eval")
+        def _probe(spark, sf_dir):
+            return spark.range(1)
+
+        assert queries.STAGES["__stage_probe"] == "eval"
+        assert queries.QUERIES["__stage_probe"] is _probe
+    finally:
+        for d, v in saved.items():
+            getattr(queries, d).clear()
+            getattr(queries, d).update(v)
+    assert "__stage_probe" not in queries.STAGES
+
+
+def test_bench_r01_headline_registered():
+    """baseline_comparable_value sums the fixed 23-query r01 set, so
+    every one of those names must stay registered."""
+    import bench
+    from shifu_spark.queries import QUERIES
+
+    assert len(bench.R01_HEADLINE) == len(set(bench.R01_HEADLINE)) == 23
+    assert set(bench.R01_HEADLINE) <= set(QUERIES)
 
 
 def test_bench_nearest_probe_factor():

@@ -210,3 +210,45 @@ def test_numeric_stats_match_duckdb_on_dirty_text(spark):
     ).fetchone()
     assert got.total_count == len(vals)
     assert (got.valid_count, got.distinct_count, got.min, got.max, got.p25, got.median, got.p75) == want
+
+
+def _persistent_rdd_count(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_run_stats_releases_cache_on_failure(spark, sf_dir, lineitem_mc, monkeypatch):
+    """A step that fails after the tagged rows are cached and scanned
+    must not pin that cache for the life of the session."""
+    from shifu_spark.operators import ksiv
+    from shifu_spark.pipeline import init_columns, run_stats
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    ccs = init_columns(li, lineitem_mc)
+
+    def fail(neg, pos):
+        raise RuntimeError("injected stats failure")
+
+    monkeypatch.setattr(ksiv, "column_metrics_from_counts", fail)
+    before = _persistent_rdd_count(spark)
+    with pytest.raises(RuntimeError, match="injected stats failure"):
+        run_stats(li, lineitem_mc, ccs)
+    assert _persistent_rdd_count(spark) <= before
+
+
+def test_run_pipeline_releases_caches_on_failure(spark, sf_dir, lineitem_mc, monkeypatch):
+    """Training that fails after reading the cached normalized rows must
+    not leave them cached."""
+    from shifu_spark.ml import train
+    from shifu_spark.pipeline import run_pipeline
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(2000)
+
+    def fail(assembled, params, n_features):
+        assembled.count()  # materializes the normalized cache
+        raise RuntimeError("injected train failure")
+
+    monkeypatch.setattr(train, "train_models", fail)
+    before = _persistent_rdd_count(spark)
+    with pytest.raises(RuntimeError, match="injected train failure"):
+        run_pipeline(li, lineitem_mc, algorithm="LR")
+    assert _persistent_rdd_count(spark) <= before
