@@ -312,12 +312,7 @@ def dynamic_bin_merge(small_bins: list[tuple[float, int]], target_bins: int) -> 
 # at/above it — ColumnConfig.java:76-79, BinUtils hybrid split)
 # ---------------------------------------------------------------------------
 
-def hybrid_bin_index_expr(
-    col: Column | str,
-    threshold: float,
-    boundaries: list[float],
-    categories: list[str],
-) -> Column:
+def hybrid_bin_index_expr(col: Column | str, boundaries: list[float], categories: list[str]) -> Column:
     """Bin lookup for hybrid columns (ColumnType.H), matching the
     reference's lookup order (Normalizer.woeNormalize:622-640):
 
@@ -326,12 +321,12 @@ def hybrid_bin_index_expr(
       2. miss -> parse as number -> numeric boundary bin;
       3. null / unparseable -> the final missing slot.
 
-    ``threshold`` governs which values were COLLECTED as categories at
-    binning time (BinningPartialDataUDF:119-135: NaN or value <
-    hybridThreshold go to the categorical binning; default -inf = only
-    non-numeric tokens), so at lookup time a value on the numeric side
-    simply misses the map — categorical-first lookup is the reference's
-    exact order and needs no threshold gate here.
+    The hybridThreshold acts only at binning time, where it decides which
+    values are COLLECTED as categories (BinningPartialDataUDF:119-135:
+    NaN or value < hybridThreshold go to the categorical binning), so at
+    lookup time a value on the numeric side simply misses the map:
+    categorical-first lookup is the reference's exact order and takes
+    no threshold.
 
     Index layout (BinUtils hybrid split): [numeric bins][cate bins][missing].
 
@@ -346,7 +341,6 @@ def hybrid_bin_index_expr(
     map-over-raw-string order) so they resolve to their category slot
     rather than falling through to the missing slot.
     """
-    _ = threshold  # binning-time parameter; lookup is categorical-first
     c = F.col(col) if isinstance(col, str) else col
     cd = c.try_cast("double")
     n_num = len(boundaries)
@@ -364,16 +358,3 @@ def hybrid_bin_index_expr(
         .when(fmt_idx >= n_num, fmt_idx)
         .otherwise(num_idx)
     )
-
-
-def hybrid_is_category_expr(col: Column | str, threshold: float | None) -> Column:
-    """Binning-time split predicate for hybrid columns
-    (BinningPartialDataUDF:119-135): a token goes to the CATEGORICAL
-    binning when it is non-numeric/NaN or its numeric value is below
-    ``hybridThreshold`` (null threshold -> -inf: only non-numeric)."""
-    c = F.col(col) if isinstance(col, str) else col
-    cd = c.try_cast("double")
-    is_cat = c.isNotNull() & cd.isNull()  # unparseable token
-    if threshold is not None:
-        is_cat = is_cat | (cd < F.lit(float(threshold)))
-    return is_cat

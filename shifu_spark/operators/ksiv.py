@@ -26,7 +26,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 EPS = 1e-10
@@ -86,8 +86,8 @@ def bin_counts_df(
     # place (a bare try_cast would sum the row as 0 instead). Non-finite
     # weights ('NaN'/'Infinity' DO parse in Java) also default to 1.0 —
     # the engine's garbage-weight rule (one NaN would poison the whole
-    # column's bin weights; same rationale as clamp_weight/jexl_weight,
-    # r10). Negative weights are counted but NOT clamped in the stats
+    # column's bin weights; same rationale as clamp_weight/jexl_weight).
+    # Negative weights are counted but NOT clamped in the stats
     # path — unlike the eval clamp (ConfusionMatrix.java:361-370).
     if weight_col:
         from shifu_spark.functions.nonvalue import is_nonvalue
@@ -119,32 +119,43 @@ def bin_counts_df(
     )
 
 
+def woe_df(counts: DataFrame, pos: Column | str, neg: Column | str, partition: str | None = None) -> DataFrame:
+    """Add the class totals ``sum_p``/``sum_n``, the class shares
+    ``p``/``n`` and the per-bin ``woe`` to a counts frame, one WOE table
+    per ``partition`` value (the whole frame when None).
+
+    ``p``/``n`` use try_divide: a one-class population (sum_p or sum_n
+    == 0) must yield NULL ratios like the DuckDB oracle's /0, not an
+    ANSI DIVIDE_BY_ZERO crash. The reference's Java double-division
+    would give Inf/NaN here; NULL is the engine's portable spelling of
+    "undefined".
+    """
+    pos = F.col(pos) if isinstance(pos, str) else pos
+    neg = F.col(neg) if isinstance(neg, str) else neg
+    wall = Window.partitionBy(*([partition] if partition else []))
+    return (
+        counts.withColumn("sum_p", F.sum(pos).over(wall))
+        .withColumn("sum_n", F.sum(neg).over(wall))
+        .withColumn("p", F.try_divide(pos, F.col("sum_p")))
+        .withColumn("n", F.try_divide(neg, F.col("sum_n")))
+        .withColumn("woe", F.log((F.col("n") + EPS) / (F.col("p") + EPS)))
+    )
+
+
 def ksiv_df(counts: DataFrame, pos_col: str = "bin_count_pos", neg_col: str = "bin_count_neg", round_to: int | None = 6) -> DataFrame:
     """Window-function KS/IV/WOE plan over a (column_name, bin, pos, neg) table.
 
     Stays fully distributed: windows partition by column_name (cols × bins
     rows total — trivially small after the count agg at any scale).
     """
-    wcol = Window.partitionBy("column_name")
     # NULLS LAST pins the MISSING bin to the end of the cumulative
     # walk on both engines (the reference appends the missing slot
     # after the real bins; Spark's asc default is NULLS FIRST while
     # DuckDB's is NULLS LAST — a silent KS/IV split on dirty data)
-    wcum = wcol.orderBy(F.asc_nulls_last("bin")).rowsBetween(Window.unboundedPreceding, 0)
-    pos = F.col(pos_col).cast("double")
-    neg = F.col(neg_col).cast("double")
+    wcum = Window.partitionBy("column_name").orderBy(F.asc_nulls_last("bin")).rowsBetween(Window.unboundedPreceding, 0)
     t = (
-        counts.withColumn("sum_p", F.sum(pos).over(wcol))
-        .withColumn("sum_n", F.sum(neg).over(wcol))
-        # try_divide: a one-class population (sum_p or sum_n == 0) must
-        # yield NULL ratios like the DuckDB oracle's /0, not an ANSI
-        # DIVIDE_BY_ZERO crash (r10 degenerate-population audit; the
-        # reference's Java double-division would give Inf/NaN here —
-        # NULL is the engine's portable spelling of "undefined")
-        .withColumn("p", F.try_divide(pos, F.col("sum_p")))
-        .withColumn("n", F.try_divide(neg, F.col("sum_n")))
-        .withColumn("woe_bin", F.log((F.col("n") + EPS) / (F.col("p") + EPS)))
-        .withColumn("iv_term", (F.col("n") - F.col("p")) * F.col("woe_bin"))
+        woe_df(counts, F.col(pos_col).cast("double"), F.col(neg_col).cast("double"), "column_name")
+        .withColumn("iv_term", (F.col("n") - F.col("p")) * F.col("woe"))
         .withColumn("cum_p", F.sum("p").over(wcum))
         .withColumn("cum_n", F.sum("n").over(wcum))
     )

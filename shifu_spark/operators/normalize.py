@@ -59,6 +59,23 @@ def zscore_expr(col: Column | str, mean: float, std: float, cutoff: float = 6.0)
     return (clipped - mean) / std
 
 
+def zscore_sums_expr(x: Column, n: Column, s1: Column, s2: Column) -> Column:
+    """(clip(x, mean±6·std) - mean) / std with the mean and std taken
+    from power sums: n = count, s1 = Σx, s2 = Σx². The cut-off is
+    ZSCALE's default 6σ; the configured one goes through zscore_expr.
+
+    std is the stats step's sqrt(|s2 - s1²/n + EPS| / (n - 1)), EPS =
+    1e-10 (UpdateBinningInfoReducer.java:355). The (n - 1) and ``/ std``
+    divisions use try_divide: a one-row population has no sample std,
+    so its z is NULL like the DuckDB oracle's /0, not an ANSI
+    DIVIDE_BY_ZERO crash.
+    """
+    mean = s1 / n
+    std = F.sqrt(F.abs(F.try_divide(s2 - s1 * s1 / n + F.lit(1e-10), n - 1)))
+    clipped = F.least(F.greatest(x, mean - 6 * std), mean + 6 * std)
+    return F.try_divide(clipped - mean, std)
+
+
 def woe_expr(col: Column | str, boundaries: list[float], bin_woes: list[float], missing_woe: float | None = None) -> Column:
     """value -> bin -> woe, missing -> LAST bin's woe (Normalizer.java:619-657).
 
@@ -149,12 +166,6 @@ def tag_expr_multiclass(tag_col: str, tag_sets: list[list[str]]) -> Column:
     return e.otherwise(F.lit(None).cast("double"))
 
 
-def tag_expr_linear(tag_col: str) -> Column:
-    """Linear-target recode (NormalizeUDF.java:340-352): parse the raw tag
-    as double; unparseable -> NULL (caller drops, as the reference skips)."""
-    return F.col(tag_col).try_cast("double")
-
-
 def normalize_df(
     df: DataFrame,
     configs: list[ColumnConfig],
@@ -214,9 +225,7 @@ def normalize_df(
             if cc.is_hybrid:
                 from shifu_spark.operators.binning import hybrid_bin_index_expr
 
-                idx = hybrid_bin_index_expr(
-                    name, cc.hybrid_threshold, b.bin_boundary, b.bin_category
-                )
+                idx = hybrid_bin_index_expr(name, b.bin_boundary, b.bin_category)
                 arr = F.array(*[F.lit(float(x)) for x in woes])
                 return F.element_at(arr, idx + 1)
             if cc.is_categorical:

@@ -299,6 +299,8 @@ def zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean/std come from DECIMAL power sums in a broadcast 1-row agg, so the
     whole plan is one scan + one select — and bit-deterministic.
     """
+    from shifu_spark.operators.normalize import zscore_sums_expr
+
     li = _t(spark, sf_dir, "lineitem")
     aggs = []
     for c in _ZS_COLS:
@@ -312,11 +314,7 @@ def zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_cols = [F.col("l_orderkey"), F.col("l_linenumber")]
     for c in _ZS_COLS:
         n, s1, s2 = F.col(f"{c}__n"), F.col(f"{c}__s1"), F.col(f"{c}__s2")
-        mean = s1 / n
-        std = F.sqrt(F.abs((s2 - s1 * s1 / n + F.lit(1e-10)) / (n - 1)))
-        x = F.col(c).cast("double")
-        clipped = F.least(F.greatest(x, mean - 6 * std), mean + 6 * std)
-        out_cols.append(F.round((clipped - mean) / std, 6).alias(f"z_{c}"))
+        out_cols.append(F.round(zscore_sums_expr(F.col(c).cast("double"), n, s1, s2), 6).alias(f"z_{c}"))
     return li.crossJoin(F.broadcast(mm)).select(*out_cols)
 
 
@@ -352,6 +350,7 @@ def woe_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin counts -> deterministic.
     """
     from shifu_spark.operators.binning import equal_interval_bin_expr
+    from shifu_spark.operators.ksiv import woe_df
 
     li = _t(spark, sf_dir, "lineitem")
     k = 10
@@ -363,17 +362,7 @@ def woe_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(is_pos, 1).otherwise(0)).alias("pos"),
         F.sum(F.when(is_pos, 0).otherwise(1)).alias("neg"),
     )
-    from pyspark.sql import Window
-
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    woes = counts.withColumn("sum_p", F.sum("pos").over(wall)).withColumn(
-        "sum_n", F.sum("neg").over(wall)
-    ).select(
-        "bin",
-        F.log(
-            (F.col("neg") / F.col("sum_n") + F.lit(1e-10)) / (F.col("pos") / F.col("sum_p") + F.lit(1e-10))
-        ).alias("woe"),
-    )
+    woes = woe_df(counts, "pos", "neg").select("bin", "woe")
     return (
         binned.join(F.broadcast(woes), "bin")
         .select("l_orderkey", "l_linenumber", F.round(F.col("woe"), 6).alias("woe_l_quantity"))
@@ -2957,34 +2946,18 @@ def hybrid_column_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Slot layout [numeric][cate][missing] (BinUtils hybrid split); lookup
     is categorical-first (woeNormalize:622-640). Output: per-row slot +
     that slot's count-woe."""
-    from pyspark.sql import Window
-
     from shifu_spark.operators.binning import hybrid_bin_index_expr
+    from shifu_spark.operators.ksiv import woe_df
 
     li = _t(spark, sf_dir, "lineitem")
-    slot = hybrid_bin_index_expr("l_quantity", 3.0, [3.0, 20.0, 40.0], ["1.00", "2.00"])
+    slot = hybrid_bin_index_expr("l_quantity", [3.0, 20.0, 40.0], ["1.00", "2.00"])
     is_pos = F.col("l_returnflag") == "R"
     t = li.select(
         "l_orderkey", "l_linenumber", slot.cast("int").alias("slot"),
         F.when(is_pos, 1).otherwise(0).alias("y"),
     )
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    woes = (
-        t.groupBy("slot")
-        .agg(F.sum("y").alias("pos"), F.sum(F.lit(1) - F.col("y")).alias("neg"))
-        .withColumn("sum_p", F.sum("pos").over(wall))
-        .withColumn("sum_n", F.sum("neg").over(wall))
-        .select(
-            "slot",
-            F.round(
-                F.log(
-                    (F.col("neg") / F.col("sum_n") + F.lit(1e-10))
-                    / (F.col("pos") / F.col("sum_p") + F.lit(1e-10))
-                ),
-                6,
-            ).alias("woe"),
-        )
-    )
+    counts = t.groupBy("slot").agg(F.sum("y").alias("pos"), F.sum(F.lit(1) - F.col("y")).alias("neg"))
+    woes = woe_df(counts, "pos", "neg").select("slot", F.round("woe", 6).alias("woe"))
     return t.join(F.broadcast(woes), "slot").select("l_orderkey", "l_linenumber", "slot", "woe")
 
 
@@ -3473,6 +3446,7 @@ def discrete_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — still a single data pass."""
     from shifu_spark.functions.nonvalue import is_value
     from shifu_spark.operators.binning import equal_interval_bin_expr
+    from shifu_spark.operators.normalize import zscore_sums_expr
 
     li = _t(spark, sf_dir, "lineitem")
     k = 5
@@ -3486,12 +3460,9 @@ def discrete_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((val * val).cast("decimal(38,10)")).cast("double").alias("s2"),
     )
     n, s1, s2, mn, mx = F.col("n"), F.col("s1"), F.col("s2"), F.col("mn"), F.col("mx")
-    mean = s1 / n
-    std = F.sqrt(F.abs((s2 - s1 * s1 / n + F.lit(1e-10)) / (n - 1)))
     bin_ = equal_interval_bin_expr(v, mn, mx, k)
     snapped = mn + bin_ * ((mx - mn) / k)
-    clipped = F.least(F.greatest(snapped, mean - 6 * std), mean + 6 * std)
-    z = F.when(bin_.isNull(), F.lit(0.0)).otherwise(F.round((clipped - mean) / std, 6))
+    z = F.when(bin_.isNull(), F.lit(0.0)).otherwise(F.round(zscore_sums_expr(snapped, n, s1, s2), 6))
     return li.crossJoin(F.broadcast(mm)).select("l_orderkey", "l_linenumber", z.alias("dz_l_quantity"))
 
 
@@ -3530,6 +3501,8 @@ def woe_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from shifu_spark.operators.binning import equal_interval_bin_expr
+    from shifu_spark.operators.ksiv import woe_df
+    from shifu_spark.operators.normalize import zscore_sums_expr
 
     li = _t(spark, sf_dir, "lineitem")
     k = 10
@@ -3542,28 +3515,18 @@ def woe_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(is_pos, 0).otherwise(1)).alias("neg"),
     )
     wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    woes = counts.withColumn("sum_p", F.sum("pos").over(wall)).withColumn(
-        "sum_n", F.sum("neg").over(wall)
-    ).withColumn(
-        "woe",
-        F.log((F.col("neg") / F.col("sum_n") + F.lit(1e-10)) / (F.col("pos") / F.col("sum_p") + F.lit(1e-10))),
-    ).withColumn("cnt", F.col("pos") + F.col("neg"))
-    # woe-population mean/std over ALL rows, computed from the k bin rows
+    # woe-population power sums over ALL rows, computed from the k bin
+    # rows; each bin's z is computed once, before the join
     woes = (
-        woes.withColumn("tot", F.sum("cnt").over(wall))
+        woe_df(counts, "pos", "neg")
+        .withColumn("cnt", F.col("pos") + F.col("neg"))
+        .withColumn("tot", F.sum("cnt").over(wall))
         .withColumn("wsum", F.sum(F.col("cnt") * F.col("woe")).over(wall))
         .withColumn("wsum2", F.sum(F.col("cnt") * F.col("woe") * F.col("woe")).over(wall))
-        .withColumn("wm", F.col("wsum") / F.col("tot"))
-        .withColumn(
-            "ws",
-            F.sqrt(F.abs((F.col("wsum2") - F.col("wsum") * F.col("wsum") / F.col("tot") + F.lit(1e-10)) / (F.col("tot") - 1))),
-        )
-        .select("bin", "woe", "wm", "ws")
     )
-    clipped = F.least(F.greatest(F.col("woe"), F.col("wm") - 6 * F.col("ws")), F.col("wm") + 6 * F.col("ws"))
-    return binned.join(F.broadcast(woes), "bin").select(
-        "l_orderkey", "l_linenumber", F.round((clipped - F.col("wm")) / F.col("ws"), 6).alias("wz_l_quantity")
-    )
+    wz = zscore_sums_expr(F.col("woe"), F.col("tot"), F.col("wsum"), F.col("wsum2"))
+    woes = woes.select("bin", F.round(wz, 6).alias("wz_l_quantity"))
+    return binned.join(F.broadcast(woes), "bin").select("l_orderkey", "l_linenumber", "wz_l_quantity")
 
 
 ORACLES["woe_zscore_normalize"] = """
@@ -3606,43 +3569,23 @@ def hybrid_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID (Normalizer.java:687-700): numeric -> zscore, categorical ->
     woe — both in ONE select. Categorical woe table is per-category counts
     (CategoricalBinning), broadcast back."""
-    from pyspark.sql import Window
+    from shifu_spark.operators.ksiv import woe_df
 
     li = _t(spark, sf_dir, "lineitem")
-    v = F.col("l_quantity").cast("double")
-    mm = li.agg(
-        F.count(v).alias("n"),
-        F.sum(v.cast("decimal(38,10)")).cast("double").alias("s1"),
-        F.sum((v * v).cast("decimal(38,10)")).cast("double").alias("s2"),
-    )
     is_pos = F.col("l_linestatus") == "F"
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cate = (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(is_pos, 1).otherwise(0)).alias("pos"),
-            F.sum(F.when(is_pos, 0).otherwise(1)).alias("neg"),
-        )
-        .withColumn("sum_p", F.sum("pos").over(wall))
-        .withColumn("sum_n", F.sum("neg").over(wall))
-        .select(
-            "l_returnflag",
-            F.log(
-                (F.col("neg") / F.col("sum_n") + F.lit(1e-10)) / (F.col("pos") / F.col("sum_p") + F.lit(1e-10))
-            ).alias("cate_woe"),
-        )
+    counts = li.groupBy("l_returnflag").agg(
+        F.sum(F.when(is_pos, 1).otherwise(0)).alias("pos"),
+        F.sum(F.when(is_pos, 0).otherwise(1)).alias("neg"),
     )
-    n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
-    mean = s1 / n
-    std = F.sqrt(F.abs((s2 - s1 * s1 / n + F.lit(1e-10)) / (n - 1)))
-    clipped = F.least(F.greatest(v, mean - 6 * std), mean + 6 * std)
+    cate = woe_df(counts, "pos", "neg").select("l_returnflag", F.col("woe").alias("cate_woe"))
+    mm, zq = _zscore_parts(li)
     return (
         li.crossJoin(F.broadcast(mm))
         .join(F.broadcast(cate), "l_returnflag")
         .select(
             "l_orderkey",
             "l_linenumber",
-            F.round((clipped - mean) / std, 6).alias("z_l_quantity"),
+            zq.alias("z_l_quantity"),
             F.round("cate_woe", 6).alias("woe_l_returnflag"),
         )
     )
@@ -3671,19 +3614,17 @@ FROM lineitem l CROSS JOIN mm JOIN cate c USING (l_returnflag)
 
 
 def _zscore_parts(li):
-    """Shared decimal-deterministic zscore pieces for l_quantity
-    (mirrors the zscore/hybrid normalize queries)."""
+    """Decimal-deterministic zscore pieces for l_quantity: the 1-row
+    power-sum frame to broadcast and the rounded z column over it."""
+    from shifu_spark.operators.normalize import zscore_sums_expr
+
     v = F.col("l_quantity").cast("double")
     mm = li.agg(
         F.count(v).alias("n"),
         F.sum(v.cast("decimal(38,10)")).cast("double").alias("s1"),
         F.sum((v * v).cast("decimal(38,10)")).cast("double").alias("s2"),
     )
-    n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
-    mean = s1 / n
-    std = F.sqrt(F.abs((s2 - s1 * s1 / n + F.lit(1e-10)) / (n - 1)))
-    clipped = F.least(F.greatest(v, mean - 6 * std), mean + 6 * std)
-    return mm, F.round((clipped - mean) / std, 6)
+    return mm, F.round(zscore_sums_expr(v, F.col("n"), F.col("s1"), F.col("s2")), 6)
 
 
 _ZQ_SQL = """round((least(greatest(l.l_quantity, (s1/n) - 6*sqrt(abs((s2 - s1*s1/n + 1e-10)/(n-1)))),
@@ -3731,32 +3672,17 @@ def weight_hybrid_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEIGHT_HYBRID (Normalizer.java:687-700 isWeightedNorm=true):
     numeric -> zscore, categorical -> WEIGHTED woe (weight = l_quantity
     with the reference's null/negative->1.0 clamp)."""
-    from pyspark.sql import Window
+    from shifu_spark.operators.ksiv import woe_df
 
     li = _t(spark, sf_dir, "lineitem")
     is_pos = F.col("l_linestatus") == "F"
     w = F.col("l_quantity").cast("double")
     w = F.when(w.isNull() | (w < 0), F.lit(1.0)).otherwise(w)
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cate = (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(is_pos, w).otherwise(0.0).cast("decimal(38,10)")).cast("double").alias("wpos"),
-            F.sum(F.when(is_pos, 0.0).otherwise(w).cast("decimal(38,10)")).cast("double").alias("wneg"),
-        )
-        .withColumn("sum_p", F.sum("wpos").over(wall))
-        .withColumn("sum_n", F.sum("wneg").over(wall))
-        .select(
-            "l_returnflag",
-            F.round(
-                F.log(
-                    (F.col("wneg") / F.col("sum_n") + F.lit(1e-10))
-                    / (F.col("wpos") / F.col("sum_p") + F.lit(1e-10))
-                ),
-                6,
-            ).alias("wwoe_l_returnflag"),
-        )
+    counts = li.groupBy("l_returnflag").agg(
+        F.sum(F.when(is_pos, w).otherwise(0.0).cast("decimal(38,10)")).cast("double").alias("wpos"),
+        F.sum(F.when(is_pos, 0.0).otherwise(w).cast("decimal(38,10)")).cast("double").alias("wneg"),
     )
+    cate = woe_df(counts, "wpos", "wneg").select("l_returnflag", F.round("woe", 6).alias("wwoe_l_returnflag"))
     mm, zq = _zscore_parts(li)
     return (
         li.crossJoin(F.broadcast(mm))
@@ -3893,20 +3819,12 @@ def asis_woe_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     their bin's count-WOE. The WOE table is computed from the data with
     the reference's 1e-10 smoothing — same lookup the normalize.py
     ASIS_WOE dispatch runs."""
-    from pyspark.sql import Window
+    from shifu_spark.operators.ksiv import woe_df
 
     li = _t(spark, sf_dir, "lineitem")
     pos = F.when(F.col("l_linestatus") == "F", 1.0).otherwise(0.0)
-    woes = (
-        li.groupBy("l_returnflag")
-        .agg(F.sum(pos).alias("p"), F.sum(F.lit(1.0) - pos).alias("n"))
-        .withColumn("tp", F.sum("p").over(Window.partitionBy()))
-        .withColumn("tn", F.sum("n").over(Window.partitionBy()))
-        .select(
-            "l_returnflag",
-            F.log((F.col("n") / F.col("tn") + 1e-10) / (F.col("p") / F.col("tp") + 1e-10)).alias("woe"),
-        )
-    )
+    counts = li.groupBy("l_returnflag").agg(F.sum(pos).alias("pos"), F.sum(F.lit(1.0) - pos).alias("neg"))
+    woes = woe_df(counts, "pos", "neg").select("l_returnflag", "woe")
     return (
         li.join(F.broadcast(woes), "l_returnflag")
         .select(

@@ -116,6 +116,98 @@ class TestNormalize:
         assert got == [1.0, 0.0]
 
 
+class TestWoeAndZscoreSums:
+    """ksiv.woe_df and normalize.zscore_sums_expr against DuckDB spellings
+    of the same formulas on degenerate groups: a class total of 0
+    (sum_p = 0, sum_n = 0) and a power-sum population of n = 1 or
+    n = 0. Spark must return NULL there, never an ANSI DIVIDE_BY_ZERO.
+    The SQL states each NULL with a CASE rather than inheriting it
+    from DuckDB's /0, which gives NULL before 1.1 and inf/NaN after."""
+
+    def test_woe_df_zero_class_totals(self, spark):
+        import duckdb
+        import pyarrow as pa
+
+        from shifu_spark.operators.ksiv import woe_df
+        from tests.oracle import compare
+
+        rows = [
+            ("mixed", 0, 3, 1), ("mixed", 1, 1, 4), ("mixed", 2, 0, 2),
+            ("no_pos", 0, 0, 2), ("no_pos", 1, 0, 3),
+            ("no_neg", 0, 2, 0), ("no_neg", 1, 5, 0),
+        ]
+        df = spark.createDataFrame(rows, "g string, bin int, pos long, neg long")
+        con = duckdb.connect()
+        con.register("t", pa.table({
+            "g": [r[0] for r in rows], "bin": pa.array([r[1] for r in rows], pa.int32()),
+            "pos": pa.array([r[2] for r in rows], pa.int64()),
+            "neg": pa.array([r[3] for r in rows], pa.int64()),
+        }))
+        cols = ["g", "bin", "sum_p", "sum_n", "p", "n", "woe"]
+        sql = """
+SELECT g, bin, sum_p, sum_n, p, n, ln((n + 1e-10) / (p + 1e-10)) AS woe
+FROM (SELECT g, bin,
+             sum(pos) OVER w AS sum_p, sum(neg) OVER w AS sum_n,
+             CASE WHEN sum(pos) OVER w = 0 THEN NULL ELSE pos / sum(pos) OVER w END AS p,
+             CASE WHEN sum(neg) OVER w = 0 THEN NULL ELSE neg / sum(neg) OVER w END AS n
+      FROM t {where} WINDOW w AS ({partition}))
+"""
+        got = woe_df(df, "pos", "neg", "g").select(*cols)
+        assert compare(got, con, sql.format(where="", partition="PARTITION BY g"), "woe_df_by_g") == []
+        by_key = {(r["g"], r["bin"]): r["woe"] for r in got.collect()}
+        assert by_key[("no_pos", 0)] is None and by_key[("no_neg", 1)] is None
+        assert by_key[("mixed", 0)] == pytest.approx(math.log((1 / 7 + 1e-10) / (3 / 4 + 1e-10)))
+        # no partition: one WOE table over the whole (here one-class) frame
+        got = woe_df(df.filter(F.col("g") == "no_neg"), "pos", "neg").select(*cols)
+        assert compare(got, con, sql.format(where="WHERE g = 'no_neg'", partition=""), "woe_df_whole") == []
+
+    def test_zscore_sums_one_and_zero_rows(self, spark):
+        import duckdb
+        import pyarrow as pa
+
+        from shifu_spark.operators.normalize import zscore_sums_expr
+        from tests.oracle import compare
+
+        groups = {
+            # one outlier among 50 equal values sits (n-1)/√n ≈ 7 sample
+            # stds out, past the 6σ cut-off
+            "many": [1.0] * 50 + [1000.0],
+            "constant": [7.0, 7.0, 7.0],
+            "one": [5.0],
+            "none": [None, None],
+        }
+        rows = [(i, g, x) for g, xs in groups.items() for i, x in enumerate(xs)]
+        df = spark.createDataFrame(rows, "id int, g string, x double")
+        x = F.col("x")
+        mm = df.groupBy("g").agg(F.count(x).alias("n"), F.sum(x).alias("s1"), F.sum(x * x).alias("s2"))
+        z = zscore_sums_expr(x, F.col("n"), F.col("s1"), F.col("s2"))
+        got = df.join(mm, "g").select("g", "id", z.alias("z"))
+
+        con = duckdb.connect()
+        con.register("t", pa.table({
+            "id": pa.array([r[0] for r in rows], pa.int32()), "g": [r[1] for r in rows],
+            "x": pa.array([r[2] for r in rows], pa.float64()),
+        }))
+        sql = """
+WITH mm AS (SELECT g, count(x) AS n, sum(x) AS s1, sum(x * x) AS s2 FROM t GROUP BY g),
+s AS (SELECT g, s1 / n AS mean,
+             CASE WHEN n <= 1 THEN NULL
+                  ELSE sqrt(abs((s2 - s1 * s1 / n + 1e-10) / (n - 1))) END AS std
+      FROM mm)
+SELECT g, id,
+       CASE WHEN std = 0 THEN NULL
+            ELSE (least(greatest(x, mean - 6 * std), mean + 6 * std) - mean) / std END AS z
+FROM t JOIN s USING (g)
+"""
+        assert compare(got, con, sql, "zscore_sums") == []
+        by_key = {(r["g"], r["id"]): r["z"] for r in got.collect()}
+        assert by_key[("one", 0)] is None
+        assert by_key[("none", 0)] is None and by_key[("none", 1)] is None
+        assert by_key[("many", 50)] == pytest.approx(6.0)  # clipped at mean + 6·std
+        assert by_key[("many", 0)] == pytest.approx((1.0 - 1050 / 51) / math.sqrt((50 + 1000**2 - 1050**2 / 51) / 50))
+        assert by_key[("constant", 0)] == 0.0
+
+
 class TestJexl:
     def test_translate_basics(self):
         from shifu_spark.functions.jexl import jexl_to_sql
@@ -808,7 +900,7 @@ FROM t JOIN (SELECT g, min(x) AS mn, max(x) AS mx FROM t
         )
         # categorical-first lookup (woeNormalize:622-640): map hit -> cate
         # slot; miss -> numeric boundary bin; null -> missing slot
-        e = hybrid_bin_index_expr("v", 10.0, [0.0, 1.0], ["10.00", "11.00", "1234.00"])
+        e = hybrid_bin_index_expr("v", [0.0, 1.0], ["10.00", "11.00", "1234.00"])
         got = [r[0] for r in df.select(e.alias("i")).collect()]
         #   0.5 -> bin0; 1.5 -> bin1; 10 -> cate0 -> 2; 11 -> cate1 -> 3;
         #   99 not a category -> numeric fallback bin1 -> 1;
@@ -817,8 +909,8 @@ FROM t JOIN (SELECT g, min(x) AS mn, max(x) AS mx FROM t
         assert got == [0, 1, 2, 3, 1, 4, 5]
 
     def test_hybrid_bin_index_raw_token_categories(self, spark):
-        """Non-numeric category tokens (collected by hybrid_is_category_expr
-        as unparseable) must resolve to their category slot via the RAW
+        """Non-numeric category tokens (collected at binning time as
+        unparseable) must resolve to their category slot via the RAW
         token lookup — the %.2f-only key sent every such token to the
         missing slot because try_cast is NULL for them."""
         from shifu_spark.operators.binning import hybrid_bin_index_expr
@@ -826,24 +918,12 @@ FROM t JOIN (SELECT g, min(x) AS mn, max(x) AS mx FROM t
         df = spark.createDataFrame(
             [("N/A",), ("0.5",), ("10",), ("10.0",), ("oops",), (None,)], "v string"
         )
-        e = hybrid_bin_index_expr("v", 10.0, [0.0, 1.0], ["N/A", "10.00"])
+        e = hybrid_bin_index_expr("v", [0.0, 1.0], ["N/A", "10.00"])
         got = [r[0] for r in df.select(e.alias("i")).collect()]
         # N/A -> cate0 -> 2; 0.5 -> bin0; "10"/"10.0" both normalize to
         # "10.00" -> cate1 -> 3; unparseable non-category -> missing 4;
         # NULL -> missing 4
         assert got == [2, 0, 3, 3, 4, 4]
-
-    def test_hybrid_is_category_split(self, spark):
-        from shifu_spark.operators.binning import hybrid_is_category_expr
-
-        df = spark.createDataFrame(
-            [("-999",), ("1.5",), ("N/A",), (None,)], "v string"
-        )
-        # BinningPartialDataUDF:119-135: non-numeric or < threshold -> cate
-        e = hybrid_is_category_expr("v", 0.0)
-        got = [r[0] for r in df.select(e.alias("c")).collect()]
-        assert got[0] is True and got[1] is False and got[2] is True
-        assert not got[3]  # null input is not a category token
 
 
 class TestIvf:
@@ -1284,16 +1364,12 @@ class TestNormalizeVariants:
     def test_multiclass_tag_recode(self, spark):
         # NormalizeUDF.java:354-372: index of the first tag-set containing
         # the raw tag; unlisted -> NULL (record skipped)
-        from shifu_spark.operators.normalize import tag_expr_linear, tag_expr_multiclass
+        from shifu_spark.operators.normalize import tag_expr_multiclass
 
         df = spark.createDataFrame([("a",), ("b",), ("c",), ("zz",)], "t string")
         e = tag_expr_multiclass("t", [["a"], ["b", "c"]])
         got = [r[0] for r in df.select(e.alias("i")).collect()]
         assert got == [0.0, 1.0, 1.0, None]
-        lin = [r[0] for r in
-               spark.createDataFrame([("1.5",), ("x",)], "t string")
-               .select(tag_expr_linear("t").alias("v")).collect()]
-        assert lin == [1.5, None]
 
     def test_category_missing_mean_fill(self, spark):
         # CategoryMissingNormType.MEAN (Normalizer.java:586-590): unseen

@@ -1101,14 +1101,13 @@ class TestJexlNaNOrderingPin:
 
 
 class TestDegeneratePopulations:
-    """r10 bug-class audit: DEGENERATE populations — empty frames,
-    all-null columns, single rows, one-class labels. The class's
-    signature is a division whose denominator only goes to zero on
-    degenerate input: under ANSI mode a bare `/` crashes the job (found
-    live in numeric_stats_df's (valid-1) and ksiv_df's class totals —
-    at 100 TB this is 'one empty evaluation segment kills the whole
-    pipeline'), and where Spark survives, the DuckDB oracle's /0->NULL
-    must agree. Closed structurally: every family below runs all four
+    """DEGENERATE populations — empty frames, all-null columns, single
+    rows, one-class labels. The class's signature is a division whose
+    denominator only goes to zero on degenerate input: under ANSI mode a
+    bare `/` crashes the job (numeric_stats_df's (valid-1) and ksiv_df's
+    class totals are such divisions; one empty evaluation segment would
+    kill the whole pipeline), and where Spark survives, the DuckDB
+    oracle's /0->NULL must agree. Every family below runs all four
     degenerate frames with value parity asserted."""
 
     import pytest as _pt
@@ -1174,9 +1173,8 @@ class TestDegeneratePopulations:
 
     @_pt.mark.parametrize("frame", ["empty", "allnull", "onerow", "oneclass"])
     def test_ksiv_parity(self, spark, degen, frame):
-        """One-class totals (sum_n == 0) crashed DIVIDE_BY_ZERO before
-        the r10 try_divide fix; now NULL-ratio semantics on both
-        engines."""
+        """One-class totals (sum_n == 0) give NULL ratios on both
+        engines (try_divide), not a DIVIDE_BY_ZERO crash."""
         from shifu_spark.operators.binning import bin_index_sql
         from shifu_spark.operators.ksiv import bin_counts_df, ksiv_df, ksiv_oracle_sql
 
@@ -1805,12 +1803,20 @@ class TestDirtyTpch:
 
 
 class TestConstantColumns:
-    """ALL-EQUAL COLUMNS — (mx - mn) = 0 makes the equal-interval bin
-    width zero, and Spark 4's ANSI mode raises DIVIDE_BY_ZERO for DOUBLE
-    division too. Convention (binning.equal_interval_bin_expr): width 0
-    => the whole population is bin 0 on both engines, not the top bin.
-    Every query binning by equal interval is listed, plus the moments,
-    correlation and quantile families that divide by a spread.
+    """DEGENERATE LINEITEM COPIES against the unchanged production oracles.
+
+    constant: ALL-EQUAL COLUMNS — (mx - mn) = 0 makes the equal-interval
+    bin width zero, and Spark 4's ANSI mode raises DIVIDE_BY_ZERO for
+    DOUBLE division too. Convention (binning.equal_interval_bin_expr):
+    width 0 => the whole population is bin 0 on both engines, not the
+    top bin. Every query binning by equal interval is listed, plus the
+    moments, correlation and quantile families that divide by a spread.
+
+    oneclass / onerow: every row is l_returnflag 'R' and l_linestatus
+    'F', or the table is one row. A WOE class total is then 0 and a
+    sample std divides by n - 1 = 0; ksiv.woe_df and
+    normalize.zscore_sums_expr return NULL there, as DuckDB's /0 does.
+    Every WOE and power-sum z-score query is listed.
     """
 
     import pytest as _pt
@@ -1824,9 +1830,33 @@ class TestConstantColumns:
         "streaming_drift_psi", "events_moving_avg", "ksiv_equal_positive",
         "native_ntile_binning", "hybrid_column_woe",
     ]
+    DEGENERATE_NAMES = [
+        "ksiv_equal_interval", "ksiv_categorical", "ksiv_equal_population",
+        "ksiv_equal_positive", "ksiv_equal_negative", "ksiv_weighted",
+        "woe_normalize", "hybrid_column_woe", "woe_zscore_normalize",
+        "hybrid_normalize", "weight_hybrid_normalize", "asis_woe_normalize",
+        "zscore_normalize", "discrete_zscore_normalize", "old_zscale_normalize",
+        "zscale_onehot_normalize",
+    ]
+
+    @staticmethod
+    def _lineitem(li, variant):
+        from pyspark.sql import functions as F
+
+        if variant == "constant":
+            return li.select(
+                "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+                F.lit(7.0).alias("l_quantity"), F.lit(100.0).alias("l_extendedprice"),
+                F.lit(0.05).alias("l_discount"), F.lit(0.02).alias("l_tax"),
+                "l_returnflag", "l_linestatus", "l_shipdate",
+            )
+        if variant == "oneclass":
+            return li.withColumns({"l_returnflag": F.lit("R"), "l_linestatus": F.lit("F")})
+        return li.orderBy("l_orderkey", "l_linenumber").limit(1)
 
     @_pt.fixture(scope="class")
-    def const_tables(self, spark, tmp_path_factory):
+    def tables(self, spark, sf_dir, tmp_path_factory):
+        """variant -> (sf_dir, duckdb connection), each built on first use."""
         import glob
         import os
         import shutil
@@ -1834,45 +1864,53 @@ class TestConstantColumns:
         import duckdb
         from pyspark.sql import functions as F
 
-        base = str(tmp_path_factory.mktemp("const_tables"))
+        built: dict = {}
 
-        def write_single(df, name):
-            tmp = f"{base}/_t"
-            df.coalesce(1).write.parquet(tmp)
-            shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], f"{base}/{name}.parquet")
-            shutil.rmtree(tmp)
+        def get(variant):
+            if variant in built:
+                return built[variant]
+            base = str(tmp_path_factory.mktemp(f"{variant}_tables"))
 
-        li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        write_single(
-            li.select(
-                "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-                F.lit(7.0).alias("l_quantity"), F.lit(100.0).alias("l_extendedprice"),
-                F.lit(0.05).alias("l_discount"), F.lit(0.02).alias("l_tax"),
-                "l_returnflag", "l_linestatus", "l_shipdate",
-            ),
-            "lineitem",
-        )
-        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        write_single(ev.withColumn("value", F.lit(42.0)), "events")
-        for t in ["region", "nation", "customer", "supplier", "part",
-                  "orders", "documents", "embeddings"]:
-            os.symlink(f"/root/testdata/sf0.001/{t}.parquet", f"{base}/{t}.parquet")
-        con = duckdb.connect()
-        for t in ["region", "nation", "customer", "supplier", "part", "orders",
-                  "lineitem", "events", "documents", "embeddings"]:
-            con.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{base}/{t}.parquet')"
-            )
-        return base, con
+            def write_single(df, name):
+                tmp = f"{base}/_t"
+                df.coalesce(1).write.parquet(tmp)
+                shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], f"{base}/{name}.parquet")
+                shutil.rmtree(tmp)
 
-    @_pt.mark.parametrize("name", NAMES)
-    def test_query_oracle_parity_on_constant_columns(self, spark, const_tables, name):
+            li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+            write_single(self._lineitem(li, variant), "lineitem")
+            if variant == "constant":
+                ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+                write_single(ev.withColumn("value", F.lit(42.0)), "events")
+            con = duckdb.connect()
+            for t in ["region", "nation", "customer", "supplier", "part", "orders",
+                      "lineitem", "events", "documents", "embeddings"]:
+                if not os.path.exists(f"{base}/{t}.parquet"):
+                    os.symlink(f"{sf_dir}/{t}.parquet", f"{base}/{t}.parquet")
+                con.sql(
+                    f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{base}/{t}.parquet')"
+                )
+            built[variant] = (base, con)
+            return built[variant]
+
+        return get
+
+    @staticmethod
+    def _check(spark, base, con, name):
         from shifu_spark.queries import ORACLES, QUERIES
         from tests.oracle import compare
 
-        base, con = const_tables
         problems = compare(QUERIES[name](spark, base), con, ORACLES[name], name)
         assert problems == [], problems
+
+    @_pt.mark.parametrize("name", NAMES)
+    def test_query_oracle_parity_on_constant_columns(self, spark, tables, name):
+        self._check(spark, *tables("constant"), name)
+
+    @_pt.mark.parametrize("variant", ["oneclass", "onerow"])
+    @_pt.mark.parametrize("name", DEGENERATE_NAMES)
+    def test_query_oracle_parity_on_degenerate_population(self, spark, tables, name, variant):
+        self._check(spark, *tables(variant), name)
 
 
 class TestDirtyBinaries:
