@@ -31,74 +31,81 @@ from pyspark.sql import functions as F
 # boundary builders
 # ---------------------------------------------------------------------------
 
-def equal_population_boundaries(
-    df: DataFrame,
-    cols: list[str],
-    num_bins: int,
-    method: str = "EqualTotal",
-    tag_col: str | None = None,
-    pos_tags: list[str] | None = None,
-    neg_tags: list[str] | None = None,
-) -> dict[str, list[float]]:
-    """Equal-frequency left edges per column, over the method-selected
-    population, in ONE aggregate whatever the number of columns.
+def binning_population(method: str, tag_col: str, pos_tags: list[str], neg_tags: list[str]) -> Column:
+    """The rows a BinningMethod's equal-frequency edges run over.
 
-    EqualPositive (reference default) quantiles over positive rows only;
-    EqualNegative over negatives; EqualTotal over all valid rows
-    (ModelStatsConf.java:34-36, udf/stats/NumericalVarStats.java:55-130).
-    Rows outside the population feed ``percentile`` a NULL, which it
-    skips, so each column sees the same multiset as filter-then-aggregate.
-    Values go through ``try_cast`` to double: the raw column may be
-    string-typed (shifu-style raw text input), and an unparseable token
-    is missing, not a value.
+    EqualPositive (reference default) takes positive rows only,
+    EqualNegative negatives, and any other method (EqualTotal,
+    WeightEqual*) every row (ModelStatsConf.java:34-36,
+    udf/stats/NumericalVarStats.java:55-130).
     """
     if method == "EqualPositive":
-        in_pop = F.col(tag_col).isin(pos_tags or [])
-    elif method == "EqualNegative":
-        in_pop = F.col(tag_col).isin(neg_tags or [])
-    else:
-        in_pop = F.lit(True)
-    qs = F.expr(f"array({','.join(str(i / num_bins) for i in range(num_bins))})")
-    row = df.agg(*[
-        F.percentile(F.when(in_pop, F.col(c).try_cast("double")), qs).alias(c) for c in cols
-    ]).collect()[0]
-    out: dict[str, list[float]] = {}
-    for c in cols:
-        # de-duplicate equal boundaries (MunroPatBinning.java:60-99 merges dups)
-        edges: list[float] = []
-        for b in row[c] or []:
-            if b is not None and (not edges or b > edges[-1]):
-                edges.append(b)
-        out[c] = edges
-    return out
+        return F.col(tag_col).isin(pos_tags)
+    if method == "EqualNegative":
+        return F.col(tag_col).isin(neg_tags)
+    return F.lit(True)
 
 
-def categorical_bins(df: DataFrame, cols: list[str], max_cate_size: int = 0) -> dict[str, list]:
-    """Frequency-ordered category list per column (CategoricalBinning.java:33).
+def equal_population_edges(v: Column, in_pop: Column, num_bins: int) -> Column:
+    """The aggregate of ``num_bins`` equal-frequency left edges of ``v``
+    over the rows where ``in_pop`` holds: exact ``percentile`` at
+    i/num_bins. Rows outside the population feed it a NULL, which it
+    skips, so the edges equal filter-then-aggregate's, and any number of
+    columns share one aggregate.
 
-    One melt (``explode`` of (column, value) structs) + one
-    ``groupBy(column, value).count()`` per distinct dtype among ``cols``,
-    so values keep their native type and order (an int categorical sorts
-    numerically). Keeps the ``max_cate_size`` most frequent categories per
-    column (the reference auto-collapses when > maxCateSize; 0 keeps all).
-    Deterministic order: count desc, then category asc.
+    ``v`` must already be the cleaned value (``stats._clean``: a finite
+    double or NULL), so a NaN or ±Infinity token is missing here as it
+    is in the moments and the bin counts, and moves no edge. Pass the
+    result through :func:`dedup_edges`.
     """
+    qs = F.array(*[F.lit(i / num_bins) for i in range(num_bins)])
+    return F.percentile(F.when(in_pop, v), qs)
+
+
+def dedup_edges(quantiles: list[float] | None) -> list[float]:
+    """Strictly increasing edges from an edge aggregate's result, ``[]``
+    for an empty population (MunroPatBinning.java:60-99 merges equal
+    boundaries)."""
+    edges: list[float] = []
+    for b in quantiles or []:
+        if b is not None and (not edges or b > edges[-1]):
+            edges.append(b)
+    return edges
+
+
+def top_categories(counts: DataFrame, max_cate_size: int) -> DataFrame:
+    """Keep the ``max_cate_size`` most frequent categories of each
+    categorical column of a :func:`ksiv.bin_counts_df` frame
+    (CategoricalBinning.java:33: the reference collapses a column with
+    more than maxCateSize; 0 keeps all). It is a window, so no more
+    categories than the ColumnConfig stores leave Spark. Numeric bin rows
+    (``bin`` set) are always kept.
+
+    A category row's frequency is its pos + neg count. Its value sits in
+    the ``value_*`` field of its dtype and the other fields are NULL, so
+    ordering by every field orders by the value. Ties go to the smaller
+    category, as in :func:`category_order`.
+    """
+    if not max_cate_size or max_cate_size <= 0:
+        return counts
     from pyspark.sql import Window
 
-    dtypes = dict(df.dtypes)
-    out: dict[str, list] = {c: [] for c in cols}
-    for dtype in sorted({dtypes[c] for c in cols}):
-        group = [c for c in cols if dtypes[c] == dtype]
-        melt = df.select(F.explode(F.array(*[
-            F.struct(F.lit(c).alias("column"), F.col(c).alias("value")) for c in group
-        ])).alias("kv")).select("kv.*")
-        counts = melt.filter(F.col("value").isNotNull()).groupBy("column", "value").count()
-        if max_cate_size and max_cate_size > 0:
-            w = Window.partitionBy("column").orderBy(F.desc("count"), F.asc("value"))
-            counts = counts.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= max_cate_size)
-        for r in counts.orderBy("column", F.desc("count"), F.asc("value")).collect():
-            out[r["column"]].append(r["value"])
-    return out
+    values = [c for c in counts.columns if c.startswith("value_")]
+    freq = F.col("bin_count_pos") + F.col("bin_count_neg")
+    w = Window.partitionBy("column_name").orderBy(freq.desc(), *[F.asc(c) for c in values])
+    return (
+        counts.withColumn("__rank", F.row_number().over(w))
+        .filter(F.col("bin").isNotNull() | (F.col("__rank") <= max_cate_size))
+        .drop("__rank")
+    )
+
+
+def category_order(freq: dict) -> list:
+    """A column's categories by count desc, then category asc — the
+    ColumnConfig's ``bin_category`` order. A category keeps its native
+    type (an int categorical sorts numerically); NaN sorts last, as in
+    Spark's ordering."""
+    return sorted(freq, key=lambda v: (-freq[v], v != v, v))
 
 
 # ntile_boundaries cap: a single-task sort of ~10M doubles is the most a
@@ -116,7 +123,7 @@ def ntile_boundaries(
     through ONE task (unpartitioned window); test-scale / exactness path
     only.  The guard raises above ``max_rows`` (default the module's
     ``NTILE_MAX_ROWS``) instead of funnelling a data-scale sort through a
-    single task — use :func:`equal_population_boundaries` (a distributed
+    single task — use :func:`equal_population_edges` (a distributed
     aggregate) for data-scale corpora.
     """
     from pyspark.sql import Window
@@ -128,7 +135,7 @@ def ntile_boundaries(
         raise ValueError(
             f"exact ntile binning refused: > {max_rows} rows. "
             "This is the single-task global-sort exactness path; use "
-            "equal_population_boundaries (a distributed aggregate) "
+            "equal_population_edges (a distributed aggregate) "
             "for data-scale inputs, or raise max_rows "
             "explicitly."
         )

@@ -634,7 +634,8 @@ def weighted_gain_buckets_df(
     action-rate 1/N boundary (ConfusionMatrix.java weighted bucket walk).
     Action rate = (wtp+wfp)/total_weight; per bucket the max-score point
     is picked with one max_by agg. A zero total weight gives NULL rates,
-    not a divide-by-zero, like the other weighted curves."""
+    not a divide-by-zero, like the other weighted curves, and a NULL
+    bucket."""
     pts = _score_points(df, score_col, label_expr, weight_col)
     cum = prefix_sums(
         pts, "score", ["wpos", "wneg"], descending=True, num_ranges=num_ranges,
@@ -645,7 +646,12 @@ def weighted_gain_buckets_df(
         cum.withColumn("action_rate", F.try_divide(F.col("cum_wpos") + F.col("cum_wneg"), tot_w))
         .withColumn("wprecision", F.try_divide(F.col("cum_wpos"), F.col("cum_wpos") + F.col("cum_wneg")))
         .withColumn("wrecall", F.try_divide(F.col("cum_wpos"), F.col("tot_wpos")))
-        .withColumn("bucket", F.least(F.floor(F.col("action_rate") * num_buckets), F.lit(num_buckets)))
+        # least() skips a NULL, so a NULL rate needs its own branch to
+        # stay out of the last bucket
+        .withColumn("bucket", F.when(
+            F.col("action_rate").isNotNull(),
+            F.least(F.floor(F.col("action_rate") * num_buckets), F.lit(num_buckets)),
+        ))
     )
     picked = F.max_by(F.struct("score", "action_rate", "wprecision", "wrecall"), F.col("score")).alias("pt")
     out = (

@@ -66,21 +66,29 @@ def bin_counts_df(
     df: DataFrame,
     columns: list[str],
     boundaries: dict[str, list[float]],
-    tag_col: str,
+    tag_col: str | None,
     pos_tags: list[str],
     weight_col: str | None = None,
+    categorical: list[str] | None = None,
 ) -> DataFrame:
     """Per-(column, bin) pos/neg counts (+ weighted) in ONE pass.
 
-    Melt via posexplode of a struct array (narrow, pipelined), then
+    Melt via explode of a struct array (narrow, pipelined), then
     groupBy(column_name, bin) — partial aggregation collapses each task's
     output to cols × bins rows before the shuffle, so shuffle volume is
     independent of row count (reference needed a salted two-level group
     for the same effect, StatsSpdtI.pig:57-60).
+
+    ``categorical`` columns ride the same melt, one row per (column,
+    category) with ``bin`` NULL; NULL values are dropped. So that a
+    category keeps its native type (an int categorical stays an int),
+    each distinct dtype gets its own ``value_<i>`` field; a category row
+    sets only its dtype's field, and a bin row sets none. With no
+    ``tag_col`` every row counts as negative.
     """
     from shifu_spark.operators.binning import bin_index_expr
 
-    is_pos = F.col(tag_col).isin(pos_tags)
+    is_pos = F.col(tag_col).isin(pos_tags) if tag_col else F.lit(False)
     # unparseable/NULL weight -> 1.0: UpdateBinningInfoMapper.java:384-400
     # initializes weight = 1.0d and the Double.valueOf throw leaves it in
     # place (a bare try_cast would sum the row as 0 instead). Non-finite
@@ -96,20 +104,34 @@ def bin_counts_df(
         w = F.when(is_nonvalue(w0), F.lit(1.0)).otherwise(w0)
     else:
         w = F.lit(1.0)
-    structs = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            bin_index_expr(c, boundaries[c]).alias("bin"),
+    categorical = categorical or []
+    dtypes = dict(df.dtypes)
+    kinds = sorted({dtypes[c] for c in categorical})
+    nulls = [F.lit(None).cast(t) for t in kinds]
+
+    def slot(c: str, bin_: Column, values: list[Column]) -> Column:
+        return F.struct(
+            F.lit(c).alias("column_name"), bin_.alias("bin"),
+            *[v.alias(f"value_{i}") for i, v in enumerate(values)],
         )
-        for c in columns
-    ]
+
+    structs = [slot(c, bin_index_expr(c, boundaries[c]), nulls) for c in columns]
+    for c in categorical:
+        k = kinds.index(dtypes[c])
+        structs.append(slot(c, F.lit(None).cast("int"), nulls[:k] + [F.col(c)] + nulls[k + 1:]))
     melted = df.select(
         F.explode(F.array(*structs)).alias("cb"),
         is_pos.alias("_pos"),
         w.alias("_w"),
-    )
+    ).select("cb.*", "_pos", "_w")
+    values = [f"value_{i}" for i in range(len(kinds))]
+    if values:
+        kept = F.col("bin").isNotNull()
+        for v in values:
+            kept = kept | F.col(v).isNotNull()
+        melted = melted.filter(kept)
     return (
-        melted.groupBy(F.col("cb.column_name").alias("column_name"), F.col("cb.bin").alias("bin"))
+        melted.groupBy("column_name", "bin", *values)
         .agg(
             F.sum(F.when(F.col("_pos"), 1).otherwise(0)).alias("bin_count_pos"),
             F.sum(F.when(~F.col("_pos"), 1).otherwise(0)).alias("bin_count_neg"),

@@ -27,9 +27,11 @@ At 100 TB: the moment pass is a full scan with partial agg and no
 ``Expand`` (exact distincts come from ``collect_set``, not
 ``countDistinct``, so no row is copied per column); the bin-count pass
 scans once more with only (cols × bins × tasks) rows shuffled. Both are
-column-pruned parquet scans when ``columns`` is a subset. Memory: the
-exact ``percentile`` keeps a value→count map and ``collect_set`` a hash
-set, each of a column's distinct values per task, and both merge in the
+column-pruned parquet scans when ``columns`` is a subset. The bin
+boundaries ride the moment pass, and ``run_stats``'s category counts
+ride the bin-count pass. Memory: each exact ``percentile`` (quartiles,
+boundaries) keeps a value→count map and ``collect_set`` a hash set,
+each of a column's distinct values per task, and both merge in the
 single-partition final aggregate — O(distinct values per column) on one
 task, the same class as the reference's in-memory distinct sets
 (AbstractVarStats.java). A column with billions of distinct values
@@ -134,15 +136,22 @@ def _clean(c: str) -> Column:
     return F.when(is_value(raw), raw)
 
 
-def _moments(df: DataFrame, columns: list[str]) -> DataFrame:
+def _moments(df: DataFrame, columns: list[str], in_pop: Column | None = None, num_bins: int = 0) -> DataFrame:
     """The one-row wide aggregate behind both stats entry points.
 
     Each column is cleaned ONCE in a projection, then aggregated. The
     exact distinct count is the size of a ``collect_set`` (NULLs
     skipped, -0.0 folded into 0.0, as ``count(DISTINCT)`` does), which
     keeps the plan one global aggregate: ``countDistinct`` would make
-    Catalyst ``Expand`` every row once per column."""
-    vals = df.select(*[_clean(c).alias(f"{c}__v") for c in columns])
+    Catalyst ``Expand`` every row once per column.
+
+    With ``num_bins``, each column's equal-population edges over the
+    ``in_pop`` rows (``binning.equal_population_edges``) join the same
+    aggregate, so they read the same cleaned values."""
+    from shifu_spark.operators.binning import equal_population_edges
+
+    pop = [in_pop.alias("__pop")] if num_bins else []
+    vals = df.select(*[_clean(c).alias(f"{c}__v") for c in columns], *pop)
 
     def s(e):
         return F.sum(e.cast(_DEC)).cast("double")
@@ -161,15 +170,22 @@ def _moments(df: DataFrame, columns: list[str]) -> DataFrame:
             F.percentile(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))).alias(f"{c}__pct"),
             F.size(F.collect_set(v)).alias(f"{c}__dc"),
         ]
+        if num_bins:
+            aggs.append(equal_population_edges(v, F.col("__pop"), num_bins).alias(f"{c}__edges"))
     return vals.agg(*aggs)
 
 
-def numeric_column_stats(df: DataFrame, columns: list[str]) -> list[NumericColumnStats]:
-    """Compute full numeric stats for ``columns`` in ONE wide aggregate:
-    exact percentiles, exact distinct counts, DECIMAL power sums."""
-    row = _moments(df, columns).collect()[0].asDict()
+def moments_and_boundaries(
+    df: DataFrame, columns: list[str], in_pop: Column, num_bins: int,
+) -> tuple[list[NumericColumnStats], dict[str, list[float]]]:
+    """Full numeric stats (exact percentiles, exact distinct counts,
+    DECIMAL power sums) and the ``num_bins`` equal-population boundaries
+    of every column over the ``in_pop`` rows, in ONE wide aggregate."""
+    from shifu_spark.operators.binning import dedup_edges
 
-    out: list[NumericColumnStats] = []
+    row = _moments(df, columns, in_pop, num_bins).collect()[0].asDict()
+
+    stats: list[NumericColumnStats] = []
     for c in columns:
         n = row["__n"]
         valid = row[f"{c}__valid"]
@@ -180,7 +196,7 @@ def numeric_column_stats(df: DataFrame, columns: list[str]) -> list[NumericColum
         mean = s1 / valid if valid else 0.0
         a_std = population_std_dev(valid, s1, s2)
         pct = row[f"{c}__pct"] or [None, None, None]
-        out.append(
+        stats.append(
             NumericColumnStats(
                 column_name=c,
                 total_count=n,
@@ -198,11 +214,11 @@ def numeric_column_stats(df: DataFrame, columns: list[str]) -> list[NumericColum
                 distinct_count=row[f"{c}__dc"],
             )
         )
-    return out
+    return stats, {c: dedup_edges(row[f"{c}__edges"]) for c in columns}
 
 
 def numeric_stats_df(df: DataFrame, columns: list[str], round_to: int | None = 6) -> DataFrame:
-    """Same stats as :func:`numeric_column_stats` but as a DataFrame plan
+    """Same stats as :func:`moments_and_boundaries` but as a DataFrame plan
     (one row per column) — the oracle-checkable query shape.
 
     Implemented as the wide agg + a driver-side unpivot of the SINGLE

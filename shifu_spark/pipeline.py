@@ -4,10 +4,11 @@ Reference lifecycle (SURVEY §3): each CLI step reads/writes
 ModelConfig.json + ColumnConfig.json. Here each step is a function over
 (DataFrame, ModelConfig, list[ColumnConfig]) — same artifacts, Spark
 plans instead of Pig jobs. The reference's two stats jobs (Pig binning +
-UpdateBinningInfo MR re-read, SURVEY §3.1) collapse into four aggregates
-over one cached frame — moments, boundaries, categories, bin counts —
-each covering every column at once, so the number of Spark jobs the
-stats step runs does not depend on how many columns the input has.
+UpdateBinningInfo MR re-read, SURVEY §3.1) stay two scans over one
+cached frame — moments and boundaries in one aggregate, then bin and
+category counts in one melt — each covering every column at once, so
+the number of Spark jobs the stats step runs does not depend on how
+many columns the input has.
 """
 
 from __future__ import annotations
@@ -78,23 +79,21 @@ def init_columns(df: DataFrame, mc: ModelConfig) -> list[ColumnConfig]:
 def run_stats(df: DataFrame, mc: ModelConfig, ccs: list[ColumnConfig]) -> list[ColumnConfig]:
     """`shifu stats`: fill moments, bins, bin counts, KS/IV/WOE, pos rates.
 
-    Four aggregates over the cached tagged rows, each spanning every
-    candidate column, so the job count does not grow with width:
+    Two scans over the cached tagged rows, each spanning every candidate
+    column, so the job count does not grow with width — the reference's
+    Pig binning job and UpdateBinningInfo re-read (SURVEY §3.1):
 
-      1. moments — one wide agg over the numeric columns;
-      2. boundaries — one exact-percentile agg over the numeric columns,
-         restricted to the BinningMethod's population;
-      3. categories — one melt + groupBy over the categorical columns
-         (once per distinct column dtype);
-      4. bin counts — one melt + groupBy over the numeric columns, then
-         KS/IV/WOE on the driver (see operators/stats.py scale notes).
+      1. one global aggregate over the numeric columns: moments, and the
+         exact-percentile boundaries over the BinningMethod's population,
+         both from the same cleaned values;
+      2. one melt + groupBy: numeric bin counts (KS/IV/WOE then follow
+         on the driver, see operators/stats.py scale notes) and the
+         categorical columns' category counts, in native type, capped
+         per column by a window when ``cate_max_num_bin`` is set.
     """
-    from shifu_spark.operators.binning import (
-        categorical_bins,
-        equal_population_boundaries,
-    )
+    from shifu_spark.operators.binning import binning_population, category_order, top_categories
     from shifu_spark.operators.ksiv import bin_counts_df, column_metrics_from_counts
-    from shifu_spark.operators.stats import numeric_column_stats
+    from shifu_spark.operators.stats import moments_and_boundaries
 
     ds, st = mc.dataset, mc.stats
     tag, pos, neg = ds.target_column, ds.pos_tags, ds.neg_tags
@@ -105,66 +104,69 @@ def run_stats(df: DataFrame, mc: ModelConfig, ccs: list[ColumnConfig]) -> list[C
 
     work = work.cache()
     try:
-        # numeric moments (single wide agg)
-        for s in numeric_column_stats(work, num_cols):
-            cc = by_name[s.column_name]
-            cs = cc.column_stats
-            cs.total_count = s.total_count
-            cs.missing_count = s.missing_count
-            cs.valid_num_count = s.valid_count
-            cs.mean, cs.std_dev = s.mean, s.std_dev
-            cs.min, cs.max = s.min, s.max
-            cs.skewness, cs.kurtosis = s.skewness, s.kurtosis
-            cs.p25th, cs.median, cs.p75th = s.p25, s.median, s.p75
-            cs.distinct_count = s.distinct_count
-            cs.missing_percentage = s.missing_percentage
+        boundaries: dict[str, list[float]] = {}
+        if num_cols:
+            in_pop = binning_population(st.binning_method, tag, pos, neg)
+            stats, boundaries = moments_and_boundaries(work, num_cols, in_pop, st.max_num_bin)
+            for s in stats:
+                cs = by_name[s.column_name].column_stats
+                cs.total_count = s.total_count
+                cs.missing_count = s.missing_count
+                cs.valid_num_count = s.valid_count
+                cs.mean, cs.std_dev = s.mean, s.std_dev
+                cs.min, cs.max = s.min, s.max
+                cs.skewness, cs.kurtosis = s.skewness, s.kurtosis
+                cs.p25th, cs.median, cs.p75th = s.p25, s.median, s.p75
+                cs.distinct_count = s.distinct_count
+                cs.missing_percentage = s.missing_percentage
+            for c, b in boundaries.items():
+                by_name[c].column_binning.bin_boundary = b
+                by_name[c].column_binning.length = len(b) + 1  # + missing slot
 
-        # numeric boundaries per the configured BinningMethod
-        boundaries = equal_population_boundaries(
-            work, num_cols, st.max_num_bin, method=st.binning_method,
-            tag_col=tag, pos_tags=pos, neg_tags=neg,
-        )
-        for c, b in boundaries.items():
-            by_name[c].column_binning.bin_boundary = b
-            by_name[c].column_binning.length = len(b) + 1  # + missing slot
+        binned = num_cols if tag else []
+        per_col: dict[str, dict[int, tuple]] = {c: {} for c in binned}
+        freq: dict[str, dict] = {c: {} for c in cat_cols}
+        if binned or cat_cols:
+            counts = bin_counts_df(work, binned, boundaries, tag, pos, ds.weight_column, cat_cols)
+            for r in top_categories(counts, st.cate_max_num_bin).collect():
+                if r["bin"] is not None:
+                    per_col[r["column_name"]][r["bin"]] = (
+                        r["bin_count_neg"], r["bin_count_pos"], r["bin_weight_neg"], r["bin_weight_pos"],
+                    )
+                else:
+                    value = next(v for k, v in r.asDict().items() if k.startswith("value_") and v is not None)
+                    freq[r["column_name"]][value] = r["bin_count_pos"] + r["bin_count_neg"]
 
-        for c, cats in categorical_bins(work, cat_cols, st.cate_max_num_bin).items():
+        for c in cat_cols:
+            cats = category_order(freq[c])
             by_name[c].column_binning.bin_category = cats
             by_name[c].column_binning.length = len(cats) + 1
 
-        # bin counts + KS/IV/WOE in one melt pass (numeric cols)
-        if num_cols and tag:
-            counts = bin_counts_df(work, num_cols, boundaries, tag, pos, ds.weight_column).collect()
-            per_col: dict[str, dict[int, tuple]] = {}
-            for r in counts:
-                per_col.setdefault(r["column_name"], {})[r["bin"]] = (
-                    r["bin_count_neg"], r["bin_count_pos"], r["bin_weight_neg"], r["bin_weight_pos"],
-                )
-            for c in num_cols:
-                cc = by_name[c]
-                nb = len(boundaries[c]) + 1  # + missing bin (last slot)
-                neg_a = [0] * nb
-                pos_a = [0] * nb
-                wneg = [0.0] * nb
-                wpos = [0.0] * nb
-                for b, (cn, cp, wn, wp) in per_col.get(c, {}).items():
-                    neg_a[b], pos_a[b], wneg[b], wpos[b] = cn, cp, wn, wp
-                bn = cc.column_binning
-                bn.bin_count_neg, bn.bin_count_pos = neg_a, pos_a
-                bn.bin_weighted_neg, bn.bin_weighted_pos = wneg, wpos
-                bn.bin_pos_rate = [
-                    (p / (p + n) if (p + n) > 0 else 0.0) for n, p in zip(neg_a, pos_a)
-                ]
-                m = column_metrics_from_counts(neg_a, pos_a)
-                if m:
-                    cc.column_stats.ks, cc.column_stats.iv, cc.column_stats.woe = m.ks, m.iv, m.woe
-                    bn.bin_count_woe = m.bin_woe
-                wm = column_metrics_from_counts(wneg, wpos)
-                if wm:
-                    cc.column_stats.weighted_ks = wm.ks
-                    cc.column_stats.weighted_iv = wm.iv
-                    cc.column_stats.weighted_woe = wm.woe
-                    bn.bin_weighted_woe = wm.bin_woe
+        for c in binned:
+            cc = by_name[c]
+            nb = len(boundaries[c]) + 1  # + missing bin (last slot)
+            neg_a = [0] * nb
+            pos_a = [0] * nb
+            wneg = [0.0] * nb
+            wpos = [0.0] * nb
+            for b, (cn, cp, wn, wp) in per_col[c].items():
+                neg_a[b], pos_a[b], wneg[b], wpos[b] = cn, cp, wn, wp
+            bn = cc.column_binning
+            bn.bin_count_neg, bn.bin_count_pos = neg_a, pos_a
+            bn.bin_weighted_neg, bn.bin_weighted_pos = wneg, wpos
+            bn.bin_pos_rate = [
+                (p / (p + n) if (p + n) > 0 else 0.0) for n, p in zip(neg_a, pos_a)
+            ]
+            m = column_metrics_from_counts(neg_a, pos_a)
+            if m:
+                cc.column_stats.ks, cc.column_stats.iv, cc.column_stats.woe = m.ks, m.iv, m.woe
+                bn.bin_count_woe = m.bin_woe
+            wm = column_metrics_from_counts(wneg, wpos)
+            if wm:
+                cc.column_stats.weighted_ks = wm.ks
+                cc.column_stats.weighted_iv = wm.iv
+                cc.column_stats.weighted_woe = wm.woe
+                bn.bin_weighted_woe = wm.bin_woe
     finally:
         work.unpersist()
     return ccs

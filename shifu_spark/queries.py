@@ -1275,8 +1275,8 @@ ORACLES["ksiv_equal_population"] = _ksiv_quantile_oracle(None)
 def ksiv_equal_positive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EqualPositive binning — the reference's DEFAULT BinningMethod
     (ModelStatsConf.java:34-36): boundaries are exact quantiles over the
-    POSITIVE rows only (binning.equal_population_boundaries method
-    semantics), then KS/IV over the full population with those edges."""
+    POSITIVE rows only (binning.binning_population method semantics),
+    then KS/IV over the full population with those edges."""
     return _ksiv_quantile_query(spark, sf_dir, "l_returnflag = 'R'")
 
 
@@ -2065,7 +2065,7 @@ cum AS (
 pts2 AS (
   SELECT score, (wtp + wfp)::DOUBLE / tot_w AS action_rate,
          wtp::DOUBLE / (wtp + wfp) AS wprecision, wtp::DOUBLE / tot_p AS wrecall,
-         least(floor((wtp + wfp)::DOUBLE / tot_w * 10), 10) AS bucket
+         CASE WHEN tot_w <> 0 THEN least(floor((wtp + wfp)::DOUBLE / tot_w * 10), 10) END AS bucket
   FROM cum
 )
 SELECT bucket::BIGINT AS bucket, score, round(action_rate, 6) AS action_rate,

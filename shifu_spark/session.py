@@ -4,6 +4,15 @@ Local testing runs on local[N]; the same settings are what we would ship
 on a 1000-executor cluster: AQE on (runtime coalesce + skew handling),
 UTC session timezone (for oracle comparability), Arrow enabled for the
 few pandas-UDF operators.
+
+PySpark's DataFrame call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+every ``Column`` operation makes about five extra py4j round trips to
+record its Python ``file:line`` — a 40-aggregate ``agg`` took two to
+three times as long to build — and the driver, not the executors,
+bounds a small pipeline pass. The trade: an ANSI runtime error no longer names
+the Python line that built the failing expression; its error class
+and message are unchanged.
 """
 
 from __future__ import annotations
@@ -44,6 +53,7 @@ def get_spark(app_name: str = "shifu_spark", shuffle_partitions: str | int | Non
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()))
         # shuffle/cache codec knob for scale A/Bs (guide §2.3): lz4 is
         # Spark's default; zstd trades CPU for shuffle bytes.  Kept

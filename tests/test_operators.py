@@ -504,12 +504,12 @@ class TestExactKernelGuards:
 
     def test_ntile_refuses_above_cap(self, spark):
         """The single-task global-sort exactness path must refuse
-        data-scale inputs, pointing at equal_population_boundaries
+        data-scale inputs, pointing at equal_population_edges
         (VERDICT r4 'What's wrong #2')."""
         from shifu_spark.operators.binning import ntile_boundaries
 
         df = spark.range(0, 100).select(F.col("id").cast("double").alias("v"))
-        with pytest.raises(ValueError, match="equal_population_boundaries"):
+        with pytest.raises(ValueError, match="equal_population_edges"):
             ntile_boundaries(df, "v", 4, max_rows=50)
         # at/under the cap the exact path still runs and is exact
         edges = ntile_boundaries(df, "v", 4, max_rows=100)
@@ -1111,9 +1111,9 @@ class TestCurveRangeForms:
     def test_weighted_gains_zero_total_weight(self, spark, num_ranges):
         """Every weight 0: the action rate has no denominator. The gains
         table gives NULL rates, as the other weighted curves do, instead
-        of an ANSI divide-by-zero. Like the DuckDB mirror, least() skips
-        the NULL, so every point lands in the last bucket and its
-        max-score point is the one row."""
+        of an ANSI divide-by-zero, and a NULL bucket, as the DuckDB
+        mirror does: no point claims the whole-population bucket 10.
+        The one row is the NULL bucket's max-score point."""
         from shifu_spark.operators.eval_metrics import weighted_gain_buckets_df
 
         rows = [(i / 100.0, int(i % 3 == 0), "0") for i in range(100)]
@@ -1123,7 +1123,7 @@ class TestCurveRangeForms:
             got = [tuple(r) for r in out.collect()]
         finally:
             df.unpersist()
-        assert got == [(10, 0.99, None, None, None)]
+        assert got == [(None, 0.99, None, None, None)]
 
     def test_curve_metrics_job_count(self, spark):
         """A 12k-row eval set takes the one-range form: a handful of
@@ -1219,6 +1219,15 @@ def test_local_cpus_env_then_affinity(monkeypatch):
     assert local_cpus() == "3"
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert local_cpus() == str(len(os.sched_getaffinity(0)))
+
+
+def test_session_skips_call_site_capture(spark):
+    """get_spark turns PySpark's per-Column call-site capture off: each
+    Column operation would otherwise make extra py4j round trips."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
 
 
 def test_profile_top_ranks_newest_core_count(tmp_path, monkeypatch):

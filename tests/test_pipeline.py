@@ -162,54 +162,112 @@ def test_stats_bins_match_duckdb(spark, sf_dir, method):
     assert linenumber and all(type(v) is int for v in linenumber)
 
 
-def test_stats_job_count_flat_in_width(spark, sf_dir, lineitem_mc):
-    """run_stats launches as many Spark jobs on a frame as on the same
-    frame with every candidate column duplicated under a new name."""
+def _stats_jobs(spark, df, mc, group: str) -> int:
+    """Spark jobs one run_stats call launches, read through its job group."""
     from shifu_spark.pipeline import init_columns, run_stats
 
     sc = spark.sparkContext
+    ccs = init_columns(df, mc)
+    sc.setJobGroup(group, group)
+    try:
+        run_stats(df, mc, ccs)
+    finally:
+        sc.setJobGroup("test_pipeline:idle", "idle")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stats_job_count_flat_in_width(spark, sf_dir, lineitem_mc):
+    """run_stats launches as many Spark jobs on a frame as on the same
+    frame with every candidate column duplicated under a new name."""
+    from shifu_spark.pipeline import init_columns
+
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     cand = [c.column_name for c in init_columns(li, lineitem_mc) if c.is_candidate]
     wide = li.select("*", *[F.col(c).alias(f"{c}_dup") for c in cand])
 
-    def jobs(df, group):
-        ccs = init_columns(df, lineitem_mc)
-        sc.setJobGroup(group, group)
-        try:
-            run_stats(df, lineitem_mc, ccs)
-        finally:
-            sc.setJobGroup("test_pipeline:idle", "idle")
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    narrow_jobs = jobs(li, "test_pipeline:run_stats:narrow")
+    narrow_jobs = _stats_jobs(spark, li, lineitem_mc, "test_pipeline:run_stats:narrow")
     assert narrow_jobs > 0
-    assert jobs(wide, "test_pipeline:run_stats:wide") == narrow_jobs
+    assert _stats_jobs(spark, wide, lineitem_mc, "test_pipeline:run_stats:wide") == narrow_jobs
+
+
+def test_stats_job_ceiling(spark, sf_dir, lineitem_mc):
+    """run_stats is two scans over the cached rows: one global aggregate
+    (moments and boundaries) and one melt + groupBy (bin and category
+    counts). Under AQE each runs as a shuffle-map job plus a result job;
+    the first scan also fills the cache."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    assert _stats_jobs(spark, li, lineitem_mc, "test_pipeline:run_stats:ceiling") <= 5
+
+
+_DIRTY = ["?", "", "NaN", "Infinity", "-Infinity", "abc", "-0", "0", "0.0", "1e3", "1000",
+          "1000", "7.5", "7.5", "-2", None, "0", "3"]
+
+
+def _dirty_stats(spark, vals: list, method: str = "EqualTotal"):
+    """run_stats at 4 bins over one string column ``x`` holding ``vals``,
+    every row tagged, alternately positive and negative."""
+    from shifu_spark.pipeline import init_columns, run_stats
+
+    mc = ModelConfig()
+    mc.dataset = DataSetConf(target_column="tag", pos_tags=["P"], neg_tags=["N"])
+    mc.stats.max_num_bin = 4
+    mc.stats.binning_method = method
+    df = spark.createDataFrame([(v, "PN"[i % 2]) for i, v in enumerate(vals)], "x string, tag string")
+    ccs = init_columns(df, mc)
+    next(c for c in ccs if c.column_name == "x").column_type = ColumnType.NUMERICAL
+    return next(c for c in run_stats(df, mc, ccs) if c.column_name == "x")
+
+
+def _duckdb_text(vals: list):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (x VARCHAR, i INTEGER)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", [(v, i) for i, v in enumerate(vals)])
+    return con
 
 
 def test_numeric_stats_match_duckdb_on_dirty_text(spark):
-    """numeric_column_stats over a string column holding missing tokens,
+    """The stats scan over a string column holding missing tokens,
     non-finite and unparseable values, signed zeros and duplicate
     spellings: counts, distincts, extremes and quartiles equal DuckDB
     over TRY_CAST(x AS DOUBLE) restricted to finite values."""
-    import duckdb
-
-    from shifu_spark.operators.stats import numeric_column_stats
-
-    vals = ["?", "", "NaN", "Infinity", "-Infinity", "abc", "-0", "0", "0.0", "1e3", "1000",
-            "1000", "7.5", "7.5", "-2", None, "0", "3"]
-    df = spark.createDataFrame([(v,) for v in vals], "x string")
-    (got,) = numeric_column_stats(df, ["x"])
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t (x VARCHAR)")
-    con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in vals])
+    cc = _dirty_stats(spark, _DIRTY)
+    con = _duckdb_text(_DIRTY)
     want = con.sql(
         "SELECT count(*), count(DISTINCT v), min(v), max(v), "
         "quantile_cont(v, 0.25), quantile_cont(v, 0.5), quantile_cont(v, 0.75) "
         "FROM (SELECT TRY_CAST(x AS DOUBLE) AS v FROM t) WHERE isfinite(v)"
     ).fetchone()
-    assert got.total_count == len(vals)
-    assert (got.valid_count, got.distinct_count, got.min, got.max, got.p25, got.median, got.p75) == want
+    cs = cc.column_stats
+    assert cs.total_count == len(_DIRTY)
+    assert (cs.valid_num_count, cs.distinct_count, cs.min, cs.max, cs.p25th, cs.median, cs.p75th) == want
+
+
+@pytest.mark.parametrize("method", ["EqualTotal", "EqualPositive"])
+def test_stats_boundaries_skip_nonfinite_tokens(spark, method):
+    """NaN and ±Infinity tokens are missing for the boundaries as they
+    are for the moments and the bin counts: the edges are DuckDB's
+    quantile_cont over the finite values of the BinningMethod's
+    population, and every non-finite token is counted in the missing
+    slot."""
+    vals = [str(i) for i in range(1, 21)] + ["NaN", "Infinity", "Infinity", "-Infinity"] + _DIRTY
+    cc = _dirty_stats(spark, vals, method)
+    pop = "i % 2 = 0" if method == "EqualPositive" else "TRUE"
+    con = _duckdb_text(vals)
+    (arr,) = con.sql(
+        "SELECT quantile_cont(v, [0.0, 0.25, 0.5, 0.75]) FROM "
+        f"(SELECT TRY_CAST(x AS DOUBLE) AS v FROM t WHERE {pop}) WHERE isfinite(v)"
+    ).fetchone()
+    edges: list[float] = []
+    for b in arr:
+        if not edges or b > edges[-1]:
+            edges.append(b)
+    b = cc.column_binning
+    assert b.bin_boundary == edges
+    counts = [n + p for n, p in zip(b.bin_count_neg, b.bin_count_pos)]
+    assert sum(counts[:-1]) == cc.column_stats.valid_num_count
+    assert sum(counts) == len(vals)
 
 
 def _persistent_rdd_count(spark) -> int:

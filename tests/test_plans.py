@@ -54,12 +54,14 @@ class TestAggShapes:
         assert "hashpartitioning" not in plan
 
     def test_moments_wide_agg_has_no_expand(self, spark):
-        # the pipeline's form: every column in ONE aggregate, where a
-        # per-column countDistinct would Expand each row once per column
+        # the pipeline's form: moments and boundaries of every column in
+        # ONE aggregate, where a per-column countDistinct would Expand
+        # each row once per column
         from shifu_spark.operators.stats import _moments
 
         li = spark.read.parquet(f"{SF}/lineitem.parquet")
-        plan = _moments(li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
+        cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
+        plan = _moments(li, cols, F.col("l_returnflag") == "R", 8)
         text = plan._jdf.queryExecution().executedPlan().toString()
         assert "Expand" not in text
         assert "hashpartitioning" not in text

@@ -1215,12 +1215,15 @@ FROM {frame} GROUP BY 2
         """Boundary builders return [] on empty/all-null input (never a
         crash), and psi_df over an empty counts frame yields no rows on
         both engines."""
-        from shifu_spark.operators.binning import equal_population_boundaries, ntile_boundaries
+        from pyspark.sql import functions as F
+
+        from shifu_spark.operators.binning import ntile_boundaries
         from shifu_spark.operators.psi import psi_df
+        from shifu_spark.operators.stats import moments_and_boundaries
 
         dfs, con = degen
         for frame in ("empty", "allnull"):
-            assert equal_population_boundaries(dfs[frame], ["x"], 4) == {"x": []}
+            assert moments_and_boundaries(dfs[frame], ["x"], F.lit(True), 4)[1] == {"x": []}
             assert ntile_boundaries(dfs[frame], "x", 4) == []
         actual = spark.createDataFrame([], "column_name string, unit string, bin int, cnt long")
         expected = spark.createDataFrame([], "column_name string, bin int, expected_frac double")
