@@ -18,19 +18,17 @@ Spark shape — no driver scan over the data:
       and totals are windows over one constant bucket — no persist, no
       boundary collect, no offsets join.
     - More ranges: bucket the points by collected quantile boundaries of
-      the sort key, cumulate within each bucket in parallel, then add
+      the score, cumulate within each bucket in parallel, then add
       per-bucket exclusive offsets (one tiny row per bucket, broadcast
       back). This is the form for inputs whose distinct scores grow with
       the data; a large or unknown estimate lands here.
-    Both forms give the rows of a global ``sum() OVER (ORDER BY ...)``;
-  * ROC-AUC via the Mann-Whitney rank statistic over those points
-    (equivalent to the trapezoid over the full-resolution ROC);
-    integer-count arithmetic keeps results bit-deterministic across
-    engines.
-
-``confusion_points_global`` keeps the unpartitioned global-window form
-only as an oracle mirror for differential tests; every public entry
-point routes through ``prefix_sums``.
+    Both forms give the rows of a global
+    ``sum() OVER (ORDER BY score DESC)``;
+  * ROC AUC, PR AUC and KS all come from that one scan in
+    ``curve_metrics_df``: the AUC is the tie-corrected trapezoid, which
+    equals the Mann-Whitney rank statistic, summed in DECIMAL so it is
+    deterministic across engines and partitionings. ``weight_col`` runs
+    the same scan over the clamped weighted tallies.
 """
 
 from __future__ import annotations
@@ -69,12 +67,15 @@ def _score_points(
     evaluation point (under Spark/DuckDB NaN-is-greatest ordering a NaN
     score would silently rank as the most confident prediction; the
     unified missing semantics route it out instead, as the bin lookup
-    does)."""
+    does). An unparseable TEXT score is missing too: try_cast, not cast,
+    so it is dropped instead of raising under ANSI mode. A double score
+    plans the same either way (a same-type cast is folded away)."""
     w = clamp_weight(weight_col) if weight_col else F.lit(1.0)
-    df = df.filter(~_is_nonvalue(F.col(score_col).cast("double")))
+    score = F.col(score_col).try_cast("double")
+    df = df.filter(~_is_nonvalue(score))
     return (
         df.select(
-            F.col(score_col).cast("double").alias("score"),
+            score.alias("score"),
             F.when(label_expr, 1).otherwise(0).alias("y"),
             w.alias("w"),
         )
@@ -137,17 +138,16 @@ def _range_count(df: DataFrame, num_ranges: int | None = None) -> int:
 
 def prefix_sums(
     df: DataFrame,
-    order_col: str,
     cols: list[str],
-    descending: bool = True,
     num_ranges: int | None = None,
     cache_out: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """Inclusive prefix-sum of ``cols`` in ``order_col`` order.
+    """Inclusive prefix-sum of ``cols`` in descending ``score`` order.
 
     Returns the input with ``tot_<col>`` (grand total, constant),
     ``cum_<col>`` (running sum) and ``__pid`` (range id) columns
-    appended. Rows equal an unpartitioned ``sum() OVER (ORDER BY ...)``.
+    appended. Rows equal an unpartitioned
+    ``sum() OVER (ORDER BY score DESC)``.
 
     The range count is ``_range_count(df, num_ranges)``:
     ``ceil(sizeInBytes / advisoryPartitionSizeInBytes)`` of the input's
@@ -183,10 +183,9 @@ def prefix_sums(
         the within-bucket running sum (the window shuffles on the bucket
         id, spreading buckets across every core).
     """
-    key = F.desc(order_col) if descending else F.asc(order_col)
     wpart = (
         Window.partitionBy("__pid")
-        .orderBy(key)
+        .orderBy(F.desc("score"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     n = _range_count(df, num_ranges)
@@ -204,15 +203,16 @@ def prefix_sums(
         df = df.persist()
         cache_out.append(df)
     qs = [i / n for i in range(1, n)]
-    bounds_row = df.agg(F.percentile_approx(order_col, qs, 1000).alias("b")).collect()
+    bounds_row = df.agg(F.percentile_approx("score", qs, 1000).alias("b")).collect()
     bounds = sorted({float(b) for b in (bounds_row[0]["b"] or []) if b is not None})
     if bounds:
         arr = F.array(*[F.lit(b) for b in bounds])
-        # ascending bucket id = #{boundaries < value}; ties share a bucket
+        # bucket id = #{boundaries >= value}: the top scores are bucket
+        # 0; ties share a bucket
         asc_id = F.aggregate(
-            arr, F.lit(0), lambda acc, b: acc + F.when(F.col(order_col) > b, 1).otherwise(0)
+            arr, F.lit(0), lambda acc, b: acc + F.when(F.col("score") > b, 1).otherwise(0)
         )
-        bucket = (F.lit(len(bounds)) - asc_id) if descending else asc_id
+        bucket = F.lit(len(bounds)) - asc_id
     else:
         bucket = F.lit(0)
     # no physical repartition needed: the per-bucket window below
@@ -279,118 +279,8 @@ def confusion_points_df(
     """
     pts = _score_points(df, score_col, label_expr, weight_col)
     cols = ["pos", "neg"] + (["wpos", "wneg"] if weight_col else [])
-    cum = prefix_sums(
-        pts, "score", cols, descending=True, num_ranges=num_ranges, cache_out=cache_out
-    )
+    cum = prefix_sums(pts, cols, num_ranges=num_ranges, cache_out=cache_out)
     return _confusion_select(cum, weighted=weight_col is not None)
-
-
-def confusion_points_global(
-    df: DataFrame,
-    score_col: str,
-    label_expr: Column,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Unpartitioned global-window form — kept ONLY as a differential-test /
-    oracle-mirror path (one WindowExec task; do not use at scale)."""
-    pts = _score_points(df, score_col, label_expr, weight_col)
-    wdesc = Window.orderBy(F.desc("score")).rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t = (
-        pts.withColumn("cum_pos", F.sum("pos").over(wdesc))
-        .withColumn("cum_neg", F.sum("neg").over(wdesc))
-        .withColumn("cum_wpos", F.sum("wpos").over(wdesc))
-        .withColumn("cum_wneg", F.sum("wneg").over(wdesc))
-        .withColumn("tot_pos", F.sum("pos").over(wall))
-        .withColumn("tot_neg", F.sum("neg").over(wall))
-    )
-    return _confusion_select(t, weighted=weight_col is not None)
-
-
-def roc_auc_df(
-    df: DataFrame,
-    score_col: str,
-    label_expr: Column,
-    round_to: int | None = 6,
-    weight_col: str | None = None,
-    num_ranges: int | None = None,
-) -> DataFrame:
-    """ROC AUC via the Mann-Whitney rank form with average ranks for ties.
-
-    AUC = (Σ avg-ranks of positives − nP(nP+1)/2) / (nP·nN).
-    All intermediates are exact integers/half-integers -> deterministic
-    across engines, and equals the trapezoid over the full-resolution ROC
-    (AreaUnderCurve.java:56-133 semantics without bucketing loss).
-
-    Distributed: ranks come from an ascending prefix-sum over the
-    per-distinct-score points — no global window.  With ``weight_col``
-    the weighted trapezoid over (wfpr, wtpr) is used instead (weighted
-    Mann-Whitney and weighted trapezoid-with-ties agree the same way).
-    """
-    if weight_col is not None:
-        return _weighted_roc_auc(df, score_col, label_expr, weight_col, round_to, num_ranges)
-    pts = _score_points(df, score_col, label_expr, None).select("score", "pos", "neg")
-    pts = pts.withColumn("n", F.col("pos") + F.col("neg"))
-    caches: list[DataFrame] = []
-    cum = prefix_sums(
-        pts, "score", ["n"], descending=False, num_ranges=num_ranges, cache_out=caches
-    )
-    try:
-        ranked = cum.withColumn("avg_rank", F.col("cum_n") - (F.col("n") - 1) / 2.0)
-        agg = ranked.agg(
-            F.sum(F.col("avg_rank") * F.col("pos")).alias("rank_sum"),
-            F.sum("pos").alias("np"),
-            F.sum("neg").alias("nn"),
-        )
-        auc = F.try_divide(
-            F.col("rank_sum") - F.col("np") * (F.col("np") + 1) / 2.0, F.col("np") * F.col("nn")
-        )
-        if round_to is not None:
-            auc = F.round(auc, round_to)
-        # finalize eagerly so the points cache can be released NOW (the
-        # single-row result never re-executes against unpersisted lineage)
-        return _finalize_one_row(agg.select(auc.alias("auc")))
-    finally:
-        for c in caches:
-            c.unpersist()
-
-
-def _weighted_roc_auc(
-    df: DataFrame,
-    score_col: str,
-    label_expr: Column,
-    weight_col: str,
-    round_to: int | None,
-    num_ranges: int | None,
-) -> DataFrame:
-    """Weighted ROC AUC: trapezoid over the weighted cumulative curve,
-    with the tie-correct half-step (equivalent to weighted Mann-Whitney).
-
-    Per distinct score (descending): ΔAUC = Δwfp·(wtp_prev + wtp)/2,
-    normalized by totals.  Uses the same distributed prefix-sum."""
-    pts = _score_points(df, score_col, label_expr, weight_col)
-    caches: list[DataFrame] = []
-    cum = prefix_sums(
-        pts, "score", ["wpos", "wneg"], descending=True, num_ranges=num_ranges,
-        cache_out=caches,
-    )
-    try:
-        # Δwfp for this point is its own wneg; wtp_prev = cum_wpos - wpos
-        t = cum.withColumn(
-            "area", F.col("wneg") * ((F.col("cum_wpos") - F.col("wpos")) + F.col("cum_wpos")) / 2.0
-        )
-        agg = t.agg(
-            F.sum("area").alias("area_sum"),
-            F.first("tot_wpos").alias("tp"),
-            F.first("tot_wneg").alias("tn"),
-        )
-        auc = F.try_divide(F.col("area_sum"), F.col("tp") * F.col("tn"))
-        if round_to is not None:
-            auc = F.round(auc, round_to)
-        return _finalize_one_row(agg.select(auc.alias("auc")))
-    finally:
-        for c in caches:
-            c.unpersist()
 
 
 def gain_buckets_df(points: DataFrame, num_buckets: int = 10, round_to: int | None = 6) -> DataFrame:
@@ -428,55 +318,38 @@ def curve_metrics_df(
     label_expr: Column,
     round_to: int | None = 6,
     num_ranges: int | None = None,
+    weight_col: str | None = None,
 ) -> DataFrame:
-    """ROC AUC + PR AUC + KS in ONE prefix scan.
+    """ROC AUC + PR AUC + KS in ONE score-descending prefix scan — the
+    only AUC code in the package (ConfusionMatrix.java:276-520 scan,
+    AreaUnderCurve.java:56-133 trapezoid).
 
-    Composing the metrics separately (roc_auc_df, plus a PR AUC over
-    confusion_points_df) would run one prefix machinery each — a groupBy
-    and range shuffle apiece over the same points. This form derives all
-    three metrics from a single score-desc cumulative scan:
-
-      * ROC AUC as the tie-corrected trapezoid over counts,
-        U = Σ neg_i·(tp_{i-1}+tp_i)/2 — algebraically identical to the
-        Mann-Whitney average-rank statistic (roc_auc_df's form); the sum
-        runs in DECIMAL so it is exact at any scale (products overflow
-        int64 around 10^12 rows);
-      * PR AUC as the recall-ordered trapezoid, adjacent pairs resolved
+      * ROC AUC as the tie-corrected trapezoid, U = Σ neg_i·(tp_{i-1}+tp_i)/2
+        over the per-distinct-score points — algebraically the
+        Mann-Whitney average-rank statistic. The sum runs in DECIMAL, so
+        it is exact and partition-order-independent (integer products
+        overflow int64 around 10^12 rows);
+      * PR AUC as the recall-ordered trapezoid: adjacent pairs resolved
         WITHIN each score range (pid-local lag) plus, when there are
         several ranges, the #ranges−1 boundary pairs from a tiny
-        max_by/min_by agg;
-      * KS = max(TPR − FPR) over the full-resolution curve.
+        max_by/min_by agg. Score-desc order ≡ (recall asc, precision
+        desc): recall ties are exactly the zero-positive runs, along
+        which precision strictly falls — the pinned tie order every
+        oracle mirrors;
+      * KS = max(TPR − FPR) over the full-resolution curve (a fraction,
+        not PerformanceResult's ×100).
 
-    Returns one row (auc, pr_auc, ks).
-    """
-    return _curve_metrics_impl(
-        df, score_col, label_expr, None, round_to, num_ranges, ("auc", "pr_auc", "ks")
-    )
-
-
-def _curve_metrics_impl(
-    df: DataFrame,
-    score_col: str,
-    label_expr: Column,
-    weight_col: str | None,
-    round_to: int | None,
-    num_ranges: int | None,
-    out_aliases: tuple[str, str, str],
-) -> DataFrame:
-    """Shared single-scan curve machinery for the weighted and unweighted
-    forms — ONE place owns the boundary stitch, the pid-local lag, and
-    the tie-order pin. The only parameterization:
-    which tally columns cumulate (pos/neg vs the weighted wpos/wneg) and
-    the decimal scale of the trapezoid numerator (integer counts are
-    exact at scale 0; weights need fractional digits).
+    With ``weight_col`` the same scan runs over the ``clamp_weight``ed
+    tallies (ConfusionMatrix.java:361-370) and gives the weighted AUC,
+    PR AUC and KS; the trapezoid numerator then sums in DECIMAL(38,10).
 
     The range count is ``_range_count`` of the points, as in
     ``prefix_sums``. With one range every adjacent pair lies inside the
     one bucket, so the per-range first/last agg, its lag and the
-    ``__barea`` cross join are not built; several ranges add those
-    boundary pairs. Both forms share every metric expression."""
+    ``__barea`` cross join are not built. Returns one row (auc, pr_auc,
+    ks), finalized eagerly so the points cache is released here.
+    """
     pos, neg = ("wpos", "wneg") if weight_col else ("pos", "neg")
-    u2_type = "decimal(38,10)" if weight_col else "decimal(38,0)"
     pts = _score_points(df, score_col, label_expr, weight_col)
     n = _range_count(pts, num_ranges)
     # with several ranges prefix_sums persists the points once — that
@@ -484,17 +357,13 @@ def _curve_metrics_impl(
     # branch, the barea broadcast branch and the final agg
     caches: list[DataFrame] = []
     try:
-        cum = prefix_sums(
-            pts, "score", [pos, neg], descending=True, num_ranges=n, cache_out=caches,
-        )
+        cum = prefix_sums(pts, [pos, neg], num_ranges=n, cache_out=caches)
         cpos, cneg = F.col(f"cum_{pos}"), F.col(f"cum_{neg}")
         t = (
             cum.withColumn("rec", F.try_divide(cpos, F.col(f"tot_{pos}")))
             .withColumn("prec", F.try_divide(cpos, cpos + cneg))
             .withColumn("fpr", F.try_divide(cneg, F.col(f"tot_{neg}")))
         )
-        # score-desc lag == (recall asc, precision desc) — the pinned tie
-        # order every oracle mirrors
         wprev = Window.partitionBy("__pid").orderBy(F.desc("score"))
         lagged = t.withColumn("prev_r", F.lag("rec").over(wprev)).withColumn(
             "prev_p", F.lag("prec").over(wprev)
@@ -505,22 +374,19 @@ def _curve_metrics_impl(
                 (F.col("rec") - F.col("prev_r")) * (F.col("prec") + F.col("prev_p")) / 2.0,
             )
         )
-        # trapezoid numerator ×2: Σ neg·(2·cum_pos − pos) = 2·U; decimal
-        # accumulation -> exact / partition-order-independent. Counts stay
-        # in INTEGER arithmetic (a 2.0 literal would detour through
-        # doubles and lose exactness past 2^53); weights are doubles.
-        # The integer path must cast OPERANDS to decimal before the
-        # multiply: neg·(2·cum_pos − pos) in BIGINT overflows (ANSI: loud
-        # error) near 3e9·3e9 per-term — exactly the ≥1e12-row regime the
-        # decimal sum exists for. (2·cum_pos − pos) alone stays in long:
-        # it only overflows past ~4.6e18 positives. Values are unchanged
-        # wherever the long product didn't overflow, so oracles agree.
+        # trapezoid numerator ×2: Σ neg·(2·cum_pos − pos) = 2·U. Weights
+        # are doubles and need fractional digits. Counts stay in INTEGER
+        # arithmetic (a 2.0 literal would detour through doubles and lose
+        # exactness past 2^53) and cast the OPERANDS to decimal before the
+        # multiply: in BIGINT the product overflows (ANSI: loud error)
+        # near 3e9·3e9 per term. (2·cum_pos − pos) alone stays in long:
+        # it only overflows past ~4.6e18 positives.
         if weight_col:
-            u2 = F.sum((F.col(neg) * (F.lit(2.0) * cpos - F.col(pos))).cast(u2_type))
+            u2 = F.sum((F.col(neg) * (F.lit(2.0) * cpos - F.col(pos))).cast("decimal(38,10)"))
         else:
             u2 = F.sum(
-                F.col(neg).cast(u2_type)
-                * (F.lit(2) * cpos - F.col(pos)).cast(u2_type)
+                F.col(neg).cast("decimal(38,0)")
+                * (F.lit(2) * cpos - F.col(pos)).cast("decimal(38,0)")
             )
         agg = lagged.agg(
             u2.alias("u2"),
@@ -532,12 +398,10 @@ def _curve_metrics_impl(
         pr = F.coalesce(F.col("pr_inner"), F.lit(0.0))
         if n > 1:
             # boundary pairs: (lowest-score row of pid k) -> (highest-score
-            # row of pid k+1). Computed IN-PLAN (per-pid first/last agg ->
+            # row of pid k+1), computed in-plan (per-pid first/last agg ->
             # lag over the #pids-row table -> 1-row sum, broadcast back)
-            # instead of a driver collect — both this branch and the final
-            # agg read the one persisted points table. The lag window is
-            # catalog-scale (#buckets rows; bounded: same class as the
-            # offsets window in prefix_sums).
+            # instead of a driver collect; both this branch and the final
+            # agg read the one persisted points table
             per_pid = t.groupBy("__pid").agg(
                 F.max_by(F.struct("rec", "prec"), "score").alias("first"),
                 F.min_by(F.struct("rec", "prec"), "score").alias("last"),
@@ -563,61 +427,10 @@ def _curve_metrics_impl(
         ks = F.col("ks_raw")
         if round_to is not None:
             auc, pr, ks = F.round(auc, round_to), F.round(pr, round_to), F.round(ks, round_to)
-        a_auc, a_pr, a_ks = out_aliases
-        return _finalize_one_row(
-            agg.select(auc.alias(a_auc), pr.alias(a_pr), ks.alias(a_ks))
-        )
+        return _finalize_one_row(agg.select(auc.alias("auc"), pr.alias("pr_auc"), ks.alias("ks")))
     finally:
         for c in caches:
             c.unpersist()
-
-
-def weighted_curve_metrics_df(
-    df: DataFrame,
-    score_col: str,
-    label_expr: Column,
-    weight_col: str,
-    round_to: int | None = 6,
-    num_ranges: int | None = None,
-) -> DataFrame:
-    """Weighted ROC AUC + weighted PR AUC + weighted KS in ONE prefix scan.
-
-    The weighted analog of ``curve_metrics_df`` (same plan shape): one
-    score-descending distributed prefix-sum over the weighted tallies
-    (ConfusionMatrix.java weighted counters with the :361-370 clamp),
-    from which all three metrics are derived —
-
-      * weighted ROC AUC as the tie-exact trapezoid over weighted
-        counts, Σ wneg_i·(wtp_{i-1}+wtp_i)/2 normalized by totals
-        (AreaUnderCurve.java:56-133 weighted semantics); summed in
-        DECIMAL(38,10) so partition order can't flip the 6th decimal;
-      * weighted PR AUC as the recall-ordered trapezoid — adjacent
-        pairs resolved within each range bucket by a score-desc lag
-        (score-desc order ≡ (recall asc, precision desc): recall ties
-        are exactly the zero-wpos runs, along which precision strictly
-        falls), plus the #buckets−1 boundary pairs from one tiny agg;
-      * weighted KS = max(wTPR − wFPR).
-
-    Returns one row (weighted_auc, weighted_pr_auc, weighted_ks).
-    """
-    return _curve_metrics_impl(
-        df, score_col, label_expr, weight_col, round_to, num_ranges,
-        ("weighted_auc", "weighted_pr_auc", "weighted_ks"),
-    )
-
-
-def weighted_pr_auc_df(
-    df: DataFrame,
-    score_col: str,
-    label_expr: Column,
-    weight_col: str,
-    round_to: int | None = 6,
-    num_ranges: int | None = None,
-) -> DataFrame:
-    """Weighted PR AUC — thin projection of the single-scan
-    ``weighted_curve_metrics_df`` (one prefix machinery, not two)."""
-    out = weighted_curve_metrics_df(df, score_col, label_expr, weight_col, round_to, num_ranges)
-    return out.select("weighted_pr_auc")
 
 
 def weighted_gain_buckets_df(
@@ -637,10 +450,7 @@ def weighted_gain_buckets_df(
     not a divide-by-zero, like the other weighted curves, and a NULL
     bucket."""
     pts = _score_points(df, score_col, label_expr, weight_col)
-    cum = prefix_sums(
-        pts, "score", ["wpos", "wneg"], descending=True, num_ranges=num_ranges,
-        cache_out=cache_out,
-    )
+    cum = prefix_sums(pts, ["wpos", "wneg"], num_ranges=num_ranges, cache_out=cache_out)
     tot_w = F.col("tot_wpos") + F.col("tot_wneg")
     t = (
         cum.withColumn("action_rate", F.try_divide(F.col("cum_wpos") + F.col("cum_wneg"), tot_w))
@@ -664,39 +474,6 @@ def weighted_gain_buckets_df(
         for c in ("action_rate", "wprecision", "wrecall"):
             out = out.withColumn(c, F.round(F.col(c), round_to))
     return out
-
-
-def meta_score_eval(
-    df: DataFrame,
-    score_col: str,
-    label_expr: Column,
-    weight_col: str | None = None,
-    round_to: int | None = 6,
-) -> DataFrame:
-    """Champion-challenger / meta-score evaluation: run an ARBITRARY score
-    column (an external model's output, a business heuristic, a challenger
-    model) through the full metric stack and return one summary row
-    (auc, pr_auc, ks).
-
-    Reference: EvalModelProcessor.runDistMetaScore (:1007) +
-    pig/EvalScoreMetaSort.pig + udf/ColumnProjector.java — the reference
-    re-sorts the eval output on the meta column and replays the
-    ConfusionMatrix scan.  Here the curve operators are already
-    column-agnostic, so meta-scoring is literally pointing them at the
-    other column; everything runs on the distributed prefix-sum path.
-    KS = max(TPR − FPR) over the full-resolution curve
-    (PerformanceResult ks semantics, as a fraction not ×100).
-    With ``weight_col`` every metric (AUC, PR AUC, KS) uses the weighted
-    counters end-to-end via the single-scan weighted curve.
-    """
-    if weight_col is None:
-        return curve_metrics_df(df, score_col, label_expr, round_to)
-    out = weighted_curve_metrics_df(df, score_col, label_expr, weight_col, round_to)
-    return out.select(
-        F.col("weighted_auc").alias("auc"),
-        F.col("weighted_pr_auc").alias("pr_auc"),
-        F.col("weighted_ks").alias("ks"),
-    )
 
 
 # ---------------------------------------------------------------------------

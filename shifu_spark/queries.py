@@ -531,12 +531,14 @@ FROM cum
 
 @query("roc_auc", stage="eval")
 def roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROC AUC (Mann-Whitney rank form == full-resolution trapezoid,
-    AreaUnderCurve.java:56-133)."""
-    from shifu_spark.operators.eval_metrics import roc_auc_df
+    """ROC AUC (AreaUnderCurve.java:56-133). The Spark side is the
+    tie-corrected trapezoid of eval_metrics.curve_metrics_df; the oracle
+    stays in Mann-Whitney rank form, so the gate cross-checks two
+    formulas for the same statistic."""
+    from shifu_spark.operators.eval_metrics import curve_metrics_df
 
     li = _t(spark, sf_dir, "lineitem")
-    return roc_auc_df(li, "l_extendedprice", F.col("l_returnflag") == "R")
+    return curve_metrics_df(li, "l_extendedprice", F.col("l_returnflag") == "R").select("auc")
 
 
 ORACLES["roc_auc"] = """
@@ -1996,10 +1998,13 @@ def weighted_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PR AUC (PerformanceResult weighted PR curve): trapezoid
     over weighted (recall, precision); weight = l_quantity with the
     reference clamp."""
-    from shifu_spark.operators.eval_metrics import weighted_pr_auc_df
+    from shifu_spark.operators.eval_metrics import curve_metrics_df
 
     li = _t(spark, sf_dir, "lineitem")
-    return weighted_pr_auc_df(li, "l_extendedprice", F.col("l_returnflag") == "R", "l_quantity")
+    out = curve_metrics_df(
+        li, "l_extendedprice", F.col("l_returnflag") == "R", weight_col="l_quantity"
+    )
+    return out.select(F.col("pr_auc").alias("weighted_pr_auc"))
 
 
 ORACLES["weighted_pr_auc"] = """
@@ -2990,12 +2995,14 @@ def eval_meta_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (EvalModelProcessor.runDistMetaScore:1007, EvalScoreMetaSort.pig,
     udf/ColumnProjector.java): an external score column — here
     l_discount standing in for a challenger model's output — through the
-    full metric stack: ROC AUC, PR AUC, KS. All on the distributed
-    prefix-sum curve path."""
-    from shifu_spark.operators.eval_metrics import meta_score_eval
+    full metric stack: ROC AUC, PR AUC, KS. The curve operator is
+    column-agnostic, so meta-scoring is pointing curve_metrics_df at the
+    other column. Its AUC is the trapezoid; the oracle's is in
+    Mann-Whitney rank form, so the gate cross-checks two formulas."""
+    from shifu_spark.operators.eval_metrics import curve_metrics_df
 
     li = _t(spark, sf_dir, "lineitem")
-    return meta_score_eval(li, "l_discount", F.col("l_returnflag") == "R")
+    return curve_metrics_df(li, "l_discount", F.col("l_returnflag") == "R")
 
 
 ORACLES["eval_meta_score"] = """
@@ -4220,12 +4227,12 @@ def sgd_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     fitted model must clear 0.9 on the planted separable target, both
     ASSERTED in-query (a broken trainer errors the gate row)."""
     from shifu_spark.ml.sgd import lr_score_expr, train_lr_sgd
-    from shifu_spark.operators.eval_metrics import roc_auc_df
+    from shifu_spark.operators.eval_metrics import curve_metrics_df
 
     data = _train_sentinel_df(spark, sf_dir)
     train, valid = data.randomSplit([0.8, 0.2], seed=42)
     res = train_lr_sgd(train, ["x1", "x2"], optimizer="ADAM", learning_rate=0.3, max_epochs=5)
-    auc = roc_auc_df(
+    auc = curve_metrics_df(
         valid.withColumn("p", lr_score_expr(["x1", "x2"], res.weights)),
         "p",
         F.col("label") == 1.0,
@@ -4241,7 +4248,7 @@ def nn_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only but semi-verifiable: per-epoch loss decrease + held-out
     AUC >= 0.9 on the planted separable target, asserted in-query."""
     from shifu_spark.ml.nn import nn_score_udf, train_nn
-    from shifu_spark.operators.eval_metrics import roc_auc_df
+    from shifu_spark.operators.eval_metrics import curve_metrics_df
 
     data = _train_sentinel_df(spark, sf_dir)
     train, valid = data.randomSplit([0.8, 0.2], seed=42)
@@ -4249,7 +4256,7 @@ def nn_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         train, ["x1", "x2"], hidden_layers=[4], hidden_activation="SWISH",
         optimizer="ADAM", learning_rate=0.3, max_epochs=3, seed=42,
     )
-    auc = roc_auc_df(
+    auc = curve_metrics_df(
         valid.withColumn("p", nn_score_udf(["x1", "x2"], res)),
         "p",
         F.col("label") == 1.0,
@@ -4690,13 +4697,17 @@ def weighted_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted ROC AUC (PerformanceResult weighted curves,
     AreaUnderCurve weighted trapezoid): trapezoid over weighted
     (FPR, TPR) per distinct score; weight = l_quantity with the
-    reference's clamp (null/negative -> 1.0). Runs on the distributed
-    prefix-sum path — no global window."""
-    from shifu_spark.operators.eval_metrics import roc_auc_df
+    reference's clamp (null/negative -> 1.0). The Spark side is the
+    DECIMAL-summed tie-corrected trapezoid of curve_metrics_df; the
+    oracle integrates the lagged (FPR, TPR) curve in doubles, so the
+    gate cross-checks two formulas."""
+    from shifu_spark.operators.eval_metrics import curve_metrics_df
 
     li = _t(spark, sf_dir, "lineitem")
-    auc = roc_auc_df(li, "l_extendedprice", F.col("l_returnflag") == "R", weight_col="l_quantity")
-    return auc.select(F.col("auc").alias("weighted_auc"))
+    out = curve_metrics_df(
+        li, "l_extendedprice", F.col("l_returnflag") == "R", weight_col="l_quantity"
+    )
+    return out.select(F.col("auc").alias("weighted_auc"))
 
 
 ORACLES["weighted_roc_auc"] = """
@@ -11638,7 +11649,7 @@ def wdl_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     held-out AUC >= 0.9 on the planted separable target, asserted
     in-query."""
     from shifu_spark.ml.wdl import train_wdl, wdl_score_udf
-    from shifu_spark.operators.eval_metrics import roc_auc_df
+    from shifu_spark.operators.eval_metrics import curve_metrics_df
 
     li = _t(spark, sf_dir, "lineitem")
     data = li.select(
@@ -11657,7 +11668,7 @@ def wdl_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         hidden_activation="RELU", optimizer="ADAM", learning_rate=0.3,
         max_epochs=8, seed=42,
     )
-    auc = roc_auc_df(
+    auc = curve_metrics_df(
         valid.withColumn("p", wdl_score_udf(model)),
         "p",
         F.col("label") == 1.0,
@@ -11776,7 +11787,7 @@ def wdl_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-verifiable: per-epoch loss decrease + held-out AUC >= 0.9 on
     the planted separable target, asserted in-query."""
     from shifu_spark.ml.wdl import train_wdl, wdl_score_udf
-    from shifu_spark.operators.eval_metrics import roc_auc_df
+    from shifu_spark.operators.eval_metrics import curve_metrics_df
 
     li = _t(spark, sf_dir, "lineitem")
     data = li.select(
@@ -11795,7 +11806,7 @@ def wdl_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         hidden_activation="RELU", optimizer="ADAM", learning_rate=0.3,
         max_epochs=8, epoch_sample_rate=0.5, seed=42,
     )
-    auc = roc_auc_df(
+    auc = curve_metrics_df(
         valid.withColumn("p", wdl_score_udf(model)),
         "p",
         F.col("label") == 1.0,

@@ -174,13 +174,6 @@ def safe_double(col, missing_tokens: list[str] | None = None):
     return F.when(c.isin(tokens) | F.isnan(F.coalesce(d, F.lit(0.0))) | (F.abs(F.coalesce(d, F.lit(0.0))) == float("inf")), F.lit(None).cast("double")).otherwise(d)
 
 
-def is_missing_str(col, missing_tokens: list[str] | None = None):
-    """Boolean expr: string value counts as missing (NULL or a token)."""
-    tokens = missing_tokens if missing_tokens is not None else DEFAULT_MISSING_TOKENS
-    c = F.col(col) if isinstance(col, str) else col
-    return c.isNull() | c.isin(tokens)
-
-
 def _is_parquet_dir(path: str, spark=None) -> bool:
     return _is_format_dir(path, ".parquet", spark)
 
@@ -234,34 +227,3 @@ def write_header_sidecar(df: DataFrame, path: str, delimiter: str = "|") -> None
     spark.createDataFrame([(header,)], "value string").coalesce(1).write.mode(
         "overwrite"
     ).text(path.rstrip("/") + ".pig_header")
-
-
-def seeded_split(df: DataFrame, valid_fraction: float, seed: int = 42) -> tuple[DataFrame, DataFrame]:
-    """Deterministic train/validation split (the rebuild of the unseeded
-    CrossValidation split injection, guagua/ShifuInputFormat.java:74-149 —
-    seeded here so runs are reproducible)."""
-    train, valid = df.randomSplit([1 - valid_fraction, valid_fraction], seed=seed)
-    return train, valid
-
-
-def inject_validation(train_df: DataFrame, valid_df: DataFrame) -> DataFrame:
-    """Append a tagged validation dataset to training input with an origin
-    flag (ShifuInputFormat.java:149 appends validation splits; the flag
-    replaces the reference's path-prefix convention)."""
-    return train_df.withColumn("__origin", F.lit("train")).unionByName(
-        valid_df.withColumn("__origin", F.lit("valid"))
-    )
-
-
-def shuffle_dataset(df: DataFrame, num_partitions: int | None = None, seed: int = 42) -> DataFrame:
-    """Randomly re-partition normalized data (norm-data shuffle,
-    core/shuffle/MapReduceShuffle.java:47-160 / DataShuffle.java:20-56 —
-    a whole MR job in the reference; one seeded round-robin repartition
-    here). Deterministic: rows are distributed by hash of a seeded rand
-    column rather than Spark's unseeded repartition(n)."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.withColumn("__shuffle_key", F.rand(seed))
-        .repartitionByRange(n, "__shuffle_key")
-        .drop("__shuffle_key")
-    )

@@ -46,14 +46,14 @@ def test_curve_metrics_releases_cache(spark, scored, num_ranges):
 
 @RANGES
 def test_weighted_curve_metrics_releases_cache(spark, scored, num_ranges):
-    from shifu_spark.operators.eval_metrics import weighted_curve_metrics_df
+    from shifu_spark.operators.eval_metrics import curve_metrics_df
 
     before = _persistent_rdd_count(spark)
-    out = weighted_curve_metrics_df(
-        scored, "score", F.col("label") == 1, "w", num_ranges=num_ranges
+    out = curve_metrics_df(
+        scored, "score", F.col("label") == 1, num_ranges=num_ranges, weight_col="w"
     )
     row = out.collect()[0]
-    assert row["weighted_auc"] is not None
+    assert row["auc"] is not None
     # <= (not ==): an earlier test's GC-pending localCheckpoint may be
     # cleaner-released DURING this test, dropping the count below `before`;
     # the contract here is only that the curve pass adds nothing persistent

@@ -946,11 +946,32 @@ class TestIvf:
         assert cells.select("cell").distinct().count() <= 8
 
 
+def confusion_points_global(df, score_col, label_expr, weight_col=None):
+    """The unpartitioned global-window form of ``confusion_points_df``:
+    one WindowExec task, so only a mirror for the differential tests."""
+    from pyspark.sql import Window
+
+    from shifu_spark.operators.eval_metrics import _confusion_select, _score_points
+
+    pts = _score_points(df, score_col, label_expr, weight_col)
+    wdesc = Window.orderBy(F.desc("score")).rowsBetween(Window.unboundedPreceding, 0)
+    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    t = (
+        pts.withColumn("cum_pos", F.sum("pos").over(wdesc))
+        .withColumn("cum_neg", F.sum("neg").over(wdesc))
+        .withColumn("cum_wpos", F.sum("wpos").over(wdesc))
+        .withColumn("cum_wneg", F.sum("wneg").over(wdesc))
+        .withColumn("tot_pos", F.sum("pos").over(wall))
+        .withColumn("tot_neg", F.sum("neg").over(wall))
+    )
+    return _confusion_select(t, weighted=weight_col is not None)
+
+
 class TestScalableConfusion:
     def test_matches_window_form(self, spark, sf_dir):
         from pyspark.sql import functions as F
 
-        from shifu_spark.operators.eval_metrics import confusion_points_df, confusion_points_global
+        from shifu_spark.operators.eval_metrics import confusion_points_df
 
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         label = F.col("l_returnflag") == "R"
@@ -967,7 +988,7 @@ class TestScalableConfusion:
     def test_weighted_matches_window_form(self, spark, sf_dir):
         from pyspark.sql import functions as F
 
-        from shifu_spark.operators.eval_metrics import confusion_points_df, confusion_points_global
+        from shifu_spark.operators.eval_metrics import confusion_points_df
 
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         label = F.col("l_returnflag") == "R"
@@ -1021,22 +1042,51 @@ class TestCurveRangeForms:
         df.count()
         return df
 
+    @staticmethod
+    def _mann_whitney(rows, weighted):
+        """Exact (weighted) Mann-Whitney AUC of the finite-score rows,
+        P(pos > neg) + P(tie)/2 in rationals, with the clamp rule:
+        an unparseable, non-finite or negative weight counts 1. None
+        when a class is empty."""
+        from fractions import Fraction
+
+        def weight(w):
+            try:
+                v = float(w)
+            except (TypeError, ValueError):
+                return Fraction(1)
+            return Fraction(v) if math.isfinite(v) and v >= 0 else Fraction(1)
+
+        pos, neg = {}, {}
+        for score, label, w in rows:
+            if score is None or not math.isfinite(score):
+                continue
+            side = pos if label else neg
+            side[score] = side.get(score, 0) + (weight(w) if weighted else 1)
+        wp, wn = sum(pos.values()), sum(neg.values())
+        if not wp or not wn:
+            return None
+        u = sum(
+            a * b * (1 if sp > sn else Fraction(1, 2) if sp == sn else 0)
+            for sp, a in pos.items()
+            for sn, b in neg.items()
+        )
+        return float(u / (wp * wn))
+
     def _results(self, df, n):
         from shifu_spark.operators.eval_metrics import (
             confusion_points_df,
             curve_metrics_df,
             gain_buckets_df,
-            roc_auc_df,
-            weighted_curve_metrics_df,
             weighted_gain_buckets_df,
         )
 
         lab = self.label
         return {
             "curve": curve_metrics_df(df, "score", lab, num_ranges=n).collect(),
-            "weighted_curve": weighted_curve_metrics_df(df, "score", lab, "w", num_ranges=n).collect(),
-            "roc": roc_auc_df(df, "score", lab, num_ranges=n).collect(),
-            "weighted_roc": roc_auc_df(df, "score", lab, weight_col="w", num_ranges=n).collect(),
+            "weighted_curve": curve_metrics_df(
+                df, "score", lab, num_ranges=n, weight_col="w"
+            ).collect(),
             "points": sorted(map(tuple, confusion_points_df(df, "score", lab, num_ranges=n).collect())),
             "weighted_points": sorted(
                 map(tuple, confusion_points_df(df, "score", lab, "w", num_ranges=n).collect())
@@ -1046,19 +1096,25 @@ class TestCurveRangeForms:
         }
 
     def test_one_range_matches_forced_ranges(self, spark):
-        from shifu_spark.operators.eval_metrics import _range_count, _score_points
+        from shifu_spark.operators.eval_metrics import (
+            _range_count,
+            _score_points,
+            curve_metrics_df,
+        )
 
         for name, rows in self._cases():
             df = self._cached(spark, rows)
             try:
                 assert _range_count(_score_points(df, "score", self.label, "w")) == 1, name
                 derived = self._results(df, None)
-                # the rank-statistic ROC AUC and the single-scan trapezoid agree
-                assert derived["roc"][0]["auc"] == derived["curve"][0]["auc"], name
-                assert (
-                    derived["weighted_roc"][0]["auc"]
-                    == derived["weighted_curve"][0]["weighted_auc"]
-                ), name
+                # the single-scan trapezoid equals the exact rank statistic
+                for w in (None, "w"):
+                    got = curve_metrics_df(
+                        df, "score", self.label, round_to=None, weight_col=w
+                    ).collect()[0]["auc"]
+                    want = self._mann_whitney(rows, weighted=w is not None)
+                    assert (got is None) == (want is None), (name, w)
+                    assert want is None or abs(got - want) <= 1e-12, (name, w, got, want)
                 for n in (4, 8):
                     forced = self._results(df, n)
                     for k in derived:
@@ -1106,6 +1162,75 @@ class TestCurveRangeForms:
         assert (n1, cached1, joined1) == (1, 0, False)
         assert n > 1 and cached == 1 and joined
         assert (points, curve) == (points1, curve1)
+
+    @pytest.mark.parametrize("num_ranges", [None, 4])
+    def test_unit_weights_match_unweighted(self, spark, num_ranges):
+        """``weight_col`` only swaps the tallies the scan cumulates: a
+        weight of 1 on every row gives exactly the unweighted
+        (auc, pr_auc, ks)."""
+        from shifu_spark.operators.eval_metrics import curve_metrics_df
+
+        for name, rows in self._cases():
+            df = self._cached(spark, [(s, y, "1") for s, y, _ in rows])
+            try:
+                plain = curve_metrics_df(df, "score", self.label, num_ranges=num_ranges)
+                unit = curve_metrics_df(
+                    df, "score", self.label, num_ranges=num_ranges, weight_col="w"
+                )
+                assert unit.collect() == plain.collect(), name
+            finally:
+                df.unpersist()
+
+    def test_unparseable_text_scores_are_dropped(self, spark):
+        """A text score that does not parse is missing, as the reader
+        treats it: the curve and the confusion points drop it instead of
+        raising CAST_INVALID_INPUT under ANSI. DuckDB's TRY_CAST +
+        isfinite is the oracle."""
+        import duckdb
+
+        from shifu_spark.operators.eval_metrics import confusion_points_df, curve_metrics_df
+        from tests.oracle import compare
+
+        junk = ["abc", "?", "", "NaN", "Infinity", "-Infinity", None]
+        rows = [(f"{i * 37 % 101 / 100:.2f}", int(i % 3 == 0)) for i in range(80)]
+        rows += [(s, i % 2) for i, s in enumerate(junk + junk)]
+        df = spark.createDataFrame(rows, "score string, label int")
+        con = duckdb.connect()
+        con.execute("CREATE TABLE t (score VARCHAR, label INTEGER)")
+        con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+        cum = """
+WITH pts AS (
+  SELECT TRY_CAST(score AS DOUBLE) AS score, sum(label) AS pos, sum(1 - label) AS neg
+  FROM t WHERE isfinite(TRY_CAST(score AS DOUBLE)) GROUP BY 1
+),
+cum AS (SELECT score, pos, neg,
+               sum(pos) OVER (ORDER BY score DESC) AS tp,
+               sum(neg) OVER (ORDER BY score DESC) AS fp,
+               sum(pos) OVER () AS tot_p, sum(neg) OVER () AS tot_n
+        FROM pts)
+"""
+        points_sql = cum + """
+SELECT score, tp::BIGINT AS tp, fp::BIGINT AS fp,
+       (tot_p - tp)::BIGINT AS fn, (tot_n - fp)::BIGINT AS tn,
+       tp::DOUBLE / (tp + fp) AS precision, tp::DOUBLE / tot_p AS recall,
+       fp::DOUBLE / tot_n AS fpr
+FROM cum
+"""
+        curve_sql = cum + """,
+pr AS (SELECT tp::DOUBLE / (tp + fp) AS precision, tp::DOUBLE / tot_p AS recall FROM cum),
+lagged AS (SELECT recall, precision,
+                  lag(recall) OVER (ORDER BY recall, precision DESC) AS prev_r,
+                  lag(precision) OVER (ORDER BY recall, precision DESC) AS prev_p
+           FROM pr)
+SELECT round((SELECT sum(neg * ((tp - pos) + tp) * 0.5) FROM cum)
+             / ((SELECT max(tot_p) FROM cum) * (SELECT max(tot_n) FROM cum)), 6) AS auc,
+       (SELECT round(sum((recall - prev_r) * (precision + prev_p) / 2.0), 6)
+        FROM lagged WHERE prev_r IS NOT NULL) AS pr_auc,
+       (SELECT round(max(tp::DOUBLE / tot_p - fp::DOUBLE / tot_n), 6) FROM cum) AS ks
+"""
+        problems = compare(confusion_points_df(df, "score", self.label), con, points_sql, "points")
+        problems += compare(curve_metrics_df(df, "score", self.label), con, curve_sql, "curve")
+        assert problems == [], problems
 
     @pytest.mark.parametrize("num_ranges", [None, 4])
     def test_weighted_gains_zero_total_weight(self, spark, num_ranges):

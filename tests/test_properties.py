@@ -840,10 +840,10 @@ FROM j GROUP BY column_name, unit ORDER BY column_name, unit
         population-split signature)."""
         from pyspark.sql import functions as F
 
-        from shifu_spark.operators.eval_metrics import roc_auc_df
+        from shifu_spark.operators.eval_metrics import curve_metrics_df
 
         df, con = dirty
-        got = roc_auc_df(df, "x", F.col("tag") == "P", weight_col="w").select(
+        got = curve_metrics_df(df, "x", F.col("tag") == "P", weight_col="w").select(
             F.col("auc").alias("weighted_auc")
         )
         self._check(
@@ -865,15 +865,20 @@ FROM cum
         )
 
     def test_weighted_curve_metrics_parity(self, spark, dirty):
-        """The DECIMAL(38,10) trapezoid path (weighted_curve_metrics_df)
-        on dirty scores + dirty weights: weighted AUC / PR AUC / KS all
-        agree with the DuckDB replay of the same clamp + exclusion."""
+        """The DECIMAL(38,10) trapezoid path (curve_metrics_df with
+        weight_col) on dirty scores + dirty weights: weighted AUC / PR AUC
+        / KS all agree with the DuckDB replay of the same clamp +
+        exclusion."""
         from pyspark.sql import functions as F
 
-        from shifu_spark.operators.eval_metrics import weighted_curve_metrics_df
+        from shifu_spark.operators.eval_metrics import curve_metrics_df
 
         df, con = dirty
-        got = weighted_curve_metrics_df(df, "x", F.col("tag") == "P", "w")
+        got = curve_metrics_df(df, "x", F.col("tag") == "P", weight_col="w").select(
+            F.col("auc").alias("weighted_auc"),
+            F.col("pr_auc").alias("weighted_pr_auc"),
+            F.col("ks").alias("weighted_ks"),
+        )
         self._check(
             got, con,
             f"""
@@ -1197,19 +1202,16 @@ FROM {frame} GROUP BY 2
         values, both weighted and unweighted paths."""
         from pyspark.sql import functions as F
 
-        from shifu_spark.operators.eval_metrics import (
-            curve_metrics_df,
-            weighted_curve_metrics_df,
-        )
+        from shifu_spark.operators.eval_metrics import curve_metrics_df
 
         dfs, con = degen
         row = curve_metrics_df(dfs[frame], "x", F.col("tag") == "P").collect()[0]
         assert row["auc"] is None and row["ks"] is None, row
         assert row["pr_auc"] is not None
-        wrow = weighted_curve_metrics_df(
-            dfs[frame], "x", F.col("tag") == "P", "w"
+        wrow = curve_metrics_df(
+            dfs[frame], "x", F.col("tag") == "P", weight_col="w"
         ).collect()[0]
-        assert wrow["weighted_auc"] is None and wrow["weighted_ks"] is None, wrow
+        assert wrow["auc"] is None and wrow["ks"] is None, wrow
 
     def test_psi_empty_unit_and_boundary_builders(self, spark, degen):
         """Boundary builders return [] on empty/all-null input (never a

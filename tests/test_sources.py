@@ -1,23 +1,17 @@
 """Sources/sinks: header sidecar schema, string-typed ingest, missing
-semantics, malformed-row drop, splits (SURVEY §1.1/§2.1 reference
-behaviors)."""
+semantics, malformed-row drop (SURVEY §1.1/§2.1 reference behaviors)."""
 
 import os
 import sys
 
 import pytest
-from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from shifu_spark.sources.reader import (
-    inject_validation,
-    is_missing_str,
     read_dataset,
     read_header,
     safe_double,
-    seeded_split,
-    shuffle_dataset,
     write_dataset,
     write_header_sidecar,
 )
@@ -63,11 +57,6 @@ class TestIngest:
         assert vals["4"] is None  # NaN
         assert vals["5"] is None  # Infinity
 
-    def test_is_missing_str(self, spark):
-        df = spark.createDataFrame([("",), ("?",), ("x",), (None,)], "s string")
-        got = [r[0] for r in df.select(is_missing_str("s").alias("m")).collect()]
-        assert got == [True, True, False, True]
-
 
 class TestSinksAndSplits:
     def test_csv_roundtrip_with_sidecar(self, spark, tmp_path):
@@ -79,26 +68,6 @@ class TestSinksAndSplits:
         assert header == "id|v"
         back = spark.read.option("sep", "|").option("header", "true").csv(out)
         assert sorted(r["v"] for r in back.collect()) == ["a", "b"]
-
-    def test_seeded_split_deterministic(self, spark):
-        df = spark.range(1000)
-        t1, v1 = seeded_split(df, 0.3, seed=7)
-        t2, v2 = seeded_split(df, 0.3, seed=7)
-        assert sorted(r["id"] for r in v1.collect()) == sorted(r["id"] for r in v2.collect())
-        assert t1.count() + v1.count() == 1000
-
-    def test_inject_validation_flags(self, spark):
-        t = spark.range(5)
-        v = spark.range(5, 8)
-        out = inject_validation(t, v)
-        counts = {r["__origin"]: r["n"] for r in out.groupBy("__origin").agg(F.count("*").alias("n")).collect()}
-        assert counts == {"train": 5, "valid": 3}
-
-    def test_shuffle_preserves_rows(self, spark):
-        df = spark.range(500)
-        out = shuffle_dataset(df, num_partitions=8)
-        assert out.rdd.getNumPartitions() == 8
-        assert sorted(r["id"] for r in out.collect()) == list(range(500))
 
 
 class TestWarc:
