@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from shifu_spark.session import local_frame
+
 
 def gram_array_df(docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-doc DISTINCT word n-gram shingle ARRAY: (doc_id, sh_set) —
@@ -491,7 +493,7 @@ def dedup_groups_df(
         schema = "doc_id {t}, group_id {t}".format(
             t=dict(pairs.dtypes).get("doc_a", "long")
         )
-        return spark.createDataFrame(out, schema)
+        return local_frame(spark, out, schema)
 
     labels = (
         edges.select(F.col("src").alias("doc_id"))

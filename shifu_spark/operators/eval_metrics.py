@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 
 from shifu_spark.functions.nonvalue import is_nonvalue as _is_nonvalue
+from shifu_spark.session import snapshot
 
 
 def clamp_weight(weight_col: str) -> Column:
@@ -101,18 +102,9 @@ def _finalize_one_row(df: DataFrame) -> DataFrame:
     try/finally without handing the consumer a plan that would lazily
     re-execute against the already-unpersisted (and thus recomputed)
     lineage. Only ever called on single-row / #buckets-row results.
-
-    The rows go back through an Arrow table, not ``createDataFrame(rows)``:
-    that path ships them through a Python RDD and starts Python workers
-    for every metric. Arrow keeps the schema (nullability included) and
-    the values exact; a pandas frame would turn a nullable long into
-    float64."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    rows = [r.asDict(recursive=True) for r in df.collect()]
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(df.schema))
-    return df.sparkSession.createDataFrame(table)
+    The rewrap is :func:`shifu_spark.session.snapshot`: an Arrow
+    ``LocalRelation``, so reading the metrics starts no Python worker."""
+    return snapshot(df)
 
 
 def _range_count(df: DataFrame, num_ranges: int | None = None) -> int:
@@ -490,9 +482,12 @@ def rescale_score_expr(score: Column | str, strategy: str = "SIGMOID") -> Column
       OLD_SIGMOID  1/(1+exp(-s))
       MAXMIN    (s - min)/(max - min) — needs the global max/min, so this
                 variant takes (score, min_col, max_col) broadcast columns
+
+    An unparseable TEXT score rescales to NULL (try_cast, as the curve
+    operators read it) instead of raising under ANSI.
     """
     s = F.col(score) if isinstance(score, str) else score
-    s = s.cast("double")
+    s = s.try_cast("double")
     if strategy == "RAW":
         return s
     if strategy == "SIGMOID":
@@ -504,7 +499,8 @@ def rescale_score_expr(score: Column | str, strategy: str = "SIGMOID") -> Column
 
 def rescale_maxmin_expr(score: Column | str, min_col: Column, max_col: Column) -> Column:
     """MAXMIN rescale with broadcast global bounds; degenerate range -> 0.5
-    (the reference clamps equal-max-min the same way)."""
-    s = (F.col(score) if isinstance(score, str) else score).cast("double")
+    (the reference clamps equal-max-min the same way); an unparseable
+    TEXT score is NULL, as in :func:`rescale_score_expr`."""
+    s = (F.col(score) if isinstance(score, str) else score).try_cast("double")
     rng = max_col - min_col
     return F.when(rng <= 0, F.lit(0.5)).otherwise((s - min_col) / rng)

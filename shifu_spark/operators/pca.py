@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from shifu_spark.session import local_frame
+
 PCA_SCALE = 1_000_000
 
 
@@ -132,7 +134,5 @@ def pca_top_component_df(
     gram = {(r.i, r.j): r.g for r in cells}
     v = power_iteration(gram, dim, iters)
     spark = df.sparkSession
-    out = spark.createDataFrame(
-        [(i + 1, v[i]) for i in range(dim)], "dim int, loading_raw double"
-    )
+    out = local_frame(spark, [(i + 1, v[i]) for i in range(dim)], "dim int, loading_raw double")
     return out.select("dim", F.round("loading_raw", 6).alias("loading")).orderBy("dim")

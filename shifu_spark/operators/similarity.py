@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from shifu_spark.session import local_frame
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Σ a_i·b_i in double, sequential fold (deterministic order)."""
@@ -780,7 +782,8 @@ def kmeans_step(
     rows once per iteration — for 100 TB run it on the standard
     quantizer-training sample, not the full corpus."""
     spark = embeddings.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(int(c), [float(x) for x in v]) for c, v in centroids],
         "cid int, cvec array<double>",
     ).select("cid", "cvec", norm_expr(F.col("cvec")).alias("cnorm"))
@@ -1332,7 +1335,7 @@ def matryoshka_recall_df(
             .agg(F.count(F.lit(1)).alias("n_hits"))
         )
         # a width whose every cosine was NULL still reports its 0-hit row
-        dims_df = embeddings.sparkSession.createDataFrame([(d,) for d in dims], "d int")
+        dims_df = local_frame(embeddings.sparkSession, [(d,) for d in dims], "d int")
         out = (
             dims_df.join(hits, "d", "left")
             .select(

@@ -22,6 +22,7 @@ from shifu_spark.catalog import (
     ColumnType,
     ModelConfig,
 )
+from shifu_spark.session import local_frame
 
 
 def init_columns(df: DataFrame, mc: ModelConfig) -> list[ColumnConfig]:
@@ -237,5 +238,5 @@ def run_pipeline(df: DataFrame, mc: ModelConfig, algorithm: str = "LR", bags: in
     # degenerate corpora (single-class) have NULL AUCs — keep them NULL
     auc_v = float(auc) if auc is not None else None
     pr_v = float(pr) if pr is not None else None
-    metrics = spark.createDataFrame([(auc_v, pr_v, int(n))], "auc double, pr_auc double, n_rows long")
+    metrics = local_frame(spark, [(auc_v, pr_v, int(n))], "auc double, pr_auc double, n_rows long")
     return ccs, models, metrics

@@ -13,6 +13,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from shifu_spark.session import local_frame, snapshot
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 #: query name -> the bench stage its time is attributed to
@@ -1806,7 +1808,8 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         frac = kept.get(tag, 0) / n
         if tag != "R" and not 0.05 <= frac <= 0.15:
             raise ValueError(f"sample sentinel: tag {tag} keep-fraction {frac} far from 0.1")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(
             (t, kept.get(t, 0), n, round(kept.get(t, 0) / n, 4),
              kept.get(t, 0) == n if t == "R" else 0.05 <= kept.get(t, 0) / n <= 0.15)
@@ -2103,7 +2106,8 @@ def kfold_cv_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad = [a for a in aucs if a < 0.9]
     if bad:
         raise ValueError(f"kfold sentinel: fold AUC below 0.9 floor: {aucs}")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, float(round(a, 4)), True) for i, a in enumerate(aucs)],
         "fold int, auc double, auc_floor_met boolean",
     )
@@ -2131,7 +2135,8 @@ def grid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             f"grid sentinel: AUC below 0.9 floor: {[(r['params'], r['auc']) for r in res]}"
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (float(r["params"]["learning_rate"]), float(round(r["auc"], 4)), True)
             for r in res
@@ -2287,7 +2292,8 @@ def rf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             f"rf sentinel: top importance not the planted feature: {dict(zip(feats, imps))}"
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (f, round(v, 6), bool(v == top) == (f == "l_discount"), True)
             for f, v in sorted(zip(feats, imps))
@@ -2301,7 +2307,6 @@ def _run_stream_to_sink(
     df: DataFrame,
     prefix: str,
     output_mode: str = "complete",
-    shuffle_partitions: int = 8,
 ) -> DataFrame:
     """Run a bounded (availableNow) streaming query into a uuid-named
     memory sink, snapshot the sink's rows eagerly, DROP the sink table,
@@ -2312,16 +2317,15 @@ def _run_stream_to_sink(
     slow-leak class as an unreleased persist). Sink contents here are
     summary-sized (windows × bins / sessions / distinct keys).
 
-    ``shuffle_partitions`` scales the STATE STORE instance count for the
-    bounded replay: each stateful shuffle partition pays provider setup
-    per micro-batch, which dominates these summary-sized replays (~20%
-    of wall at sf0.1 under the session's 32). Results are partition-
-    count independent; a production (unbounded) stream should size this
-    to its key cardinality instead — the conf is restored afterwards."""
+    The replay runs on ONE state-store partition: a memory sink holds its
+    whole result on the driver, so its state is summary-sized by contract,
+    and each extra stateful partition only adds provider setup per
+    micro-batch. Results are partition-count independent; the session's
+    shuffle-partition conf is restored afterwards."""
     import uuid
 
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
     try:
         q = (
@@ -2333,9 +2337,7 @@ def _run_stream_to_sink(
         )
         try:
             q.awaitTermination()
-            sink = spark.table(name)
-            rows = sink.collect()
-            return spark.createDataFrame(rows, sink.schema)
+            return snapshot(spark.table(name))
         finally:
             # drop even on failure — otherwise a failed replay leaks the
             # session-lifetime sink table this helper exists to prevent
@@ -3125,7 +3127,8 @@ def tree_path_encoding_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(f"tree-path sentinel: encoded {n_enc} of {n_in} rows")
     if not 2 <= len(hist) <= 8:
         raise ValueError(f"tree-path sentinel: {len(hist)} leaves outside [2, 2^3]")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r["leaf0"], r["count"], True, True) for r in hist],
         "leaf0 int, count long, coverage_ok boolean, leaf_bound_ok boolean",
     )
@@ -4202,7 +4205,8 @@ def _fit_invariant_rows(spark, losses, auc, auc_floor):
     if auc < auc_floor:
         raise ValueError(f"training sentinel: held-out AUC {auc} below floor {auc_floor}")
     first = losses[0]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 e + 1,
@@ -4294,7 +4298,8 @@ def ga_varselect_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     if set(res.best_features) != {"x_qty", "x_disc"}:
         raise ValueError(f"ga sentinel: picked {sorted(res.best_features)}, "
                          "expected ['x_disc', 'x_qty']")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (f, float(round(res.best_error, 6)), True)
             for f in sorted(res.best_features)
@@ -6297,7 +6302,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         (m, _ANN_K, int(counts.get(m, 0)), round(counts.get(m, 0) / _ANN_K, 6))
         for m in ("ivf_flat", "ivfpq_adc", "ivfpq_rerank")
     ]
-    return spark.createDataFrame(out, "method string, k int, hits int, recall double")
+    return local_frame(spark, out, "method string, k int, hits int, recall double")
 
 
 def _ann_recall_oracle() -> str:

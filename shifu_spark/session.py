@@ -13,13 +13,24 @@ three times as long to build — and the driver, not the executors,
 bounds a small pipeline pass. The trade: an ANSI runtime error no longer names
 the Python line that built the failing expression; its error class
 and message are unchanged.
+
+Rows the driver already holds re-enter Spark through Arrow
+(:func:`snapshot`, :func:`local_frame`), never ``createDataFrame(rows)``.
+That call wraps a pickled Python RDD in a ``LogicalRDD``: every job that
+reads it runs Python tasks, and such a job took 0.28–0.32 s over ten rows
+even with reused workers (``local[4]``, 4-core box; collecting the frame
+took 0.41 s median vs 0.04 s for the same rows as an Arrow table). An
+Arrow table becomes a ``LocalRelation`` instead: collecting it runs no
+job, a sort over it runs in the JVM only, and the optimizer sees its
+real size.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def local_cpus() -> str:
@@ -67,3 +78,33 @@ def get_spark(app_name: str = "shifu_spark", shuffle_partitions: str | int | Non
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def snapshot(df: DataFrame) -> DataFrame:
+    """Run ``df`` now and return its rows as a ``LocalRelation`` with the
+    identical schema (nullability and field metadata included).
+
+    The rows cross as one Arrow table, so instants stay UTC Arrow
+    timestamps whatever the driver's local time zone. ``df`` must be
+    summary-sized: a ``LocalRelation`` lives on the driver."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A ``LocalRelation`` over ``rows`` (tuples in ``schema`` field
+    order; ``schema`` a DDL string or a ``StructType``).
+
+    Limits: the rows must be summary-sized, because a ``LocalRelation``
+    lives on the driver and ships inside every plan that reads it. Naive
+    ``datetime`` values are not allowed: Arrow reads one as UTC, while
+    ``collect()`` returns instants as naive local times, so under
+    ``TZ=America/Los_Angeles`` a collected ``10:30`` (UTC, January) came
+    back as ``02:30``. Rows that come from a frame go through
+    :func:`snapshot` instead."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    names = struct.fieldNames()
+    table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows], schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)

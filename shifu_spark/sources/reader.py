@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from shifu_spark.session import local_frame
+
 # tokens treated as missing (reference ModelSourceDataConf.java:50)
 DEFAULT_MISSING_TOKENS = ["", "?"]
 
@@ -223,7 +225,6 @@ def write_header_sidecar(df: DataFrame, path: str, delimiter: str = "|") -> None
     """Write the ``.pig_header`` sidecar next to a text sink
     (pig/ShifuPigStorage.java:33 writes schema as a one-line header file)."""
     header = delimiter.join(df.columns)
-    spark = df.sparkSession
-    spark.createDataFrame([(header,)], "value string").coalesce(1).write.mode(
+    local_frame(df.sparkSession, [(header,)], "value string").coalesce(1).write.mode(
         "overwrite"
     ).text(path.rstrip("/") + ".pig_header")

@@ -1617,6 +1617,23 @@ class TestScoreRescale:
         degenerate = [r[0] for r in df.select(rescale_maxmin_expr("s", F.lit(1.0), F.lit(1.0)).alias("v")).collect()]
         assert degenerate == [0.5, 0.5, 0.5]
 
+    def test_junk_text_score_is_null(self, spark):
+        """An unparseable TEXT score rescales to NULL under ANSI, as the
+        curve operators read it, instead of raising CAST_INVALID_INPUT."""
+        import pyspark.sql.functions as F
+
+        from shifu_spark.operators.eval_metrics import rescale_maxmin_expr, rescale_score_expr
+
+        df = spark.createDataFrame([("0.3",), ("abc",), ("",)], "s string")
+        got = df.select(
+            rescale_score_expr("s", "RAW").alias("raw"),
+            rescale_score_expr("s", "SIGMOID").alias("sig"),
+            rescale_maxmin_expr("s", F.lit(0.0), F.lit(0.6)).alias("mm"),
+        ).collect()
+        assert [tuple(r) for r in got[1:]] == [(None, None, None)] * 2
+        assert got[0]["raw"] == 0.3 and got[0]["mm"] == 0.5
+        assert abs(got[0]["sig"] - 1.0 / (1.0 + math.exp(-0.6))) < 1e-12
+
 
 class TestPQArrowDifferential:
     def test_arrow_encode_matches_expression_form(self, spark):
