@@ -11,7 +11,7 @@ CONCATENATED with the dense inputs to form the DNN input),
 WDLMaster.java/WDLWorker.java (the same Guagua BSP as nn: workers compute
 gradients on local data, master averages and applies the optimizer).
 
-Spark-first mapping (same superstep as ml/nn.py / ml/sgd.py):
+Spark-first mapping (same superstep as ml/nn.py):
 
   workers = ``mapInPandas`` partial gradients — one flat (gradient, loss,
             n) row per TASK (Arrow batches fold locally in order);

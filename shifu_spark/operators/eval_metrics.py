@@ -499,8 +499,9 @@ def rescale_score_expr(score: Column | str, strategy: str = "SIGMOID") -> Column
 
 def rescale_maxmin_expr(score: Column | str, min_col: Column, max_col: Column) -> Column:
     """MAXMIN rescale with broadcast global bounds; degenerate range -> 0.5
-    (the reference clamps equal-max-min the same way); an unparseable
-    TEXT score is NULL, as in :func:`rescale_score_expr`."""
+    (the reference clamps equal-max-min the same way); a NULL or
+    unparseable TEXT score is NULL on either range, as in
+    :func:`rescale_score_expr`."""
     s = (F.col(score) if isinstance(score, str) else score).try_cast("double")
     rng = max_col - min_col
-    return F.when(rng <= 0, F.lit(0.5)).otherwise((s - min_col) / rng)
+    return F.when(rng <= 0, F.when(s.isNotNull(), F.lit(0.5))).otherwise((s - min_col) / rng)

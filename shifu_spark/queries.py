@@ -4224,8 +4224,10 @@ def _fit_invariant_rows(spark, losses, auc, auc_floor):
 
 @query("sgd_lr_train", stage="train")
 def sgd_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed SGD LR (core/dtrain/lr BSP as mapInPandas partial
-    gradients + driver optimizer, ml/sgd.py). Rows-only check: training
+    """Distributed SGD LR (core/dtrain/lr BSP, ml/sgd.py): each epoch's
+    worker gradients and fan-in are one Catalyst aggregate over the
+    cached frame, so the forward pass runs in the JVM with no Python
+    worker; the driver applies the optimizer. Rows-only check: training
     is iterative, not SQL-expressible — but the row is semi-verifiable:
     per-epoch losses must decrease overall and the held-out AUC of the
     fitted model must clear 0.9 on the planted separable target, both

@@ -1633,6 +1633,9 @@ class TestScoreRescale:
         assert [tuple(r) for r in got[1:]] == [(None, None, None)] * 2
         assert got[0]["raw"] == 0.3 and got[0]["mm"] == 0.5
         assert abs(got[0]["sig"] - 1.0 / (1.0 + math.exp(-0.6))) < 1e-12
+        # the degenerate range (max <= min) clamps parseable scores only
+        deg = df.select(rescale_maxmin_expr("s", F.lit(1.0), F.lit(1.0))).collect()
+        assert [r[0] for r in deg] == [0.5, None, None]
 
 
 class TestPQArrowDifferential:

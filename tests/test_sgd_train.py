@@ -139,3 +139,44 @@ def test_fold_gradient_partials_empty(spark):
     g, mean_loss, n = fold_gradient_partials(parts, 5)
     assert n == 0 and mean_loss == 0.0
     np.testing.assert_array_equal(g, np.zeros(5))
+
+
+def test_lr_epoch_matches_numpy_reference(spark):
+    """One LR epoch aggregate (gradient with the L2 term, mean loss, n)
+    equals the closed-form numpy superstep, including clipped margins."""
+    import numpy as np
+
+    from shifu_spark.ml.sgd import _epoch
+
+    rng = np.random.default_rng(11)
+    x = rng.normal(size=(300, 3))
+    y = (rng.random(300) < 0.4).astype(np.float64)
+    rows = [(*map(float, xi), float(yi)) for xi, yi in zip(x, y)]
+    df = spark.createDataFrame(rows, "x1 double, x2 double, x3 double, label double").repartition(4)
+    w = np.array([0.5, -1.2, 30.0, 0.3])  # |z| > 35 for many rows
+    reg = 0.05
+
+    g, mean_loss, n = _epoch(df, ["x1", "x2", "x3"], "label", w, reg)
+
+    z = np.clip(x @ w[:3] + w[3], -35, 35)
+    assert (np.abs(x @ w[:3] + w[3]) > 35).any()
+    p = 1.0 / (1.0 + np.exp(-z))
+    err = p - y
+    want_g = np.append(x.T @ err + reg * len(y) * w[:3], err.sum()) / len(y)
+    want_loss = float(np.mean(-(y * np.log(p + 1e-12) + (1 - y) * np.log(1 - p + 1e-12))))
+    assert n == len(y)
+    np.testing.assert_allclose(g, want_g, rtol=1e-12, atol=0)
+    assert mean_loss == pytest.approx(want_loss, rel=1e-12)
+
+
+def test_lr_epoch_empty_frame(spark):
+    """An empty frame is the TRUE n = 0 with zeros and no sentinel loss;
+    run_epoch_loop skips the step, the loss record and the watch."""
+    import numpy as np
+
+    from shifu_spark.ml.sgd import _epoch
+
+    df = spark.createDataFrame([], "x1 double, x2 double, label double")
+    g, mean_loss, n = _epoch(df, ["x1", "x2"], "label", np.array([0.1, 0.2, 0.3]), 0.5)
+    assert n == 0 and mean_loss == 0.0
+    np.testing.assert_array_equal(g, np.zeros(3))
